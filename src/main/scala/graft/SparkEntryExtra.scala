@@ -213,6 +213,76 @@ private[graft] object SparkEntryExtra {
   private def views(spark: SparkSession, dir: String, names: String*): Unit =
     SparkEntry.views(spark, dir, names: _*)
 
+  /** The ANN entries' query vector: vec_id 0 of `vecs`, or None when the
+    * table has no vec_id 0. The oracles then CROSS JOIN an empty `q` and
+    * return no rows, so the entries answer with `noNeighbours`.
+    */
+  private def queryVector(vecs: DataFrame): Option[Array[Float]] = {
+    import vecs.sparkSession.implicits._
+    vecs.where(col("vec_id") === 0).select("embedding").as[Array[Float]]
+      .take(1).headOption
+  }
+
+  /** An empty ANN result: the (vec_id, cos) columns with no rows. */
+  private def noNeighbours(vecs: DataFrame): DataFrame =
+    vecs.where(lit(false)).select(col("vec_id"), lit(0.0).as("cos"))
+
+  /** The q_ann_ivf plan: the top 5 of `vecs` by cosine to its vec_id-0
+    * query, among the vectors assigned to the query's 2 nearest cells of
+    * the codebook `centTable` (cid, embedding).
+    *
+    * The codebook is k=16 centroids — collect it and run assignment as a
+    * narrow broadcast map, exactly the documented 10^12-vector shape
+    * ("centroid table broadcasts, assignment is a narrow map"), instead of
+    * the oracle's vectors x centroids CROSS JOIN under a row_number window.
+    * Per-pair float ops match the oracle (dot / (norm_e * norm_c), doubles
+    * in index order); each centroid norm is computed once and each
+    * vector's once per row, the same doubles as computing them per pair.
+    * nearest = max sim with ties to the LOWER cid, identical to
+    * row_number() ORDER BY sim DESC, cid.
+    */
+  private[graft] def annIvf(vecs: DataFrame, centTable: DataFrame): DataFrame = {
+    import vecs.sparkSession.implicits._
+    // local kernels: a local def that called the object's vdot/vnorm would
+    // compile to an instance method, and the UDFs below would then capture
+    // this non-serializable object
+    def dot(a: Array[Float], b: Array[Float]): Double = {
+      var s = 0.0
+      var i = 0
+      while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+      s
+    }
+    def nrm(a: Array[Float]): Double = math.sqrt(dot(a, a))
+    val cents = centTable.select(col("cid"), col("embedding"))
+      .as[(Int, Array[Float])].collect().sortBy(_._1)
+      .map { case (cid, ce) => (cid, ce, nrm(ce)) }
+    def simsTo(e: Array[Float]): Array[(Int, Double)] = {
+      val ne = nrm(e)
+      cents.map { case (cid, ce, nc) => (cid, dot(e, ce) / (ne * nc)) }
+    }
+    def nearest(e: Array[Float]): Int = {
+      // ascending cid order + strict > keeps the lower cid on sim ties
+      var bestCid = -1
+      var bestSim = Double.NegativeInfinity
+      for ((cid, sim) <- simsTo(e)) if (sim > bestSim) { bestSim = sim; bestCid = cid }
+      bestCid
+    }
+    queryVector(vecs).fold(noNeighbours(vecs)) { qe =>
+      val probes = simsTo(qe).sortBy { case (cid, sim) => (-sim, cid) }
+        .take(2).map(_._1).toSet
+      val qn = nrm(qe)
+      val asgUdf = udf((e: Array[Float]) => nearest(e))
+      val cosUdf = udf((e: Array[Float]) => dot(e, qe) / (nrm(e) * qn))
+      vecs
+        .where(col("vec_id") =!= 0)
+        .withColumn("cid", asgUdf(col("embedding")))
+        .where(col("cid").isin(probes.toSeq: _*))
+        .select(col("vec_id"), round(cosUdf(col("embedding")), 4).as("cos"))
+        .orderBy(desc("cos"), asc("vec_id"))
+        .limit(5)
+    }
+  }
+
   private def sqlQuery(tables: Seq[String], sparkSql: String)
                       (spark: SparkSession, dir: String): DataFrame = {
     views(spark, dir, tables: _*)
@@ -468,20 +538,20 @@ private[graft] object SparkEntryExtra {
     // index-order double sums (norm_q is a deterministic value whether
     // computed per row or once).
     "q_ann_lsh" -> ((spark: SparkSession, dir: String) => {
-      import spark.implicits._
       views(spark, dir, "embeddings")
-      val qe = spark.table("embeddings").where(col("vec_id") === 0)
-        .select("embedding").as[Array[Float]].head()
-      val qb = lshBucketOf(qe, 16)
-      val qn = vnorm(qe)
-      val bucketU = udf((a: Array[Float]) => lshBucketOf(a, 16))
-      val cosU = udf((a: Array[Float]) => vdot(a, qe) / (vnorm(a) * qn))
-      spark.table("embeddings")
-        .where(col("vec_id") =!= 0)
-        .where(bucketU(col("embedding")) === qb)
-        .select(col("vec_id"), round(cosU(col("embedding")), 4).as("cos"))
-        .orderBy(desc("cos"), asc("vec_id"))
-        .limit(5)
+      val vecs = spark.table("embeddings")
+      queryVector(vecs).fold(noNeighbours(vecs)) { qe =>
+        val qb = lshBucketOf(qe, 16)
+        val qn = vnorm(qe)
+        val bucketU = udf((a: Array[Float]) => lshBucketOf(a, 16))
+        val cosU = udf((a: Array[Float]) => vdot(a, qe) / (vnorm(a) * qn))
+        vecs
+          .where(col("vec_id") =!= 0)
+          .where(bucketU(col("embedding")) === qb)
+          .select(col("vec_id"), round(cosU(col("embedding")), 4).as("cos"))
+          .orderBy(desc("cos"), asc("vec_id"))
+          .limit(5)
+      }
     }),
 
     // multi-probe variant: 8-plane buckets, probing the query bucket plus
@@ -494,21 +564,21 @@ private[graft] object SparkEntryExtra {
     // same driver-side query-vector shape as q_ann_lsh, with the probe set
     // (self + Hamming-1/2 neighbors of the 8-plane bucket) expanded once
     "q_ann_multiprobe" -> ((spark: SparkSession, dir: String) => {
-      import spark.implicits._
       views(spark, dir, "embeddings")
-      val qe = spark.table("embeddings").where(col("vec_id") === 0)
-        .select("embedding").as[Array[Float]].head()
-      val qb = lshBucketOf(qe, 8)
-      val qn = vnorm(qe)
-      val probes = ProbeMasks.map(qb ^ _)
-      val bucketU = udf((a: Array[Float]) => lshBucketOf(a, 8))
-      val cosU = udf((a: Array[Float]) => vdot(a, qe) / (vnorm(a) * qn))
-      spark.table("embeddings")
-        .where(col("vec_id") =!= 0)
-        .where(bucketU(col("embedding")).isin(probes: _*))
-        .select(col("vec_id"), round(cosU(col("embedding")), 4).as("cos"))
-        .orderBy(desc("cos"), asc("vec_id"))
-        .limit(5)
+      val vecs = spark.table("embeddings")
+      queryVector(vecs).fold(noNeighbours(vecs)) { qe =>
+        val qb = lshBucketOf(qe, 8)
+        val qn = vnorm(qe)
+        val probes = ProbeMasks.map(qb ^ _)
+        val bucketU = udf((a: Array[Float]) => lshBucketOf(a, 8))
+        val cosU = udf((a: Array[Float]) => vdot(a, qe) / (vnorm(a) * qn))
+        vecs
+          .where(col("vec_id") =!= 0)
+          .where(bucketU(col("embedding")).isin(probes: _*))
+          .select(col("vec_id"), round(cosU(col("embedding")), 4).as("cos"))
+          .orderBy(desc("cos"), asc("vec_id"))
+          .limit(5)
+      }
     }),
 
     // --- ANN recall, not just mechanics: recall@5 of the 8-plane
@@ -554,52 +624,11 @@ private[graft] object SparkEntryExtra {
     //     is a narrow map, cells are the partition key and probing prunes
     //     to nprobe partitions.
     "q_ann_ivf" -> ((spark: SparkSession, dir: String) => {
-      import spark.implicits._
       SparkEntry.registerView(spark, "cemb",
         s"$FixturesBase/dims/clustered_embeddings.parquet")
       SparkEntry.registerView(spark, "ivf_cent",
         s"$FixturesBase/dims/ivf_centroids.parquet")
-      // The codebook is k=16 centroids — collect it and run assignment as
-      // a narrow broadcast map, exactly the documented 10^12-vector shape
-      // ("centroid table broadcasts, assignment is a narrow map"). Round 5
-      // planned the assignment as a vectors x centroids CROSS JOIN under a
-      // row_number window, and the rk CTE was re-expanded for probes —
-      // the whole sims/window subtree executed twice. Per-pair float ops
-      // are unchanged (dot / (norm_e * norm_c), doubles in index order);
-      // nearest = max sim with ties to the LOWER cid, identical to
-      // row_number() ORDER BY sim DESC, cid.
-      val cents = spark.table("ivf_cent")
-        .select(col("cid"), col("embedding"))
-        .as[(Int, Array[Float])].collect().sortBy(_._1)
-      def dot(a: Array[Float], b: Array[Float]): Double = {
-        var s = 0.0
-        var i = 0
-        while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-        s
-      }
-      def nrm(a: Array[Float]): Double = math.sqrt(dot(a, a))
-      def simsTo(e: Array[Float]): Array[(Int, Double)] =
-        cents.map { case (cid, ce) => (cid, dot(e, ce) / (nrm(e) * nrm(ce))) }
-      def nearest(e: Array[Float]): Int = {
-        // ascending cid order + strict > keeps the lower cid on sim ties
-        var bestCid = -1
-        var bestSim = Double.NegativeInfinity
-        for ((cid, sim) <- simsTo(e)) if (sim > bestSim) { bestSim = sim; bestCid = cid }
-        bestCid
-      }
-      val qe = spark.sql("SELECT embedding FROM cemb WHERE vec_id = 0")
-        .as[Array[Float]].head()
-      val probes = simsTo(qe).sortBy { case (cid, sim) => (-sim, cid) }
-        .take(2).map(_._1).toSet
-      val asgUdf = udf((e: Array[Float]) => nearest(e))
-      val cosUdf = udf((e: Array[Float]) => dot(e, qe) / (nrm(e) * nrm(qe)))
-      spark.table("cemb")
-        .where(col("vec_id") =!= 0)
-        .withColumn("cid", asgUdf(col("embedding")))
-        .where(col("cid").isin(probes.toSeq: _*))
-        .select(col("vec_id"), round(cosUdf(col("embedding")), 4).as("cos"))
-        .orderBy(desc("cos"), asc("vec_id"))
-        .limit(5)
+      annIvf(spark.table("cemb"), spark.table("ivf_cent"))
     }),
 
     // --- biblio enrichment join + DOI TTL split (§2.1/§2.6), against the

@@ -511,8 +511,11 @@ object IndexBuilder {
     // single box this overlaps the commit I/O with the stats shuffle CPU,
     // and on a cluster the two jobs simply share executors. The (bucket,
     // shard) physical partitioning is what makes the incremental path's
-    // shard-grain overwrite possible (and the exchange already clusters on
-    // exactly those columns, so each task writes whole directories).
+    // shard-grain overwrite possible. The exchange hashes on (bucket,
+    // shard), so all rows of one directory sit in one task and each
+    // directory gets one file per build; but assembleBlocks emits a task's
+    // rows term-major, so the partitioned writer first sorts them by
+    // (bucket, shard) inside the task (a local sort, no second exchange).
     blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cleanups += (() => blocks.unpersist())
     val blocksWrite = scala.concurrent.Future {

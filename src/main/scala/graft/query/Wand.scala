@@ -1,7 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.analysis.Analyzer
 import graft.index.{BlockRow, Codec, GlobalStats, IndexBuilder, IndexPaths}
 
@@ -163,8 +164,36 @@ object Wand {
     heap.dequeueAll.reverse.toSeq // best first
   }
 
+  /** Block-table schema, fixed by `BlockRow`: reading with it skips the
+    * footer-read schema-inference job a schema-less read runs per call.
+    * `bucket` and `shard` are partition columns, parsed from the directory
+    * names.
+    */
+  private lazy val blockSchema: StructType = Encoders.product[BlockRow].schema
+
+  /** The blocks of `liveTerms`, read from their buckets' `bucket=b`
+    * directories only (`basePath` keeps `bucket` and `shard` as columns),
+    * with the term filter pushed down into those files. A missing bucket
+    * directory holds no blocks and is skipped; None when all are missing.
+    */
+  private[graft] def blockScan(spark: SparkSession, paths: IndexPaths, nTermBuckets: Int,
+                               liveTerms: Seq[String]): Option[Dataset[BlockRow]] = {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val bucketDirs = liveTerms.map(IndexBuilder.termBucket(_, nTermBuckets)).distinct
+      .map(b => new org.apache.hadoop.fs.Path(s"${paths.blocks}/bucket=$b"))
+      .filter(d => d.getFileSystem(conf).exists(d)).map(_.toString)
+    if (bucketDirs.isEmpty) None
+    else Some(spark.read.schema(blockSchema).option("basePath", paths.blocks)
+      .parquet(bucketDirs: _*)
+      .filter(col("term").isin(liveTerms: _*))
+      .as[BlockRow])
+  }
+
   /** Distributed top-k: one WAND task per doc shard, merged on the driver.
-    * Blocks scan is pruned to the query terms' buckets.
+    * Each call lists and reads only the live query terms' bucket
+    * directories (`blockScan`), with the schema taken from `BlockRow`, so
+    * it runs just the two jobs of the per-shard shuffle.
     */
   def topK(spark: SparkSession, paths: IndexPaths, stats: GlobalStats,
            query: String, k: Int,
@@ -178,7 +207,6 @@ object Wand {
     val weights = termOrder.map(t => t -> mult(t) * idf(t)).toMap
     val liveTerms = termOrder.filter(weights(_) != 0.0)
     if (liveTerms.isEmpty) return Nil
-    val buckets = liveTerms.map(IndexBuilder.termBucket(_, stats.nTermBuckets)).distinct
     val k1 = stats.k1; val b = stats.b; val avgdl = stats.avgdl
     // blocks written before an incremental avgdl re-fit carry maxTfNorm
     // under the old (possibly smaller) avgdl — scale bounds to stay valid
@@ -186,9 +214,10 @@ object Wand {
       if (stats.minBlockAvgdl > 0) math.max(1.0, avgdl / stats.minBlockAvgdl) else 1.0
     val codec = stats.postingCodec
 
-    val blocks = spark.read.parquet(paths.blocks)
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(liveTerms: _*))
-      .as[BlockRow]
+    val blocks = blockScan(spark, paths, stats.nTermBuckets, liveTerms) match {
+      case Some(ds) => ds
+      case None => return Nil
+    }
     val perShard = blocks.groupByKey(_.shard).mapGroups { (_, it) =>
       // Single streaming pass over the group: group blocks by term as they
       // arrive instead of it.toIndexedSeq + groupBy (which held two copies

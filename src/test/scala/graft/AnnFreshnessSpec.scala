@@ -77,6 +77,24 @@ class AnnFreshnessSpec extends AnyFunSuite {
     assert(approx.length <= 5)
   }
 
+  test("ANN catalog entries return no rows when vec_id 0 is absent") {
+    // the oracles CROSS JOIN an empty query-vector CTE and return nothing;
+    // the entries must do the same instead of failing on the missing row
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-noquery").toString
+    val rng = new scala.util.Random(11)
+    (1 until 40).map(i => (i.toLong, Array.fill(64)(rng.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+    val cents = spark.read.parquet(s"${SparkEntryExtra.FixturesBase}/dims/ivf_centroids.parquet")
+    val outs = Seq("q_ann_lsh", "q_ann_multiprobe").map(q => q -> SparkEntry.queries(q)(spark, dir)) :+
+      ("q_ann_ivf" -> SparkEntryExtra.annIvf(vecs, cents))
+    for ((q, out) <- outs) {
+      assert(out.columns.toSeq == Seq("vec_id", "cos"), q)
+      assert(out.collect().isEmpty, q)
+    }
+  }
+
   test("multi-probe LSH recall@5 >= 0.8 vs brute force on clustered embeddings") {
     val brute = new BruteForceAnn(spark, embDF, provider)
     val lsh = new SparkAnnLsh(spark, embDF, provider, nPlanes = 8, probes = 36)

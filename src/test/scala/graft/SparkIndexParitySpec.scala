@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.JobCount
+import org.apache.spark.sql.functions.{asc, desc}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
+import graft.analysis.Analyzer
 import graft.index.{BuildConfig, IndexBuilder, IndexPaths}
 import graft.query.{LocalBackend, Pipeline, PipelineConfig, SparkBackend, Wand}
 
@@ -60,13 +64,37 @@ class SparkIndexParitySpec extends AnyFunSuite {
     }
   }
 
+  private val wandQueries = Seq("machine learning algorithms", "quick brown fox",
+    "climate ocean temperature", "nobel prize physics quantum theory experiment",
+    "spark shuffle partition")
+
+  private def bucketOf(term: String): Int =
+    IndexBuilder.termBucket(term, backend.stats.nTermBuckets)
+
+  /** Distinct query terms with a non-zero BM25 weight, in query order. */
+  private def liveTerms(q: String): Seq[String] = {
+    val terms = Analyzer.tokenize(q).distinct
+    val idf = backend.idfFor(terms)
+    terms.filter(idf(_) != 0.0)
+  }
+
+  /** A query whose live terms span at least two term buckets. */
+  private lazy val multiBucketQuery: String =
+    wandQueries.find(q => liveTerms(q).map(bucketOf).distinct.size >= 2)
+      .getOrElse(fail("no test query spans two term buckets"))
+
   test("WAND top-k matches join+agg scoring path") {
-    val queries = Seq("machine learning algorithms", "quick brown fox",
-      "climate ocean temperature", "nobel prize physics quantum theory experiment",
-      "spark shuffle partition")
-    for (q <- queries) {
+    import spark.implicits._
+    for (q <- wandQueries) {
       val toks = graft.analysis.Analyzer.tokenize(q).toIndexedSeq
       val wand = Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor)
+      // the distributed exact scores: top-10 of scoresDF, same tie order
+      val exactTop = backend.scoresDF(toks).orderBy(desc("score"), asc("chunkId"))
+        .limit(10).as[(Long, Double)].collect().toSeq
+      assert(wand.map(_._1) == exactTop.map(_._1), s"'$q': $wand vs scoresDF $exactTop")
+      wand.zip(exactTop).foreach { case ((_, gs), (_, es)) =>
+        assert(math.abs(gs - es) < 1e-9, s"'$q' score: $gs vs scoresDF $es")
+      }
       // reference scoring path: dense local scores, top-10 by (score desc, id asc)
       val dense = local.denseScores(toks)
       val expected = dense.zipWithIndex
@@ -79,6 +107,52 @@ class SparkIndexParitySpec extends AnyFunSuite {
         assert(math.abs(gs - es) < 1e-9, s"'$q' score: $gs vs $es")
       }
     }
+  }
+
+  test("WAND runs two Spark jobs and reads only the live terms' bucket directories") {
+    val q = multiBucketQuery
+    val live = liveTerms(q)
+    val liveBuckets = live.map(bucketOf).toSet
+    val warm = Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor)
+    // the shard shuffle's map and result jobs only: no listing job and no
+    // schema-inference job over the block table's footers
+    val (again, jobs) = JobCount(spark.sparkContext) {
+      Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor)
+    }
+    assert(again == warm)
+    assert(jobs == 2, s"'$q' ran $jobs Spark jobs")
+    val files = Wand.blockScan(spark, paths, backend.stats.nTermBuckets, live)
+      .getOrElse(fail("live buckets have no directories")).inputFiles
+    val blocksDir = new java.io.File(paths.blocks).getCanonicalPath
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val file = new java.io.File(new java.net.URI(f)).getCanonicalFile
+      val bucketDir = file.getParentFile.getParentFile
+      assert(bucketDir.getParent == blocksDir, f)
+      assert(liveBuckets.map(b => s"bucket=$b").contains(bucketDir.getName),
+        s"$f is outside the live buckets $liveBuckets")
+    }
+  }
+
+  test("WAND skips a live term's missing bucket directory") {
+    val q = multiBucketQuery
+    val live = liveTerms(q)
+    val gone = live.head
+    val kept = live.filter(bucketOf(_) != bucketOf(gone))
+    val copy = java.nio.file.Files.createTempDirectory("graft-nobucket").toFile
+    FileUtils.copyDirectory(new java.io.File(paths.root), copy)
+    val p = IndexPaths(copy.getPath)
+    FileUtils.deleteDirectory(new java.io.File(s"${p.blocks}/bucket=${bucketOf(gone)}"))
+    // the deleted bucket contributes no blocks: the query scores as if its
+    // terms were absent from the index, as a scan of the whole table would
+    val expected = Wand.topK(spark, paths, backend.stats, kept.mkString(" "), 10,
+      backend.idfFor)
+    assert(expected.nonEmpty)
+    assert(Wand.topK(spark, p, backend.stats, q, 10, backend.idfFor) == expected)
+    live.map(bucketOf).distinct.foreach { b =>
+      FileUtils.deleteDirectory(new java.io.File(s"${p.blocks}/bucket=$b"))
+    }
+    assert(Wand.topK(spark, p, backend.stats, q, 10, backend.idfFor).isEmpty)
   }
 
   test("WAND is correct under all-negative idf (stopword-dense corpus)") {
