@@ -239,7 +239,9 @@ private[graft] object SparkEntryExtra {
     * in index order); each centroid norm is computed once and each
     * vector's once per row, the same doubles as computing them per pair.
     * nearest = max sim with ties to the LOWER cid, identical to
-    * row_number() ORDER BY sim DESC, cid.
+    * row_number() ORDER BY sim DESC, cid. Sims and cosines follow the
+    * oracle's SQL: a zero divisor gives NULL (ranked last, a NULL cos row
+    * sorts after every number), a NaN ranks above every number.
     */
   private[graft] def annIvf(vecs: DataFrame, centTable: DataFrame): DataFrame = {
     import vecs.sparkSession.implicits._
@@ -256,23 +258,28 @@ private[graft] object SparkEntryExtra {
     val cents = centTable.select(col("cid"), col("embedding"))
       .as[(Int, Array[Float])].collect().sortBy(_._1)
       .map { case (cid, ce) => (cid, ce, nrm(ce)) }
-    def simsTo(e: Array[Float]): Array[(Int, Double)] = {
+    // the oracle's `/` is NULL on a zero divisor (zero-norm vector or centroid)
+    def cosine(a: Array[Float], na: Double, b: Array[Float], nb: Double): Option[Double] =
+      if (na * nb == 0.0) None else Some(dot(a, b) / (na * nb))
+    def simsTo(e: Array[Float]): Array[(Int, Option[Double])] = {
       val ne = nrm(e)
-      cents.map { case (cid, ce, nc) => (cid, dot(e, ce) / (ne * nc)) }
+      cents.map { case (cid, ce, nc) => (cid, cosine(e, ne, ce, nc)) }
     }
-    def nearest(e: Array[Float]): Int = {
-      // ascending cid order + strict > keeps the lower cid on sim ties
-      var bestCid = -1
-      var bestSim = Double.NegativeInfinity
-      for ((cid, sim) <- simsTo(e)) if (sim > bestSim) { bestSim = sim; bestCid = cid }
-      bestCid
-    }
+    // ORDER BY sim DESC as Spark and DuckDB order it: NULL last, NaN above
+    // every number, -0.0 == 0.0
+    def simAbove(a: Option[Double], b: Option[Double]): Boolean =
+      a.exists(x => b.forall(y => x != y && java.lang.Double.compare(x, y) > 0))
+    // ascending cid order + strict "above" keeps the lower cid on sim ties
+    def nearest(e: Array[Float]): Int =
+      simsTo(e).reduceLeftOption((best, c) => if (simAbove(c._2, best._2)) c else best)
+        .fold(-1)(_._1)
     queryVector(vecs).fold(noNeighbours(vecs)) { qe =>
-      val probes = simsTo(qe).sortBy { case (cid, sim) => (-sim, cid) }
+      // stable sort over ascending cids: sim ties keep the lower cid first
+      val probes = simsTo(qe).sortWith((x, y) => simAbove(x._2, y._2))
         .take(2).map(_._1).toSet
       val qn = nrm(qe)
       val asgUdf = udf((e: Array[Float]) => nearest(e))
-      val cosUdf = udf((e: Array[Float]) => dot(e, qe) / (nrm(e) * qn))
+      val cosUdf = udf((e: Array[Float]) => cosine(e, nrm(e), qe, qn))
       vecs
         .where(col("vec_id") =!= 0)
         .withColumn("cid", asgUdf(col("embedding")))

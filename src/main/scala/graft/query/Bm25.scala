@@ -35,6 +35,17 @@ final case class Bm25Stats(
     }
     s
   }
+
+  /** Score one raw chunk text: the dense-pass and re-score kernel. It
+    * counts only the query's terms; the others never reach `score`, so the
+    * doubles equal those of the full `Bm25.termFreqs` map.
+    */
+  def scoreText(queryTokens: Seq[String], text: String): Double = {
+    val toks = Analyzer.tokenize(text)
+    val tf = mutable.HashMap.empty[String, Int]
+    toks.foreach(t => if (queryTokens.contains(t)) tf(t) = tf.getOrElse(t, 0) + 1)
+    score(queryTokens, tf, toks.length.toLong)
+  }
 }
 
 object Bm25 {

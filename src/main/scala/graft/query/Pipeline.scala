@@ -50,7 +50,8 @@ case class PipelineConfig(
     /** force the reference-exact dense bonus pass over every chunk instead
       * of the rank-safe bounded WAND-superset pool (SURVEY §7.4); the
       * bounded path falls back to dense automatically whenever its safety
-      * bound cannot be proven, so this is a test/debug escape hatch.
+      * bound cannot be proven, so this is a test/debug escape hatch. Both
+      * paths score with the same kernel (Bm25Stats.scoreText).
       */
     densePoolOnly: Boolean = false,
     /** Serve head-term queries (sum(df) > nDocs/2 — stopword-ish, where the

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.{Analyzer, Scoring}
 import graft.corpus.ChunkRow
@@ -8,16 +8,19 @@ import graft.index.{GlobalStats, IndexBuilder, IndexPaths}
 
 /** Distributed SearchBackend over the persisted index tables.
   *
-  * Physical plan (SURVEY §3.4 Job 3):
-  *  1. query terms -> tiny (term,pos,idf) frame, **broadcast** to the
-  *     postings join; postings scan is pruned to the term-hash `bucket`
-  *     partitions of the query terms (partition pruning) with the term
-  *     equality pushed to parquet;
-  *  2. per-chunk BM25 = contributions folded in query-token order
-  *     (float-exact vs the sequential reference);
-  *  3. bonuses applied to ALL chunks (reference semantics, main.py:140-167)
-  *     in a narrow map, then distributed top-k via orderBy().limit() —
-  *     Catalyst plans TakeOrderedAndProject, no global sort;
+  * Physical plan of a pool (SURVEY §3.4 Job 3):
+  *  1. query terms -> idf from the bucket-pruned term-stats scan; the
+  *     default bounded pool takes its candidates from WAND over the query
+  *     terms' block buckets and re-scores only those rows exactly;
+  *  2. the dense pool (bounded fallback, head terms) is ONE narrow map over
+  *     the cached chunk table: each chunk's base BM25 comes from its own
+  *     text (`Bm25Stats.scoreText`, the same kernel as the bounded re-score
+  *     and `LocalBackend`, summed in query-token order), then its bonuses
+  *     (reference semantics, main.py:140-167) — no posting read, shuffle,
+  *     broadcast or join;
+  *  3. distributed top-k via orderBy().limit() — Catalyst plans
+  *     TakeOrderedAndProject, no global sort; RM3 feedback
+  *     (`topDocsForRm3`) is the same single pass over base BM25;
   *  4. everything after the <=poolSize pool runs driver-side (Pipeline).
   */
 final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchBackend {
@@ -27,14 +30,12 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
   // bucket count travels with the index — a mismatched constant here would
   // silently prune the wrong partitions
   private val nTermBuckets: Int = stats.nTermBuckets
-  // serving state: the chunk table is read in full by every query (bonus
-  // pass over all chunks, reference semantics), so keep it cached; postings
-  // stay on parquet where term-bucket partition pruning does the work.
-  // The DF keeps the precomputed static-bonus columns; `.as[ChunkRow]`
-  // views drop them where only the row shape is needed.
+  // serving state: the dense pool and RM3 read the chunk table in full
+  // (scoring over all chunks, reference semantics), so keep it cached;
+  // postings stay on parquet where term-bucket partition pruning does the
+  // work. The DF keeps the precomputed static-bonus columns.
   private val chunksRawDF = spark.read.parquet(paths.chunks)
     .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  private val chunksDS = chunksRawDF.as[ChunkRow]
   private val blocksDF = spark.read.parquet(paths.blocks)
   private val termStatsDF = spark.read.parquet(paths.termStats)
   private val idfCache = scala.collection.mutable.HashMap.empty[String, (Double, Long)]
@@ -60,9 +61,9 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
   def dfFor(terms: Seq[String]): Map[String, Long] =
     statsFor(terms).map { case (t, (_, df)) => t -> df }
 
-  def bm25Stats: Bm25Stats =
-    Bm25Stats(stats.nDocs, stats.avgdl,
-      idfCache.map { case (t, (idf, _)) => t -> idf }.toMap, stats.k1, stats.b)
+  /** Scoring stats restricted to the given query terms. */
+  private def bm25StatsFor(queryTokens: Seq[String]): Bm25Stats =
+    Bm25Stats(stats.nDocs, stats.avgdl, idfFor(queryTokens), stats.k1, stats.b)
 
   /** Sparse per-chunk BM25 scores as a DataFrame(chunkId, score). */
   def scoresDF(queryTokens: Seq[String]): DataFrame = {
@@ -120,9 +121,10 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
     *   minBase(candidates) + Bmax < theta   (theta = P-th candidate bscore)
     * no excluded chunk can reach the pool and the bounded result equals the
     * dense one. Falls back to the reference-exact dense pass over all
-    * chunks when the bound cannot be proven (tiny corpora, weak queries) —
-    * so golden parity is untouched while head-term queries at 10^12 scale
-    * never broadcast a corpus-sized score vector.
+    * chunks when the bound cannot be proven (tiny corpora, weak queries,
+    * head terms) — so golden parity is untouched. The dense pass is one
+    * narrow job over the cached chunk table (see densePool): it reads no
+    * posting blocks and moves no score frame, at any corpus size.
     */
   override def topPool(query: String, bm25Query: String, poolSize: Int,
                        cfg: PipelineConfig): IndexedSeq[(ChunkRow, Double)] = {
@@ -300,51 +302,31 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
       }.toIndexedSeq
   }
 
-  /** Matched-doc ceiling for broadcasting the sparse score frame in the
-    * dense pass (~16 B/doc -> ~800 MB at 50M). Above it the join degrades
-    * to a shuffled hash join: same reference-exact semantics, corpus
-    * reshuffled instead of a driver/executor-killing broadcast. Var so a
-    * spec can force the shuffle path at test scale.
+  /** Diagnostics: the last dense pass's frame. The plan string is derived
+    * lazily (`lastDensePlan`) — eagerly stringifying `sparkPlan` here would
+    * run a second full Catalyst planning pass per dense pool call on the
+    * hot path. Every dense pass overwrites it, so resetting it to null
+    * tells whether a later call ran one.
     */
-  private[graft] var denseBroadcastMaxMatched: Long = 50L * 1000 * 1000
-
-  /** Diagnostics: join strategy + the last dense pass's frame. The plan
-    * string is derived lazily (`lastDensePlan`) — eagerly stringifying
-    * `sparkPlan` here would run a second full Catalyst planning pass per
-    * dense pool call on the hot path.
-    */
-  @volatile var lastDenseJoin: String = ""
-  @volatile private var lastDenseDF: DataFrame = _
+  @volatile private[graft] var lastDenseDF: DataFrame = _
   def lastDensePlan: String =
     if (lastDenseDF == null) "" else lastDenseDF.queryExecution.sparkPlan.toString
 
-  /** Reference-exact dense pass: bonuses on every chunk, distributed top-k. */
+  /** Reference-exact dense pass: base BM25 plus bonuses on every chunk,
+    * distributed top-k. One narrow map over the cached chunk table: each
+    * chunk scores its own text with the bounded path's re-score kernel, so
+    * no posting block is read and no score frame is shuffled, broadcast or
+    * joined, and bounded == dense holds by construction.
+    */
   private def densePool(ctx: Scoring.QueryBonusContext,
                         bmTokens: IndexedSeq[String],
                         poolSize: Int): IndexedSeq[(ChunkRow, Double)] = {
-    val bonusUdf = udf { (base: Double, text: String, patternB: Double,
-                          metaB: Double, gib: Double) =>
-      ctx.score(base, text, patternB, metaB, gib)
+    val st = bm25StatsFor(bmTokens)
+    val bonusUdf = udf { (text: String, patternB: Double, metaB: Double, gib: Double) =>
+      ctx.score(st.scoreText(bmTokens, text), text, patternB, metaB, gib)
     }
-    // Broadcast the (chunkId, score) side when it is provably small — the
-    // chunk table (with its text payload) then never moves and the bonus
-    // pass runs on the cached partitions in place. sum(df) of the query
-    // terms upper-bounds the matched-doc count; above the ceiling (head
-    // terms on a huge corpus) force a SHUFFLE_HASH join instead so the
-    // scale-killing broadcast is unreachable, not just documented.
-    val scores = scoresDF(bmTokens)
-    val matchedUpper = dfFor(bmTokens.distinct).values.sum
-    val scoresSide =
-      if (matchedUpper <= denseBroadcastMaxMatched) {
-        lastDenseJoin = "broadcast"; broadcast(scores)
-      } else {
-        lastDenseJoin = "shuffle-hash"; scores.hint("shuffle_hash")
-      }
     val scored = chunksRawDF
-      .join(scoresSide, Seq("chunkId"), "left")
-      .na.fill(0.0, Seq("score"))
-      .withColumn("bscore", bonusUdf(col("score"), col("text"),
-        col("pattern_b"), col("meta_b"), col("gib")))
+      .withColumn("bscore", bonusUdf(col("text"), col("pattern_b"), col("meta_b"), col("gib")))
       .orderBy(desc("bscore"), asc("source"), asc("page"), asc("chunkIdx"))
       .limit(poolSize)
     lastDenseDF = scored
@@ -377,29 +359,24 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
 
   /** Driver-side exact re-scoring of pool chunks (pool <= 200). */
   override def bm25ScoresFor(queryTokens: Seq[String], chunks: Seq[ChunkRow]): Map[Long, Double] = {
-    val st = Bm25Stats(stats.nDocs, stats.avgdl, idfFor(queryTokens), stats.k1, stats.b)
-    chunks.map { c =>
-      val toks = Analyzer.tokenize(c.text)
-      c.chunkId -> st.score(queryTokens, Bm25.termFreqs(toks), toks.length.toLong)
-    }.toMap
+    val st = bm25StatsFor(queryTokens)
+    chunks.map(c => c.chunkId -> st.scoreText(queryTokens, c.text)).toMap
   }
 
+  /** RM3 feedback: the top fbDocs of the dense base-BM25 array (prf.py:29)
+    * in one narrow pass over the cached chunk table, same kernel as the
+    * dense pool. Every chunk is ranked by (score desc, corpus order), so
+    * zero-score chunks fill in corpus order and, under a negative idf
+    * floor, rank above the negatively scored matches, as in the reference.
+    */
   override def topDocsForRm3(queryTokens: Seq[String], fbDocs: Int): Seq[String] = {
-    val matched = chunksDS.toDF()
-      .join(scoresDF(queryTokens), Seq("chunkId"))
+    val toks = queryTokens.toIndexedSeq
+    val st = bm25StatsFor(toks)
+    val baseUdf = udf((text: String) => st.scoreText(toks, text))
+    chunksRawDF
+      .withColumn("score", baseUdf(col("text")))
       .orderBy(desc("score"), asc("source"), asc("page"), asc("chunkIdx"))
       .limit(fbDocs)
       .select("text").as[String].collect().toSeq
-    if (matched.length >= fbDocs) matched
-    else {
-      // reference takes zero-score docs in corpus order when fewer than
-      // fbDocs chunks match (prf.py:29 over a dense score array)
-      val fill = chunksDS.toDF()
-        .join(scoresDF(queryTokens), Seq("chunkId"), "left_anti")
-        .orderBy(asc("source"), asc("page"), asc("chunkIdx"))
-        .limit(fbDocs - matched.length)
-        .select("text").as[String].collect().toSeq
-      matched ++ fill
-    }
   }
 }

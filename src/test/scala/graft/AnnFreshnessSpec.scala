@@ -95,6 +95,56 @@ class AnnFreshnessSpec extends AnyFunSuite {
     }
   }
 
+  test("q_ann_ivf ranks zero-norm and NaN vectors as the oracle's window does") {
+    // the oracle's CROSS JOIN + row_number form in Spark SQL; try_divide is
+    // the oracle's `/` (NULL on a zero divisor, where ANSI `/` throws)
+    import spark.implicits._
+    def dot(a: String, b: String) =
+      s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0D, (acc, v) -> acc + v)"
+    def norm(a: String) =
+      s"sqrt(aggregate(transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0D, (acc, v) -> acc + v))"
+    def windowForm(vecs: String, cents: String) = spark.sql(
+      s"""WITH sims AS (SELECT e.vec_id, c.cid,
+              try_divide(${dot("e.embedding", "c.embedding")},
+                ${norm("e.embedding")} * ${norm("c.embedding")}) AS sim
+            FROM $vecs e CROSS JOIN $cents c),
+          rk AS (SELECT vec_id, cid,
+              row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rk
+            FROM sims),
+          asg AS (SELECT vec_id, cid FROM rk WHERE rk = 1),
+          probes AS (SELECT cid FROM rk WHERE vec_id = 0 AND rk <= 2),
+          q AS (SELECT embedding AS qe FROM $vecs WHERE vec_id = 0),
+          cand AS (SELECT e.vec_id,
+              try_divide(${dot("e.embedding", "q.qe")},
+                ${norm("e.embedding")} * ${norm("q.qe")}) AS cos
+            FROM $vecs e JOIN asg ON asg.vec_id = e.vec_id CROSS JOIN q
+            WHERE asg.cid IN (SELECT cid FROM probes) AND e.vec_id <> 0)
+          SELECT vec_id, round(cos, 4) AS cos FROM cand
+          ORDER BY cos DESC, vec_id LIMIT 5""")
+    val nan = Float.NaN
+    // cid 3 has zero norm: every sim to it is NULL and ranks last
+    Seq((0, Array(1f, 0f, 0f, 0f)), (1, Array(0f, 1f, 0f, 0f)),
+        (2, Array(0f, 0f, 1f, 0f)), (3, Array(0f, 0f, 0f, 0f)))
+      .toDF("cid", "embedding").createOrReplaceTempView("ivf_nan_cents")
+    val rest = Seq((1L, Array(1f, 0.2f, 0f, 0f)), (2L, Array(0.9f, 0f, 0.1f, 0f)),
+      (3L, Array(0.1f, 1f, 0f, 0f)), (4L, Array(0f, 0f, 0f, 0f)),
+      (5L, Array(nan, 0f, 0f, 0f)), (6L, Array(0f, 0.1f, 1f, 0f)))
+    // vec 4 (zero norm): NULL sims -> lowest cid, NULL cos sorts last;
+    // vec 5 (NaN): NaN sims rank greatest -> lowest cid, NaN cos sorts first
+    val cases = Seq(
+      "unit query" -> ((0L, Array(1f, 0.1f, 0f, 0f)) +: rest),
+      "zero-norm query" -> ((0L, Array(0f, 0f, 0f, 0f)) +: rest))
+    for ((name, rows) <- cases) {
+      val vecs = rows.toDF("vec_id", "embedding")
+      vecs.createOrReplaceTempView("ivf_nan_vecs")
+      val got = SparkEntryExtra.annIvf(vecs, spark.table("ivf_nan_cents"))
+        .collect().map(_.toString).toSeq
+      val want = windowForm("ivf_nan_vecs", "ivf_nan_cents").collect().map(_.toString).toSeq
+      assert(want.exists(_.contains("NaN")) && want.exists(_.contains("null")), s"$name: $want")
+      assert(got == want, s"$name: $got vs the window form $want")
+    }
+  }
+
   test("multi-probe LSH recall@5 >= 0.8 vs brute force on clustered embeddings") {
     val brute = new BruteForceAnn(spark, embDF, provider)
     val lsh = new SparkAnnLsh(spark, embDF, provider, nPlanes = 8, probes = 36)

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.JobCount
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import graft.corpus.{ChunkerConfig, ChunkerJob, PageDoc, WebPages}
+import graft.analysis.{Analyzer, Scoring}
+import graft.corpus.{ChunkRow, ChunkerConfig, ChunkerJob, PageDoc, WebPages}
 import graft.index.{BuildConfig, IndexBuilder, IndexPaths}
-import graft.query.{PipelineConfig, SparkBackend}
+import graft.query.{Bm25, Bm25Stats, PipelineConfig, SparkBackend}
 
 /** The rank-safe bounded pool (WAND top-M superset + exact re-score) must
   * return the exact same pool — ids AND scores — as the reference-exact
@@ -49,52 +53,85 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
     assert(engaged > 0, "bounded path never engaged — safety bound broken or corpus too small")
   }
 
-  test("head-term dense pass above the matched-doc ceiling never broadcasts") {
+  /** The most frequent indexed term: a head term (df > nDocs/2 on a Zipf
+    * corpus), so topPool routes it through the dense pass rather than the
+    * bounded WAND path.
+    */
+  private lazy val headTerm: String = {
     import spark.implicits._
-    // synthetic head-term query: the most frequent indexed term, guaranteed
-    // to route topPool through the dense fallback (df > nDocs/2 on a Zipf
-    // corpus) rather than the bounded WAND path
     val head = spark.read.parquet(paths.termStats)
       .orderBy(org.apache.spark.sql.functions.desc("df"))
       .select("term").as[String].head()
-    val q = s"$head learning"
     assert(backend.dfFor(Seq(head))(head) > backend.stats.nDocs / 2,
       s"setup: '$head' must be a head term")
-    // the corpus-score join is on chunkId; the inner broadcast of the
-    // <=10-row query-term frame inside scoresDF is legitimate at any scale
-    def chunkIdJoin(plan: String, kind: String): Boolean =
-      plan.linesIterator.exists(l => l.contains(kind) && l.contains("[chunkId"))
-    val before = backend.topPool(q, q, 20, PipelineConfig())
+    head
+  }
+
+  test("head-term dense pass plans no join and equals the dense reference pool") {
+    val q = s"$headTerm learning"
+    val pool = backend.topPool(q, q, 20, PipelineConfig())
     assert(backend.lastPoolPath == "dense") // head term skipped bounded path
-    assert(backend.lastDenseJoin == "broadcast") // tiny corpus: under ceiling
-    assert(chunkIdJoin(backend.lastDensePlan, "BroadcastHashJoin"))
-    backend.denseBroadcastMaxMatched = 0 // force every query over the ceiling
+    val plan = backend.lastDensePlan
+    for (join <- Seq("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin"))
+      assert(!plan.contains(join), s"dense pass plans a $join:\n$plan")
+    // reference semantics (main.py:133-174, as LocalBackend): a dense base
+    // array over the corpus in its canonical order, bonuses recomputed from
+    // each text, stable sort by bonused score; idf from the index
+    import spark.implicits._
+    val chunks = spark.read.parquet(paths.chunks).as[ChunkRow].collect()
+      .sortBy(c => (c.source, c.page, c.chunkIdx)).toIndexedSeq
+    val qTokens = Analyzer.tokenize(q).toIndexedSeq
+    val st = Bm25Stats(backend.stats.nDocs, backend.stats.avgdl,
+      backend.idfFor(qTokens), backend.stats.k1, backend.stats.b)
+    val base = Bm25.scoresLocal(st, qTokens, chunks.map(c => Analyzer.tokenize(c.text)))
+    val cfg = PipelineConfig()
+    val expected = chunks.indices.map { i =>
+      (chunks(i).chunkId, Scoring.applyBonuses(base(i), chunks(i).text, q, qTokens,
+        chunks(i).meta.title, cfg.proxWindow, cfg.proxLambda, cfg.ngramLambda))
+    }.sortBy(-_._2).take(20)
+    assert(pool.map(p => (p._1.chunkId, p._2)) == expected)
+  }
+
+  test("dense pool and RM3 feedback each run one Spark job and read no posting block") {
+    val q = s"$headTerm learning"
+    val toks = Analyzer.tokenize(q).toIndexedSeq
+    val cfg = PipelineConfig(densePoolOnly = true)
+    val warmPool = backend.topPool(q, q, 20, cfg)
+    val warmFb = backend.topDocsForRm3(toks, 10)
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
-      val after = backend.topPool(q, q, 20, PipelineConfig())
-      assert(backend.lastDenseJoin == "shuffle-hash")
-      assert(!chunkIdJoin(backend.lastDensePlan, "BroadcastHashJoin"),
-        s"corpus-sized broadcast still planned:\n${backend.lastDensePlan}")
-      assert(chunkIdJoin(backend.lastDensePlan, "ShuffledHashJoin"),
-        s"expected shuffled hash join:\n${backend.lastDensePlan}")
-      assert(after.map(p => (p._1.chunkId, p._2)) == before.map(p => (p._1.chunkId, p._2)),
-        "shuffle-hash dense pass changed the pool")
-    } finally backend.denseBroadcastMaxMatched = 50L * 1000 * 1000
+      for ((name, call, warm) <- Seq[(String, () => Any, Any)](
+             ("dense pool", () => backend.topPool(q, q, 20, cfg), warmPool),
+             ("RM3 feedback", () => backend.topDocsForRm3(toks, 10), warmFb))) {
+        plans.synchronized(plans.clear())
+        val (again, jobs) = JobCount(spark.sparkContext)(call())
+        assert(again == warm, name)
+        assert(jobs == 1, s"$name ran $jobs Spark jobs")
+        val seen = plans.synchronized(plans.toList)
+        assert(seen.nonEmpty, s"$name: no plan observed")
+        // the cached chunk table's scan shows in the plan, the blocks never
+        assert(seen.forall(_.contains(paths.chunks)), s"$name:\n${seen.mkString("\n")}")
+        assert(!seen.exists(_.contains(paths.blocks)), s"$name reads blocks:\n${seen.mkString("\n")}")
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val plan = backend.lastDensePlan
+    assert(!plan.contains("Join"), s"dense plan has a join:\n$plan")
   }
 
   test("headTermWand serves a head-term query from WAND only — no dense pass, bounded deviation") {
-    import spark.implicits._
-    val head = spark.read.parquet(paths.termStats)
-      .orderBy(org.apache.spark.sql.functions.desc("df"))
-      .select("term").as[String].head()
-    val q = s"$head learning"
-    assert(backend.dfFor(Seq(head))(head) > backend.stats.nDocs / 2,
-      s"setup: '$head' must be a head term")
+    val q = s"$headTerm learning"
     val dense = backend.topPool(q, q, 50, PipelineConfig())
     assert(backend.lastPoolPath == "dense") // default mode: reference-exact
-    backend.lastDenseJoin = "" // sentinel: any dense pass would overwrite it
+    backend.lastDenseDF = null // sentinel: any dense pass would overwrite it
     val wand = backend.topPool(q, q, 50, PipelineConfig(headTermWand = true))
     assert(backend.lastPoolPath == "wand-headterm")
-    assert(backend.lastDenseJoin == "",
+    assert(backend.lastDensePlan == "",
       "headTermWand mode executed the dense chunk-table pass")
     assert(wand.length == dense.length)
     // deviation bound: candidate selection ignored bonuses, so at every
@@ -123,11 +160,11 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
     val toks = graft.analysis.Analyzer.tokenize(q).toSeq
     assert(b.dfFor(toks).values.sum > b.stats.nDocs / 2,
       "setup: the catalog head-term query must be head on the driver corpus")
-    b.lastDenseJoin = "" // sentinel: any dense chunk-table pass overwrites it
+    b.lastDenseDF = null // sentinel: any dense chunk-table pass overwrites it
     val pool = b.topPool(q, q, 50, PipelineConfig(headTermWand = true))
     assert(b.lastPoolPath == "wand-headterm",
       s"expected wand-headterm routing, got ${b.lastPoolPath}")
-    assert(b.lastDenseJoin == "",
+    assert(b.lastDensePlan == "",
       "headTermWand mode executed the dense chunk-table pass — blocks-only plan violated")
     assert(pool.nonEmpty)
     // and the catalog entry itself (exact WAND top-20, oracle-matched in

@@ -187,6 +187,27 @@ class SparkIndexParitySpec extends AnyFunSuite {
     }
   }
 
+  test("RM3 feedback follows the dense array order under a negative idf floor") {
+    // every term is in most chunks -> all raw idfs < 0 and the floor eps is
+    // negative: the "alpha" chunks score below zero, so the reference's
+    // dense top-fbDocs (prf.py:29) takes the two zero-score chunks first
+    import spark.implicits._
+    val chunks = (0 until 10).map { i =>
+      val alpha = if (i < 8) "alpha " else ""
+      graft.corpus.ChunkRow(i.toLong, i.toLong, s"s$i", 1, 0,
+        s"${alpha}common tokens everywhere", graft.corpus.ChunkMeta())
+    }
+    val p = IndexPaths(java.nio.file.Files.createTempDirectory("graft-rm3floor").toString)
+    IndexBuilder.build(spark, spark.createDataset(chunks), p,
+      BuildConfig(nTermBuckets = 4, nDocShards = 2, shufflePartitions = 4))
+    val be = new SparkBackend(spark, p)
+    assert(math.abs(be.idfFor(Seq("alpha"))("alpha") - -0.647) < 1e-3,
+      "setup must floor idf(alpha) at a negative eps")
+    val expected = new LocalBackend(chunks).topDocsForRm3(Seq("alpha"), 6)
+    assert(expected.take(2).forall(!_.contains("alpha")))
+    assert(be.topDocsForRm3(Seq("alpha"), 6) == expected)
+  }
+
   test("postings compression: blocks smaller than raw postings") {
     import org.apache.spark.sql.functions._
     val blockBytes = spark.read.parquet(paths.blocks)
