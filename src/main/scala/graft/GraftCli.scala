@@ -342,14 +342,12 @@ object GraftCli {
         val pages = WebPages.generate(spark, nPages, 42,
           spark.sparkContext.defaultParallelism * 2)
           .map(p => PageDoc(p.url, 1, p.text, None))
-        // experiment knobs: posting-block codec and doc-shard count for A/Bs
+        // experiment knob: doc-shard count for A/Bs
         // (the query-scaling probe needs more WAND shards than the 60k-page
         // auto-resolution's 4, or >4 cores have nothing to parallelize)
         val buildCfg = BuildConfig(
           shufflePartitions =
             BuildConfig.shufflePartitionsFor(spark.sparkContext.defaultParallelism),
-          postingCodec = sys.env.getOrElse("SPARK_GRAFT_POSTING_CODEC",
-            graft.index.Codec.Vbyte),
           nDocShards = sys.env.getOrElse("SPARK_GRAFT_DOC_SHARDS", "0").toInt)
         // same-shape warm-up then timed direct build; SPARK_GRAFT_BUILD_REPS
         // > 1 repeats the timed build and reports the best (a cold JVM's

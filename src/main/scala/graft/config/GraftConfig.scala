@@ -68,7 +68,6 @@ object GraftConfig {
     "spark" -> Map(
       "n_term_buckets" -> 32L,
       "n_doc_shards" -> 0L, // 0 = auto-scale with corpus size
-      "posting_codec" -> "vbyte", // posting-block layout: vbyte | for
       "shuffle_partitions" -> 32L))
 
   /** Deep merge (reference merge_configs, config.py:185-195). */
@@ -263,8 +262,7 @@ object GraftConfig {
     "max-per-doc" -> Seq("diversity", "max_per_doc"),
     "semantic-topn" -> Seq("rerank", "semantic", "topn"),
     "head-term-wand" -> Seq("bm25", "head_term_wand"),
-    "doc-shards" -> Seq("spark", "n_doc_shards"),
-    "posting-codec" -> Seq("spark", "posting_codec"))
+    "doc-shards" -> Seq("spark", "n_doc_shards"))
 
   private val InvertedFlags = Set("no-prox", "no-diversity")
   // "pretty" maps to no config path; listing it here only makes the parser
@@ -406,6 +404,5 @@ object GraftConfig {
     b = dbl(cfg, "bm25", "b"),
     nTermBuckets = long(cfg, "spark", "n_term_buckets").toInt,
     nDocShards = long(cfg, "spark", "n_doc_shards").toInt,
-    postingCodec = str(cfg, "spark", "posting_codec"),
     shufflePartitions = long(cfg, "spark", "shuffle_partitions").toInt)
 }

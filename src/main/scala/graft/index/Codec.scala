@@ -3,81 +3,29 @@ package graft.index
 import java.io.ByteArrayOutputStream
 import scala.collection.mutable.ArrayBuffer
 
-/** Variable-byte + frame-of-reference delta codecs for posting lists (north
-  * rule: "delta-encoded docID gaps + term frequencies, variable-byte/FOR
+/** Frame-of-reference delta codec for posting lists (north rule:
+  * "delta-encoded docID gaps + term frequencies, variable-byte/FOR
   * compressed with block-max metadata"). Pure Scala — runs inside executor
   * tasks.
   *
   * Doc ids are arbitrary Longs (xxhash64 of the chunk key) ordered by plain
-  * signed comparison; build and query agree on that total order. Two
-  * interchangeable byte layouts, selected per index by
-  * `BuildConfig.postingCodec` (recorded in `GlobalStats.postingCodec`, part
-  * of configHash — all blocks of one index share one codec):
+  * signed comparison; build and query agree on that total order. The one
+  * block layout (recorded as `GlobalStats.postingCodec` = "for"):
   *
-  *  - "vbyte": docs = VByte(bits(firstDocId)) ++ VByte(gap_1) ++ ...
-  *             tfs/dls = VByte(v_0) ++ ...
-  *  - "for":   docs = VByte(bits(firstDocId)) ++ FOR(gap_1..gap_{n-1})
-  *             tfs/dls = FOR(v_0..v_{n-1})
-  *    where FOR(vals) = VByte(base = unsigned-min) ++ width:1B ++
-  *    little-endian bitstream of (v - base) at `width` bits each — the
-  *    classic frame-of-reference layout (Lucene PackedInts / PFOR family,
-  *    minus exceptions). Decode is a branch-free shift loop vs VByte's
-  *    per-byte continuation branch — faster on the WAND serving hot path —
-  *    and a posting block's 128 gaps share one width, so dense lists pack
-  *    below a byte per gap.
+  *   docs    = VByte(bits(firstDocId)) ++ FOR(gap_1..gap_{n-1})
+  *   tfs/dls = FOR(v_0..v_{n-1})
+  *
+  * where FOR(vals) = VByte(base = unsigned-min) ++ width:1B ++
+  * little-endian bitstream of (v - base) at `width` bits each — the
+  * classic frame-of-reference layout (Lucene PackedInts / PFOR family,
+  * minus exceptions). Decode is a branch-free shift loop on the WAND
+  * serving hot path, and a posting block's 128 gaps share one width, so
+  * dense lists pack below a byte per gap.
   */
 object Codec {
 
-  val Vbyte = "vbyte"
+  /** `GlobalStats.postingCodec` of every index this code writes. */
   val For = "for"
-  val Codecs: Set[String] = Set(Vbyte, For)
-
-  /** VByte-encode; `deltas=true` stores values(0) raw (unsigned 64-bit bit
-    * pattern, possibly 10 bytes) then non-negative gaps.
-    */
-  def vbyteEncode(values: Array[Long], deltas: Boolean): Array[Byte] = {
-    val out = new ByteArrayOutputStream(values.length * 2)
-    var prev = 0L
-    var i = 0
-    while (i < values.length) {
-      // gaps between sorted signed longs can exceed Long.MaxValue; the
-      // two's-complement difference is the true gap mod 2^64 and the
-      // unsigned VByte encoding + wrapping add on decode roundtrip it.
-      var v = if (deltas && i > 0) values(i) - prev else values(i)
-      require(!deltas || i == 0 || values(i) >= prev, s"non-monotonic docId at $i")
-      prev = values(i)
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt)
-        v >>>= 7
-      }
-      out.write(v.toInt)
-      i += 1
-    }
-    out.toByteArray
-  }
-
-  def vbyteDecode(bytes: Array[Byte], n: Int, deltas: Boolean): Array[Long] = {
-    val out = new Array[Long](n)
-    var pos = 0
-    var prev = 0L
-    var i = 0
-    while (i < n) {
-      var v = 0L
-      var shift = 0
-      var b = 0
-      do {
-        b = bytes(pos) & 0xff
-        v |= (b & 0x7fL) << shift
-        shift += 7
-        pos += 1
-      } while ((b & 0x80) != 0)
-      val value = if (deltas && i > 0) prev + v else v
-      out(i) = value
-      prev = value
-      i += 1
-    }
-    out
-  }
 
   private def writeVLong(out: ByteArrayOutputStream, value: Long): Unit = {
     var v = value
@@ -220,7 +168,10 @@ object Codec {
     }
   }
 
-  def forEncode(values: Array[Long], deltas: Boolean): Array[Byte] = {
+  /** FOR-encode `values`; `deltas = true` stores values(0) as a VByte,
+    * then FOR-packs the gaps (values must ascend).
+    */
+  def encode(values: Array[Long], deltas: Boolean): Array[Byte] = {
     val out = new ByteArrayOutputStream(values.length * 2)
     if (values.isEmpty) return out.toByteArray
     if (deltas) {
@@ -237,7 +188,8 @@ object Codec {
     out.toByteArray
   }
 
-  def forDecode(bytes: Array[Byte], n: Int, deltas: Boolean): Array[Long] = {
+  /** Inverse of `encode` for `n` values. */
+  def decode(bytes: Array[Byte], n: Int, deltas: Boolean): Array[Long] = {
     val out = new Array[Long](n)
     if (n == 0) return out
     if (deltas) {
@@ -249,20 +201,6 @@ object Codec {
     } else forUnpack(bytes, 0, out, 0)
     out
   }
-
-  def encode(codec: String, values: Array[Long], deltas: Boolean): Array[Byte] =
-    codec match {
-      case Vbyte => vbyteEncode(values, deltas)
-      case For   => forEncode(values, deltas)
-      case other => throw new IllegalArgumentException(s"unknown codec: $other")
-    }
-
-  def decode(codec: String, bytes: Array[Byte], n: Int, deltas: Boolean): Array[Long] =
-    codec match {
-      case Vbyte => vbyteDecode(bytes, n, deltas)
-      case For   => forDecode(bytes, n, deltas)
-      case other => throw new IllegalArgumentException(s"unknown codec: $other")
-    }
 
   /** One compressed posting block. Doc lengths travel with the block so the
     * exact per-doc BM25 contribution is recomputable at query time;
@@ -279,10 +217,7 @@ object Codec {
     */
   def buildBlocks(docIds: Array[Long], tfs: Array[Long], dls: Array[Long],
                   tfNorms: Array[Double],
-                  blockSize: Int = DefaultBlockSize,
-                  // no default: a call site that forgets the codec must fail
-                  // to compile, not silently vbyte-decode FOR bytes
-                  codec: String): Seq[Block] = {
+                  blockSize: Int = DefaultBlockSize): Seq[Block] = {
     require(docIds.length == tfs.length && docIds.length == dls.length &&
       docIds.length == tfNorms.length)
     val blocks = new ArrayBuffer[Block]
@@ -295,19 +230,14 @@ object Codec {
       var mx = 0.0
       var i = start
       while (i < end) { if (tfNorms(i) > mx) mx = tfNorms(i); i += 1 }
-      blocks += Block(encode(codec, ids, deltas = true), encode(codec, f, deltas = false),
-        encode(codec, d, deltas = false), end - start, mx, docIds(start), docIds(end - 1))
+      blocks += Block(encode(ids, deltas = true), encode(f, deltas = false),
+        encode(d, deltas = false), end - start, mx, docIds(start), docIds(end - 1))
       start = end
     }
     blocks.toSeq
   }
 
-  // no codec defaults: a call site that forgets to thread the index's codec
-  // must fail to compile, not silently vbyte-decode FOR bytes
-  def decodeBlockDocs(b: Block, codec: String): Array[Long] =
-    decode(codec, b.docs, b.n, deltas = true)
-  def decodeBlockTfs(b: Block, codec: String): Array[Long] =
-    decode(codec, b.tfs, b.n, deltas = false)
-  def decodeBlockDls(b: Block, codec: String): Array[Long] =
-    decode(codec, b.dls, b.n, deltas = false)
+  def decodeBlockDocs(b: Block): Array[Long] = decode(b.docs, b.n, deltas = true)
+  def decodeBlockTfs(b: Block): Array[Long] = decode(b.tfs, b.n, deltas = false)
+  def decodeBlockDls(b: Block): Array[Long] = decode(b.dls, b.n, deltas = false)
 }

@@ -48,10 +48,9 @@ case class GlobalStats(nDocs: Long, totalTokens: Long, avgdl: Double,
                          * only gate pruning). Full builds reset this to
                          * avgdl. */
                        minBlockAvgdl: Double,
-                       /** posting-block byte layout every block of this
-                         * index was written with ("vbyte" | "for"); in
-                         * configHash, so an incremental update can never
-                         * mix layouts within one blocks table */
+                       /** posting-block layout tag, always "for" (see
+                         * Codec); loadStats refuses an index without it
+                         * or with the retired VByte layout */
                        postingCodec: String,
                        configHash: String, snapshotId: String)
 
@@ -90,22 +89,13 @@ case class BuildConfig(
       * a layout change invalidates the partial-overwrite contract.
       */
     nUrlBuckets: Int = 0,
-    /** posting-block compression ("vbyte" | "for"). FOR bit-packs each
-      * block's gaps/tfs/dls at one shared width — smaller blocks and a
-      * branch-free decode loop on the WAND serving hot path (BENCH.md
-      * round-5 A/B). Layout contract: part of configHash, so switching
-      * codecs forces a full rebuild instead of an incremental update
-      * writing mixed-layout shards.
-      */
-    postingCodec: String = Codec.Vbyte,
     shufflePartitions: Int = 32) {
-  require(Codec.Codecs(postingCodec), s"unknown postingCodec: $postingCodec")
+  /** Ends with the block layout tag, so an index written with another
+    * layout never matches and takes a full build.
+    */
   def configHash: String =
     Analyzer.md5Hex(
-      s"$k1|$b|$epsilon|$nTermBuckets|$nDocShards|$blockSize|$nUrlBuckets|$nChunkBuckets" +
-        // pre-r5 hash compat: the default codec keeps the r4 hash string,
-        // so existing vbyte indexes stay incrementally updatable
-        (if (postingCodec == Codec.Vbyte) "" else s"|$postingCodec"))
+      s"$k1|$b|$epsilon|$nTermBuckets|$nDocShards|$blockSize|$nUrlBuckets|$nChunkBuckets|${Codec.For}")
 
   def resolveDocShards(nDocs: Long): Int =
     if (nDocShards > 0) nDocShards
@@ -333,7 +323,6 @@ object IndexBuilder {
       : Dataset[BlockRow] = {
     import spark.implicits._
     val k1 = cfg.k1; val b = cfg.b; val blockSize = cfg.blockSize
-    val codec = cfg.postingCodec
     // Shuffle the NARROWEST possible posting row (guide §2.3): bucket and
     // shard are pure hash functions of term/chunkId, so they ride along as
     // repartition/sort EXPRESSIONS instead of materialized columns, and
@@ -369,7 +358,7 @@ object IndexBuilder {
       var nBytes = 0L
       def flush(): Unit = if (curTerm != null && ids.nonEmpty) {
         val bs = Codec.buildBlocks(ids.toArray, tfs.toArray, dls.toArray,
-          norms.toArray, blockSize, codec)
+          norms.toArray, blockSize)
         bs.zipWithIndex.foreach { case (blk, i) =>
           nBytes += blk.docs.length + blk.tfs.length + blk.dls.length
           out += BlockRow(curBucket, curShard, curTerm, i, blk.n, blk.docs,
@@ -550,7 +539,7 @@ object IndexBuilder {
     val snapshotId = Analyzer.md5Hex(s"$nDocs|$totalTokens|${cfg.configHash}")
     val stats = GlobalStats(nDocs, totalTokens, avgdl, vocabSize, avgRawIdf, eps,
       maxStaticBonus, cfg.k1, cfg.b, cfg.nTermBuckets, nShards, nCb, avgdl,
-      cfg.postingCodec, cfg.configHash, snapshotId)
+      Codec.For, cfg.configHash, snapshotId)
     Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(out.globalStats)
     TableIO.writeManifest(out.manifest, Map(
       "snapshot_id" -> snapshotId, "n_docs" -> nDocs.toString,
@@ -574,21 +563,16 @@ object IndexBuilder {
 
   def loadStats(spark: SparkSession, out: IndexPaths): GlobalStats = {
     import spark.implicits._
-    // read-compat with pre-r4 indexes that lack the shard/avgdl lineage
-    // columns: default them instead of failing the whole backend —
-    // nDocShards=0 just disables the incremental path (full rebuild on
-    // next update) and minBlockAvgdl=0 keeps WAND's bound scale at 1
-    // (valid: such an index was fully built under its current avgdl).
-    var df = spark.read.parquet(out.globalStats)
-    if (!df.columns.contains("nDocShards"))
-      df = df.withColumn("nDocShards", lit(0))
-    if (!df.columns.contains("nChunkBuckets"))
-      df = df.withColumn("nChunkBuckets", lit(0))
-    if (!df.columns.contains("minBlockAvgdl"))
-      df = df.withColumn("minBlockAvgdl", lit(0.0))
-    if (!df.columns.contains("postingCodec"))
-      df = df.withColumn("postingCodec", lit(Codec.Vbyte))
-    df.as[GlobalStats].head()
+    // the layout tag is the newest stats column: an index without it
+    // (pre-r5) or tagged "vbyte" holds VByte blocks, which no longer
+    // decode — refuse it (ResumableBuild then takes a full build)
+    Some(spark.read.parquet(out.globalStats))
+      .filter(_.columns.contains("postingCodec"))
+      .map(_.as[GlobalStats].head())
+      .filter(_.postingCodec == Codec.For)
+      .getOrElse(throw new IllegalStateException(
+        s"index at ${out.root} holds VByte posting blocks, which are no " +
+          "longer read: a full rebuild is required"))
   }
 
   /** Incremental index update: rebuild posting blocks ONLY for the doc
@@ -817,7 +801,7 @@ object IndexBuilder {
           avgdl))
       val stats = GlobalStats(nDocs, totalTokens, avgdl, vocabSize, avgRawIdf,
         eps, maxStaticBonus, cfg.k1, cfg.b, cfg.nTermBuckets, nShards, nCb,
-        minBlockAvgdl, cfg.postingCodec, cfg.configHash, snapshotId)
+        minBlockAvgdl, Codec.For, cfg.configHash, snapshotId)
       Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(out.globalStats)
       TableIO.writeManifest(out.manifest, Map(
         "snapshot_id" -> snapshotId, "parent_snapshot" -> prev.snapshotId,

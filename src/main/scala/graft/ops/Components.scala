@@ -21,11 +21,12 @@ import org.apache.spark.sql.functions._
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
   * SoCC'14) on constant factors; for adversarial long-path graphs that
   * published contraction family is the drop-in upgrade — the seam is
-  * this one function. Label frames are eagerly localCheckpoint'd each
-  * round: the loop would otherwise stack a lineage of self-joins, and
-  * convergence is detected with a narrow exact-sum aggregate over the
-  * checkpointed labels (a scalar action — no per-round join, never a
-  * driver-side collect of vertices).
+  * this one function. Label frames are persisted each round, with the
+  * lineage cut by a localCheckpoint every 8 rounds, and convergence is
+  * detected with a narrow exact-sum aggregate over the persisted labels
+  * (a scalar action — no per-round join, never a driver-side collect of
+  * vertices). The result reads an eager checkpoint of the final labels,
+  * so the call leaves no cached frame behind.
   */
 object Components {
 
@@ -99,14 +100,15 @@ object Components {
     // is a zero-exchange shuffled-hash join in ONE job; AQE would split
     // every round into per-exchange query stages and the broadcast planner
     // would add a per-round driver collect+broadcast of the label frame —
-    // pure fixed cost at any scale. Scoped + restored around the loop.
+    // pure fixed cost at any scale. Scoped + restored around the loop: a
+    // key the session had not set is unset again, not pinned to a default.
     val conf = spark.conf
-    val savedAqe = conf.get("spark.sql.adaptive.enabled", "true")
-    val savedBc = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val savedPrefSmj = conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.join.preferSortMergeJoin", "false")
+    val loopConf = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.join.preferSortMergeJoin" -> "false")
+    val sessionSet = conf.getAll // explicitly set keys only, no defaults
+    val savedConf = loopConf.map { case (k, _) => k -> sessionSet.get(k) }
+    loopConf.foreach { case (k, v) => conf.set(k, v) }
     try {
       while (changed && round <= maxRounds) {
         round += 1
@@ -134,21 +136,26 @@ object Components {
         // maxRounds+1 label frames pile up in the block manager
         prevLabels.unpersist()
       }
+      // non-convergence means the graph's diameter exceeded maxRounds —
+      // refuse to return a wrong labeling
+      require(!changed,
+        s"component diameter exceeds maxRounds=$maxRounds (pathological graph?)")
+      // the result reads an eager checkpoint of the final labels, so the
+      // loop's cached frames can all be dropped below. One left join
+      // instead of an anti-join + union: a vertex with no propagated label
+      // is its own component (identical output under the documented
+      // contract that `vertices` covers every vertex)
+      vertices.select(col("id").cast("long").as("id"))
+        .distinct()
+        .join(labels.localCheckpoint(true), Seq("id"), "left")
+        .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
     } finally {
-      conf.set("spark.sql.adaptive.enabled", savedAqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
-      conf.set("spark.sql.join.preferSortMergeJoin", savedPrefSmj)
+      savedConf.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+      sym.unpersist()
+      labels.unpersist()
     }
-    // non-convergence means the graph's diameter exceeded maxRounds —
-    // refuse to return a wrong labeling
-    require(!changed,
-      s"component diameter exceeds maxRounds=$maxRounds (pathological graph?)")
-    // one left join instead of round-5's anti-join + union: a vertex with
-    // no propagated label is its own component (identical output under the
-    // documented contract that `vertices` covers every vertex)
-    vertices.select(col("id").cast("long").as("id"))
-      .distinct()
-      .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
   }
 }

@@ -76,7 +76,6 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
     val buckets = qRows.map(r => IndexBuilder.termBucket(r._1, nTermBuckets)).distinct
     val q = qRows.toDF("term", "pos", "idf")
     val k1 = stats.k1; val b = stats.b; val avgdl = stats.avgdl
-    val codec = stats.postingCodec
     // Per-position partial sums keep the whole aggregation inside
     // whole-stage codegen; adding the per-position columns left-to-right
     // reproduces the reference's query-token-order float summation exactly
@@ -97,9 +96,9 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
       .select("term", "n", "docs", "tfs", "dls")
       .as[(String, Int, Array[Byte], Array[Byte], Array[Byte])]
       .flatMap { case (term, n, docs, tfs, dls) =>
-        val ids = graft.index.Codec.decode(codec, docs, n, deltas = true)
-        val f = graft.index.Codec.decode(codec, tfs, n, deltas = false)
-        val d = graft.index.Codec.decode(codec, dls, n, deltas = false)
+        val ids = graft.index.Codec.decode(docs, n, deltas = true)
+        val f = graft.index.Codec.decode(tfs, n, deltas = false)
+        val d = graft.index.Codec.decode(dls, n, deltas = false)
         (0 until n).iterator.map(i => (term, ids(i), f(i), d(i)))
       }
       .toDF("term", "chunkId", "tf", "dl")

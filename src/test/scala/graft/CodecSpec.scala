@@ -9,12 +9,28 @@ import graft.index.Codec
 class CodecSpec extends AnyFunSuite {
   private val rng = new scala.util.Random(42)
 
+  /** Bytes of one VByte field: 7 payload bits per byte, unsigned. */
+  private def vbyteLen(v: Long): Int = {
+    var x = v >>> 7
+    var len = 1
+    while (x != 0) { x >>>= 7; len += 1 }
+    len
+  }
+
+  // A FOR frame stores its base and a delta list's first doc id as VByte
+  // fields; the two vbyte tests cover those fields at every magnitude.
   test("vbyte roundtrip: arbitrary non-negative values") {
     for (_ <- 1 to 200) {
       val n = rng.nextInt(300)
       val arr = Array.fill(n)(rng.nextLong().abs)
-      val enc = Codec.vbyteEncode(arr, deltas = false)
-      assert(Codec.vbyteDecode(enc, n, deltas = false).toSeq == arr.toSeq)
+      val enc = Codec.encode(arr, deltas = false)
+      assert(Codec.decode(enc, n, deltas = false).toSeq == arr.toSeq)
+      // a one-value frame is VByte(base) plus a zero width byte
+      for (v <- arr.headOption) {
+        val one = Codec.encode(Array(v), deltas = false)
+        assert(one.length == vbyteLen(v) + 1, s"value $v")
+        assert(Codec.decode(one, 1, deltas = false).toSeq == Seq(v))
+      }
     }
   }
 
@@ -22,8 +38,16 @@ class CodecSpec extends AnyFunSuite {
     for (_ <- 1 to 200) {
       val n = rng.nextInt(300)
       val arr = Array.fill(n)(rng.nextLong()).distinct.sorted
-      val enc = Codec.vbyteEncode(arr, deltas = true)
-      assert(Codec.vbyteDecode(enc, arr.length, deltas = true).toSeq == arr.toSeq)
+      val enc = Codec.encode(arr, deltas = true)
+      assert(Codec.decode(enc, arr.length, deltas = true).toSeq == arr.toSeq)
+      // a one-id list is the VByte first id alone; a negative id takes
+      // all ten bytes of its 64-bit pattern
+      for (first <- arr.headOption) {
+        val one = Codec.encode(Array(first), deltas = true)
+        assert(one.length == vbyteLen(first), s"first id $first")
+        assert(first >= 0 || one.length == 10)
+        assert(Codec.decode(one, 1, deltas = true).toSeq == Seq(first))
+      }
     }
   }
 
@@ -35,10 +59,10 @@ class CodecSpec extends AnyFunSuite {
       val tfs = Array.tabulate(n)(i => (i % 7 + 1).toLong)
       val dls = Array.tabulate(n)(i => (i % 90 + 10).toLong)
       val norms = Array.tabulate(n)(i => tfs(i).toDouble / (tfs(i) + dls(i)))
-      val blocks = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64, codec = Codec.Vbyte)
-      assert(blocks.flatMap(Codec.decodeBlockDocs(_, Codec.Vbyte)) == ids.toSeq)
-      assert(blocks.flatMap(Codec.decodeBlockTfs(_, Codec.Vbyte)) == tfs.toSeq)
-      assert(blocks.flatMap(Codec.decodeBlockDls(_, Codec.Vbyte)) == dls.toSeq)
+      val blocks = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64)
+      assert(blocks.flatMap(Codec.decodeBlockDocs) == ids.toSeq)
+      assert(blocks.flatMap(Codec.decodeBlockTfs) == tfs.toSeq)
+      assert(blocks.flatMap(Codec.decodeBlockDls) == dls.toSeq)
       var off = 0
       for (b <- blocks) {
         val mx = norms.slice(off, off + b.n).max
@@ -54,7 +78,7 @@ class CodecSpec extends AnyFunSuite {
     val tfs = Array.fill(10000)(2L)
     val dls = Array.fill(10000)(60L)
     val norms = Array.fill(10000)(0.5)
-    val blocks = Codec.buildBlocks(ids, tfs, dls, norms, codec = Codec.Vbyte)
+    val blocks = Codec.buildBlocks(ids, tfs, dls, norms)
     val bytes = blocks.map(b => b.docs.length + b.tfs.length + b.dls.length).sum
     assert(bytes < 10000 * 4, s"expected <4B/posting, got ${bytes / 10000.0}")
   }
@@ -66,8 +90,8 @@ class CodecSpec extends AnyFunSuite {
       val bits = trial % 64
       val arr = Array.fill(n)(
         if (bits == 0) 0L else rng.nextLong() >>> (64 - bits))
-      val enc = Codec.forEncode(arr, deltas = false)
-      assert(Codec.forDecode(enc, n, deltas = false).toSeq == arr.toSeq,
+      val enc = Codec.encode(arr, deltas = false)
+      assert(Codec.decode(enc, n, deltas = false).toSeq == arr.toSeq,
         s"width~$bits n=$n")
     }
   }
@@ -76,52 +100,44 @@ class CodecSpec extends AnyFunSuite {
     for (_ <- 1 to 100) {
       val n = 1 + rng.nextInt(300)
       val arr = Array.fill(n)(rng.nextLong()) // any bit pattern
-      val enc = Codec.forEncode(arr, deltas = false)
-      assert(Codec.forDecode(enc, n, deltas = false).toSeq == arr.toSeq)
+      val enc = Codec.encode(arr, deltas = false)
+      assert(Codec.decode(enc, n, deltas = false).toSeq == arr.toSeq)
     }
     // adversarial: min and max unsigned in one frame forces width 64
     val edge = Array(0L, -1L, Long.MinValue, Long.MaxValue, 1L)
     // (not sorted — non-delta mode has no monotonicity requirement)
-    val enc = Codec.forEncode(edge, deltas = false)
-    assert(Codec.forDecode(enc, edge.length, deltas = false).toSeq == edge.toSeq)
+    val enc = Codec.encode(edge, deltas = false)
+    assert(Codec.decode(enc, edge.length, deltas = false).toSeq == edge.toSeq)
   }
 
   test("FOR delta roundtrip: sorted ids incl. negative first values") {
     for (_ <- 1 to 200) {
       val n = rng.nextInt(300)
       val arr = Array.fill(n)(rng.nextLong()).distinct.sorted
-      val enc = Codec.forEncode(arr, deltas = true)
-      assert(Codec.forDecode(enc, arr.length, deltas = true).toSeq == arr.toSeq)
+      val enc = Codec.encode(arr, deltas = true)
+      assert(Codec.decode(enc, arr.length, deltas = true).toSeq == arr.toSeq)
     }
     // constant gaps -> width 0 frame
     val flat = Array.tabulate(50)(i => 7L * i - 100)
-    val enc0 = Codec.forEncode(flat, deltas = true)
-    assert(Codec.forDecode(enc0, flat.length, deltas = true).toSeq == flat.toSeq)
+    val enc0 = Codec.encode(flat, deltas = true)
+    assert(Codec.decode(enc0, flat.length, deltas = true).toSeq == flat.toSeq)
     // extreme gap: MinValue then MaxValue (unsigned-wrapping delta)
     val wide = Array(Long.MinValue, -1L, Long.MaxValue)
-    val enc1 = Codec.forEncode(wide, deltas = true)
-    assert(Codec.forDecode(enc1, wide.length, deltas = true).toSeq == wide.toSeq)
+    val enc1 = Codec.encode(wide, deltas = true)
+    assert(Codec.decode(enc1, wide.length, deltas = true).toSeq == wide.toSeq)
   }
 
-  test("FOR and VByte decode to identical postings; FOR packs tighter on dense lists") {
-    for (_ <- 1 to 100) {
-      val n = 1 + rng.nextInt(400)
-      val ids = Array.fill(n)(rng.nextLong() % 10000000L).distinct.sorted
-      val vb = Codec.decode(Codec.Vbyte, Codec.encode(Codec.Vbyte, ids, deltas = true),
-        ids.length, deltas = true)
-      val fr = Codec.decode(Codec.For, Codec.encode(Codec.For, ids, deltas = true),
-        ids.length, deltas = true)
-      assert(vb.toSeq == fr.toSeq)
-    }
-    // 128-gap frames of a dense posting list: one shared width beats
-    // per-value vbyte bytes
-    val dense = Array.tabulate(128)(i => 1000000L + i * 37L)
-    val vbBytes = Codec.encode(Codec.Vbyte, dense, deltas = true).length
-    val forBytes = Codec.encode(Codec.For, dense, deltas = true).length
-    assert(forBytes < vbBytes, s"FOR $forBytes >= VByte $vbBytes")
+  test("FOR packs a dense posting frame below one byte per gap") {
+    // 128-gap frame of a dense posting list: one shared width for all gaps
+    val dense = Array.tabulate(128)(i => 1000000L + i * 37L + i % 3)
+    val bytes = Codec.encode(dense, deltas = true).length
+    assert(bytes < dense.length, s"FOR $bytes B for ${dense.length} postings")
   }
 
   test("FOR block build/decode roundtrip matches VByte blocks") {
+    // block metadata comes from the raw postings, not the byte layout, so
+    // FOR blocks carry exactly the n, block max and first/last doc id that
+    // the retired VByte blocks did: WAND's block bounds are unchanged
     for (_ <- 1 to 50) {
       val n = 1 + rng.nextInt(500)
       val scale = 1 + rng.nextInt(1000000)
@@ -129,13 +145,13 @@ class CodecSpec extends AnyFunSuite {
       val tfs = Array.tabulate(n)(i => (i % 7 + 1).toLong)
       val dls = Array.tabulate(n)(i => (i % 90 + 10).toLong)
       val norms = Array.tabulate(n)(i => tfs(i).toDouble / (tfs(i) + dls(i)))
-      val fb = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64, codec = Codec.For)
-      assert(fb.flatMap(Codec.decodeBlockDocs(_, Codec.For)) == ids.toSeq)
-      assert(fb.flatMap(Codec.decodeBlockTfs(_, Codec.For)) == tfs.toSeq)
-      assert(fb.flatMap(Codec.decodeBlockDls(_, Codec.For)) == dls.toSeq)
-      val vb = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64, codec = Codec.Vbyte)
-      assert(fb.map(b => (b.n, b.maxTfNorm, b.firstDoc, b.lastDoc)) ==
-        vb.map(b => (b.n, b.maxTfNorm, b.firstDoc, b.lastDoc)))
+      val fb = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64)
+      assert(fb.flatMap(Codec.decodeBlockDocs) == ids.toSeq)
+      assert(fb.flatMap(Codec.decodeBlockTfs) == tfs.toSeq)
+      assert(fb.flatMap(Codec.decodeBlockDls) == dls.toSeq)
+      val fromPostings = ids.indices.grouped(64).map(r =>
+        (r.size, r.map(norms(_)).max, ids(r.head), ids(r.last))).toSeq
+      assert(fb.map(b => (b.n, b.maxTfNorm, b.firstDoc, b.lastDoc)) == fromPostings)
     }
   }
 }

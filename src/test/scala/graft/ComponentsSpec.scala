@@ -24,6 +24,14 @@ class ComponentsSpec extends AnyFunSuite {
     (0L until n).map(v => v -> find(v)).toMap
   }
 
+  /** The session CacheManager's entries (a private list, read reflectively). */
+  private def cacheEntries(): Seq[AnyRef] = {
+    val cm = spark.sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[Seq[AnyRef]]
+  }
+
   private def run(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     val e = edges.toDF("x", "y")
@@ -76,5 +84,27 @@ class ComponentsSpec extends AnyFunSuite {
         .as[(Long, Long)].collect()
     }
     assert(ex.getMessage.contains("diameter"))
+  }
+
+  test("minLabel leaves no cache entry behind and restores the session conf") {
+    import spark.implicits._
+    val unsetKeys = Seq("spark.sql.adaptive.enabled", "spark.sql.join.preferSortMergeJoin")
+    val setKey = "spark.sql.autoBroadcastJoinThreshold"
+    val chain = (0L until 3L).map(i => (i, i + 1)).toDF("x", "y") // diameter 3
+    val v = (0L until 4L).toDF("id")
+    // maxRounds 3 converges; 2 is below the diameter and throws
+    for (maxRounds <- Seq(3, 2)) {
+      unsetKeys.foreach(spark.conf.unset)
+      spark.conf.set(setKey, "1234")
+      val before = cacheEntries()
+      val got = scala.util.Try(
+        Components.minLabel(chain, v, maxRounds).as[(Long, Long)].collect().toMap)
+      assert(got.map(_.values.toSet).toOption ==
+        (if (maxRounds == 3) Some(Set(0L)) else None), s"maxRounds=$maxRounds")
+      assert(cacheEntries().filterNot(before.contains).isEmpty, s"maxRounds=$maxRounds")
+      unsetKeys.foreach(k => assert(!spark.conf.getAll.contains(k), s"$k maxRounds=$maxRounds"))
+      assert(spark.conf.get(setKey) == "1234")
+      spark.conf.unset(setKey)
+    }
   }
 }

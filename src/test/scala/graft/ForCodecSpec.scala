@@ -1,85 +1,114 @@
 package graft
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.{col, lit, sum}
-import graft.index.{BuildConfig, Codec, IndexBuilder, IndexPaths}
-import graft.query.{Pipeline, PipelineConfig, SparkBackend, Wand}
+import graft.analysis.Analyzer
+import graft.corpus.{ChunkerConfig, PageDoc, WebPages}
+import graft.index.{BuildConfig, IndexBuilder, IndexPaths, ResumableBuild, TableIO}
+import graft.query.{SparkBackend, Wand}
 
-/** An index built with postingCodec="for" serves bit-identically to the
-  * vbyte build over the same corpus: the codec is a pure byte-layout choice
-  * below the scoring math, so every decoded posting — and therefore every
-  * BM25 score, WAND bound, and pipeline result — must be equal, while the
-  * on-disk block bytes differ (proof the FOR path actually ran).
+/** FOR is the one posting-block layout. The config hash ends with its tag,
+  * so a FOR index stays incrementally updatable; an index written with
+  * VByte blocks (stats tagged "vbyte", or written before the tag existed)
+  * is refused at open, and the next update rebuilds it in full.
   */
 class ForCodecSpec extends AnyFunSuite {
-
   private lazy val spark = SparkTestSession.spark
-  private lazy val corpus = Goldens.corpus
-  private def buildWith(codec: String): IndexPaths = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$codec").toString
-    val p = IndexPaths(dir)
+
+  private val chunker = ChunkerConfig(qualityCheck = false)
+  // 16 shards: a one-url re-crawl touches few enough of them that an
+  // intact index takes the shard-grain incremental path
+  private val build = BuildConfig(nTermBuckets = 8, nDocShards = 16, shufflePartitions = 8)
+  private val resume = ResumableBuild.ResumeConfig(nInputBuckets = 8)
+  private val sentinel = "recrawl sentinel content"
+  private val queries = Seq("quantum physics experiment", sentinel, "the of and")
+
+  private lazy val crawl = WebPages.generate(spark, 150, seed = 42, partitions = 4)
+  private lazy val target: String = {
     import spark.implicits._
-    val ds = spark.createDataset(Goldens.chunks)
-    IndexBuilder.build(spark, ds, p,
-      BuildConfig(k1 = corpus.get("k1").asDouble(), b = corpus.get("b").asDouble(),
-        nTermBuckets = 8, nDocShards = 2, shufflePartitions = 8,
-        postingCodec = codec))
-    p
-  }
-  private lazy val vbytePaths = buildWith(Codec.Vbyte)
-  private lazy val forPaths = buildWith(Codec.For)
-  private lazy val queries = Seq(
-    "transformer attention mechanism", "the of and", "retrieval", "bm25 ranking")
-
-  test("stats record the codec; block bytes differ, posting payload does not") {
-    val vb = IndexBuilder.loadStats(spark, vbytePaths)
-    val fr = IndexBuilder.loadStats(spark, forPaths)
-    assert(vb.postingCodec == Codec.Vbyte && fr.postingCodec == Codec.For)
-    assert(vb.configHash != fr.configHash) // layout contract: no mixed shards
-    def sizes(p: IndexPaths) = spark.read.parquet(p.blocks)
-      .select(sum(org.apache.spark.sql.functions.length(col("docs"))),
-        sum(col("n"))).head()
-    val (sv, sf) = (sizes(vbytePaths), sizes(forPaths))
-    assert(sv.getLong(1) == sf.getLong(1), "posting counts must match")
-    assert(sv.getLong(0) != sf.getLong(0), "identical byte sizes: FOR never ran?")
+    crawl.select("url").as[String].orderBy("url").head()
   }
 
-  test("WAND top-k identical across codecs") {
-    val vb = new SparkBackend(spark, vbytePaths)
-    val fr = new SparkBackend(spark, forPaths)
-    for (q <- queries) {
-      val a = Wand.topK(spark, vbytePaths, vb.stats, q, 10, vb.idfFor)
-      val b = Wand.topK(spark, forPaths, fr.stats, q, 10, fr.idfFor)
-      assert(a == b, s"WAND divergence for '$q'")
-    }
+  /** The seeded crawl; `recrawl` appends the sentinel to one url's text. */
+  private def pages(recrawl: Boolean): Dataset[PageDoc] = {
+    import spark.implicits._
+    val url = target
+    val extra = if (recrawl) s" $sentinel" else ""
+    crawl.map(p => PageDoc(p.url, 1, if (p.url == url) p.text + extra else p.text, None))
   }
 
-  test("full pipeline results identical across codecs") {
-    val vb = new SparkBackend(spark, vbytePaths)
-    val fr = new SparkBackend(spark, forPaths)
-    for (q <- queries) {
-      val a = Pipeline.searchTopK(vb, q, PipelineConfig())
-      val b = Pipeline.searchTopK(fr, q, PipelineConfig())
-      assert(a.pool.toList == b.pool.toList, s"pool divergence for '$q'")
-      assert(a.results.map(r => (r.text, r.score, r.citation)) ==
-        b.results.map(r => (r.text, r.score, r.citation)), s"results for '$q'")
-      assert(a.confidence == b.confidence, s"confidence for '$q'")
-    }
+  private def tempIndex(name: String): IndexPaths =
+    IndexPaths(java.nio.file.Files.createTempDirectory(name).toString)
+
+  private def runBuild(recrawl: Boolean): IndexPaths = {
+    val out = tempIndex("graft-layout")
+    ResumableBuild.run(spark, pages(recrawl), out, build, chunker, resume)
+    out
+  }
+  private lazy val forIndex = runBuild(recrawl = false)
+  private lazy val freshRecrawl = runBuild(recrawl = true)
+
+  /** A copy of the FOR index with its global stats rewritten by `stats`. */
+  private def copyWithStats(stats: DataFrame => DataFrame): IndexPaths = {
+    val out = tempIndex("graft-layout-copy")
+    FileUtils.copyDirectory(new java.io.File(forIndex.root), new java.io.File(out.root))
+    stats(spark.read.parquet(forIndex.globalStats))
+      .write.mode("overwrite").parquet(out.globalStats)
+    out
+  }
+
+  /** Applies the re-crawl to `out`; returns the manifest it leaves. */
+  private def recrawl(out: IndexPaths): Map[String, String] = {
+    val next = pages(recrawl = true)
+    ResumableBuild.incrementalUpdate(spark, next,
+      next.filter(col("url") === target).select("url"),
+      out, build, chunker, resume)
+    TableIO.readManifest(out.manifest).getOrElse(Map.empty)
+  }
+
+  private def wandTop10(paths: IndexPaths): Seq[Seq[(Long, Double)]] = {
+    val backend = new SparkBackend(spark, paths)
+    queries.map(q => Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor))
+  }
+
+  test("configHash ends with the FOR layout tag") {
+    val hash = BuildConfig().configHash
+    assert(hash == Analyzer.md5Hex("1.4|0.75|0.25|32|0|128|0|0|for"))
+    // the hash of the retired VByte default no longer matches
+    assert(hash != Analyzer.md5Hex("1.4|0.75|0.25|32|0|128|0|0"))
   }
 
   test("pre-r5 stats without a postingCodec column load as vbyte") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-oldstats").toString
-    spark.read.parquet(vbytePaths.globalStats).drop("postingCodec")
-      .write.mode("overwrite").parquet(s"$dir/global_stats")
-    val old = IndexBuilder.loadStats(spark, IndexPaths(dir))
-    assert(old.postingCodec == Codec.Vbyte)
+    // stats written before the layout tag existed mean VByte blocks, which
+    // this code no longer decodes: loading them asks for a full rebuild
+    val old = tempIndex("graft-oldstats")
+    spark.read.parquet(forIndex.globalStats).drop("postingCodec")
+      .write.mode("overwrite").parquet(old.globalStats)
+    val ex = intercept[IllegalStateException](IndexBuilder.loadStats(spark, old))
+    assert(ex.getMessage.contains("VByte posting blocks") &&
+      ex.getMessage.contains("full rebuild is required"), ex.getMessage)
   }
 
-  test("default configHash unchanged from r4 (vbyte indexes stay updatable)") {
-    // the codec term is appended to the hash input only for non-default
-    // codecs; a pre-r5 on-disk index's recorded hash must keep matching
-    val r4Style = graft.analysis.Analyzer.md5Hex(
-      "1.4|0.75|0.25|32|0|128|0|0")
-    assert(BuildConfig().configHash == r4Style)
+  test("a FOR index takes the incremental path on update") {
+    val manifest = recrawl(copyWithStats(identity))
+    assert(manifest.contains("incremental_shards"), manifest)
+  }
+
+  for ((label, stale) <- Seq[(String, DataFrame => DataFrame)](
+      "tagged vbyte" -> (_.withColumn("postingCodec", lit("vbyte"))),
+      "without the layout tag" -> (_.drop("postingCodec")))) {
+    test(s"an index $label is refused at open and rebuilt in full on update") {
+      val out = copyWithStats(stale)
+      val ex = intercept[IllegalStateException](new SparkBackend(spark, out))
+      assert(ex.getMessage.contains(out.root) &&
+        ex.getMessage.contains("full rebuild is required"), ex.getMessage)
+      val manifest = recrawl(out)
+      assert(!manifest.contains("incremental_shards"), manifest)
+      val want = wandTop10(freshRecrawl)
+      assert(want(1).nonEmpty, "the re-crawled text is searchable")
+      assert(wandTop10(out) == want)
+    }
   }
 }

@@ -31,17 +31,17 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("vbyte delta roundtrip on sorted ids; plain roundtrip on counts") {
+  test("delta roundtrip on sorted ids; plain roundtrip on counts") {
     val sortedIds = Gen.nonEmptyListOf(Gen.chooseNum(0L, 1L << 40))
       .map(_.distinct.sorted.toArray)
     samples(sortedIds).foreach { ids =>
-      val enc = Codec.vbyteEncode(ids, deltas = true)
-      assert(Codec.vbyteDecode(enc, ids.length, deltas = true).toSeq == ids.toSeq)
+      val enc = Codec.encode(ids, deltas = true)
+      assert(Codec.decode(enc, ids.length, deltas = true).toSeq == ids.toSeq)
     }
     val counts = Gen.nonEmptyListOf(Gen.chooseNum(0L, 1L << 20)).map(_.toArray)
     samples(counts).foreach { vs =>
-      val enc = Codec.vbyteEncode(vs, deltas = false)
-      assert(Codec.vbyteDecode(enc, vs.length, deltas = false).toSeq == vs.toSeq)
+      val enc = Codec.encode(vs, deltas = false)
+      assert(Codec.decode(enc, vs.length, deltas = false).toSeq == vs.toSeq)
     }
   }
 
@@ -54,12 +54,12 @@ class PropertySpec extends AnyFunSuite {
     } yield (ids.toArray, tfs.toArray, dls.toArray)
     samples(gen, 150).foreach { case (ids, tfs, dls) =>
       val norms = tfs.map(_.toDouble)
-      val blocks = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64, codec = Codec.Vbyte)
-      assert(blocks.flatMap(Codec.decodeBlockDocs(_, Codec.Vbyte)).toSeq == ids.toSeq)
-      assert(blocks.flatMap(Codec.decodeBlockTfs(_, Codec.Vbyte)).toSeq == tfs.toSeq)
-      assert(blocks.flatMap(Codec.decodeBlockDls(_, Codec.Vbyte)).toSeq == dls.toSeq)
+      val blocks = Codec.buildBlocks(ids, tfs, dls, norms, blockSize = 64)
+      assert(blocks.flatMap(Codec.decodeBlockDocs).toSeq == ids.toSeq)
+      assert(blocks.flatMap(Codec.decodeBlockTfs).toSeq == tfs.toSeq)
+      assert(blocks.flatMap(Codec.decodeBlockDls).toSeq == dls.toSeq)
       blocks.foreach { b =>
-        val d = Codec.decodeBlockDocs(b, Codec.Vbyte)
+        val d = Codec.decodeBlockDocs(b)
         assert(b.firstDoc == d.head && b.lastDoc == d.last)
       }
       // block-max metadata: every block's max equals the max of its norms
