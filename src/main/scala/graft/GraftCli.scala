@@ -51,6 +51,10 @@ object GraftCli {
     val paths = IndexPaths(args(1))
     val spark = session()
     import spark.implicits._
+    // backends opened by this invocation, closed before the session stops
+    val opened = scala.collection.mutable.ArrayBuffer.empty[SparkBackend]
+    def openBackend(): SparkBackend = { val b = new SparkBackend(spark, paths); opened += b; b }
+    def exit(code: Int): Nothing = { opened.foreach(_.close()); spark.stop(); sys.exit(code) }
 
     cmd match {
       case "subprocess" =>
@@ -60,7 +64,7 @@ object GraftCli {
         // --batch <file> switches to batch mode (cli_subprocess.py:124-230):
         // a {"queries": [...]} file, one engine session across all queries,
         // output to --output <file> or stdout.
-        lazy val backend = new SparkBackend(spark, paths) // one session per invocation
+        lazy val backend = openBackend() // one session per invocation
         val deps = graft.config.Subprocess.Deps(
           runQuery = (q, cfg) =>
             Pipeline.searchTopK(backend, q,
@@ -98,7 +102,7 @@ object GraftCli {
             graft.config.Subprocess.handleBatch(input, deps, baseCfg) match {
               case Left(err) =>
                 System.err.println(s"Error: $err")
-                spark.stop(); sys.exit(1)
+                exit(1)
               case Right(json0) =>
                 val json = if (overrides.contains("pretty"))
                   graft.config.Subprocess.prettify(json0) else json0
@@ -108,12 +112,12 @@ object GraftCli {
                     println(s"Batch processing complete. Results written to $out")
                   case None => println(json)
                 }
-                spark.stop(); sys.exit(0)
+                exit(0)
             }
             } catch {
               case e: Throwable if !e.isInstanceOf[scala.util.control.ControlThrowable] =>
                 System.err.println(s"Error in batch processing: ${e.getMessage}")
-                spark.stop(); sys.exit(1)
+                exit(1)
             }
           case None =>
             val input =
@@ -123,8 +127,7 @@ object GraftCli {
             val (resp, code) = graft.config.Subprocess.handle(input, deps)
             println(if (overrides.contains("pretty"))
               graft.config.Subprocess.prettify(resp) else resp)
-            spark.stop()
-            sys.exit(code)
+            exit(code)
         }
       case "build" =>
         val nPages = if (args.length > 2) args(2).toLong else 10000L
@@ -184,7 +187,7 @@ object GraftCli {
           s"ubuckets=${m.getOrElse("incremental_ubuckets", "-")}")
       case "query" =>
         val q = args.drop(2).mkString(" ")
-        val backend = new SparkBackend(spark, paths)
+        val backend = openBackend()
         val out = Pipeline.searchTopK(backend, q, pipelineCfg)
         println(s"[graft] query='$q' confidence=${out.confidence.level}(${out.confidence.score})")
         out.results.foreach(r =>
@@ -194,7 +197,7 @@ object GraftCli {
         // (subprocess_interface.py:57-133: success/query/results/summary/
         //  confidence/count)
         val q = args.drop(2).mkString(" ")
-        val backend = new SparkBackend(spark, paths)
+        val backend = openBackend()
         val out = Pipeline.searchTopK(backend, q, pipelineCfg)
         def js(s: String): String = "\"" + s.flatMap {
           case '"' => "\\\""
@@ -219,12 +222,12 @@ object GraftCli {
           s""""count": ${out.results.length}}""")
       case "wand" =>
         val q = args.drop(2).mkString(" ")
-        val backend = new SparkBackend(spark, paths)
+        val backend = openBackend()
         val top = Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor)
         println(s"[graft] WAND top-${top.length} for '$q':")
         top.foreach { case (doc, s) => println(f"  $s%10.4f  doc=$doc") }
       case "qprofile" =>
-        val backend = new SparkBackend(spark, paths)
+        val backend = openBackend()
         val q = if (args.length > 2) args.drop(2).mkString(" ") else "spark shuffle partition"
         val toks = graft.analysis.Analyzer.tokenize(q).toIndexedSeq
         def t(label: String)(f: => Any): Unit = {
@@ -238,7 +241,7 @@ object GraftCli {
         println(s"[graft] pool path=${backend.lastPoolPath} iters=${backend.lastPoolIters}")
         t("searchTopK")(Pipeline.searchTopK(backend, q, pipelineCfg))
       case "qbench" =>
-        val backend = new SparkBackend(spark, paths)
+        val backend = openBackend()
         val qs = Seq("machine learning algorithms", "quick brown fox",
           "gradient descent optimization methods for neural networks training",
           "transformer attention mechanisms", "climate ocean temperature",
@@ -368,17 +371,14 @@ object GraftCli {
         println(f"[graft] directbuild ${lastStats.nDocs} chunks in $best%.1fs " +
           f"(${nPages / best}%.0f pages/s)")
       case "explain" =>
-        val backend = new SparkBackend(spark, paths)
+        val backend = openBackend()
         val q = if (args.length > 2) args.drop(2).mkString(" ") else "nobel prize physics"
         val toks = graft.analysis.Analyzer.tokenize(q).toIndexedSeq
         println("==== scoresDF (postings join) ====")
         backend.scoresDF(toks).explain("formatted")
-        println("==== blocks scan (WAND input) ====")
-        val buckets = toks.map(IndexBuilder.termBucket(_, backend.stats.nTermBuckets)).distinct
-        spark.read.parquet(paths.blocks)
-          .filter(org.apache.spark.sql.functions.col("bucket").isin(buckets: _*) &&
-            org.apache.spark.sql.functions.col("term").isin(toks: _*))
-          .explain("formatted")
+        println("==== WAND block files (one task per doc shard) ====")
+        Wand.topKReading(spark, paths, backend.stats, q, 10, backend.idfFor)._2
+          .foreach { case (f, bytes) => println(f"$bytes%10d  $f") }
       case "chunkbench" =>
         val nPages = if (args.length > 2) args(2).toLong else 20000L
         val pages = WebPages.generate(spark, nPages, 42,
@@ -451,6 +451,7 @@ object GraftCli {
         spark.read.parquet(paths.metrics).show(50, truncate = false)
       case other => sys.error(s"unknown command $other")
     }
+    opened.foreach(_.close())
     spark.stop()
   }
 }

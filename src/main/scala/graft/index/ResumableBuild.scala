@@ -69,7 +69,11 @@ object ResumableBuild {
       // read-back would count the surviving STALE partition instead)
       val counts = newChunks.groupBy("bucket").count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      newChunks.write.mode(SaveMode.Overwrite)
+      // both writes cluster on the partition column first, so each bucket
+      // directory gets one file (an unclustered partitionBy write opens
+      // tasks x dirs parquet writers)
+      newChunks.repartition(math.max(1, buckets.length), col("bucket"))
+        .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket").parquet(chunksRawDir(out))
       // dedup-hash sigs for exactly the buckets just written (same dynamic

@@ -10,8 +10,9 @@ import graft.index.{GlobalStats, IndexBuilder, IndexPaths}
   *
   * Physical plan of a pool (SURVEY §3.4 Job 3):
   *  1. query terms -> idf from the bucket-pruned term-stats scan; the
-  *     default bounded pool takes its candidates from WAND over the query
-  *     terms' block buckets and re-scores only those rows exactly;
+  *     default bounded pool takes its candidates from WAND (`Wand.topK`:
+  *     one job, one task per doc shard, each reading its own blocks of the
+  *     query terms' buckets) and re-scores only those rows exactly;
   *  2. the dense pool (bounded fallback, head terms) is ONE narrow map over
   *     the cached chunk table: each chunk's base BM25 comes from its own
   *     text (`Bm25Stats.scoreText`, the same kernel as the bounded re-score
@@ -23,7 +24,8 @@ import graft.index.{GlobalStats, IndexBuilder, IndexPaths}
   *     (`topDocsForRm3`) is the same single pass over base BM25;
   *  4. everything after the <=poolSize pool runs driver-side (Pipeline).
   */
-final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchBackend {
+final class SparkBackend(spark: SparkSession, paths: IndexPaths)
+    extends SearchBackend with AutoCloseable {
   import spark.implicits._
 
   val stats: GlobalStats = IndexBuilder.loadStats(spark, paths)
@@ -31,13 +33,15 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
   // silently prune the wrong partitions
   private val nTermBuckets: Int = stats.nTermBuckets
   // serving state: the dense pool and RM3 read the chunk table in full
-  // (scoring over all chunks, reference semantics), so keep it cached;
-  // postings stay on parquet where term-bucket partition pruning does the
-  // work. The DF keeps the precomputed static-bonus columns.
+  // (scoring over all chunks, reference semantics), so keep it cached
+  // until close(); postings stay on parquet where term-bucket partition
+  // pruning does the work. The DF keeps the precomputed static-bonus
+  // columns. The fixed term-stats schema skips a schema-inference job.
   private val chunksRawDF = spark.read.parquet(paths.chunks)
     .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  private val blocksDF = spark.read.parquet(paths.blocks)
-  private val termStatsDF = spark.read.parquet(paths.termStats)
+  private lazy val blocksDF = spark.read.parquet(paths.blocks) // scoresDF only
+  private val termStatsDF = spark.read
+    .schema("term STRING, df BIGINT, idf DOUBLE, bucket INT").parquet(paths.termStats)
   private val idfCache = scala.collection.mutable.HashMap.empty[String, (Double, Long)]
 
   private def statsFor(terms: Seq[String]): Map[String, (Double, Long)] = {
@@ -52,6 +56,11 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
     }
     terms.map(t => t -> idfCache(t)).toMap
   }
+
+  /** Uncaches the chunk table; idempotent. Later calls read it from disk.
+    * Backends over the same table in one session share the cache entry.
+    */
+  override def close(): Unit = chunksRawDF.unpersist()
 
   /** idf lookup for query terms — bucket-pruned scan of term_stats. */
   def idfFor(terms: Seq[String]): Map[String, Double] =

@@ -1,20 +1,25 @@
 package graft.query
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 import graft.analysis.Analyzer
-import graft.index.{BlockRow, Codec, GlobalStats, IndexBuilder, IndexPaths}
+import graft.index.{BlockFiles, BlockRow, Codec, GlobalStats, IndexBuilder, IndexPaths}
 
 /** Block-max WAND top-k over the compressed posting blocks (north star:
   * "query-time top-k BM25 scoring uses block-max WAND posting-list
   * intersection implemented as typed Dataset operators").
   *
   * Parallelism model: posting lists are sharded by doc hash at build time
-  * (`BlockRow.shard`), so WAND runs independently per shard — one typed
-  * `mapGroups` task per shard — and the per-shard top-k merge on the driver
-  * is k*nShards rows. At cluster scale each shard is one task; no full
-  * head-term posting list is ever materialized on one executor.
+  * (`BlockRow.shard`, directory `blocks/bucket=b/shard=s`), so WAND runs
+  * independently per shard. `topK` is one Spark job with one task per doc
+  * shard and no shuffle: each task lists and reads its own shard's
+  * directories of the live query terms' buckets (`BlockFiles.readShard`),
+  * runs `wandShard` and returns its top-k, so the driver merges k*nShards
+  * rows and no Dataset is planned per call. No full head-term posting list
+  * is ever materialized on one executor. This replaces a Dataset
+  * `groupByKey(shard).mapGroups`: it paid Catalyst planning and an AQE
+  * re-plan per call, and AQE coalesced the shard groups into one task, so
+  * the shards ran serially.
   *
   * Exactness: candidate docs are fully scored by iterating query terms in
   * token order (float-identical to the sequential reference); the WAND
@@ -161,77 +166,43 @@ object Wand {
     heap.dequeueAll.reverse.toSeq // best first
   }
 
-  /** Block-table schema, fixed by `BlockRow`: reading with it skips the
-    * footer-read schema-inference job a schema-less read runs per call.
-    * `bucket` and `shard` are partition columns, parsed from the directory
-    * names.
-    */
-  private lazy val blockSchema: StructType = Encoders.product[BlockRow].schema
-
-  /** The blocks of `liveTerms`, read from their buckets' `bucket=b`
-    * directories only (`basePath` keeps `bucket` and `shard` as columns),
-    * with the term filter pushed down into those files. A missing bucket
-    * directory holds no blocks and is skipped; None when all are missing.
-    */
-  private[graft] def blockScan(spark: SparkSession, paths: IndexPaths, nTermBuckets: Int,
-                               liveTerms: Seq[String]): Option[Dataset[BlockRow]] = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bucketDirs = liveTerms.map(IndexBuilder.termBucket(_, nTermBuckets)).distinct
-      .map(b => new org.apache.hadoop.fs.Path(s"${paths.blocks}/bucket=$b"))
-      .filter(d => d.getFileSystem(conf).exists(d)).map(_.toString)
-    if (bucketDirs.isEmpty) None
-    else Some(spark.read.schema(blockSchema).option("basePath", paths.blocks)
-      .parquet(bucketDirs: _*)
-      .filter(col("term").isin(liveTerms: _*))
-      .as[BlockRow])
-  }
-
-  /** Distributed top-k: one WAND task per doc shard, merged on the driver.
-    * Each call lists and reads only the live query terms' bucket
-    * directories (`blockScan`), with the schema taken from `BlockRow`, so
-    * it runs just the two jobs of the per-shard shuffle.
+  /** Distributed top-k: one Spark job, one WAND task per doc shard, merged
+    * on the driver.
     */
   def topK(spark: SparkSession, paths: IndexPaths, stats: GlobalStats,
            query: String, k: Int,
-           idfFor: Seq[String] => Map[String, Double]): Seq[(Long, Double)] = {
-    import spark.implicits._
+           idfFor: Seq[String] => Map[String, Double]): Seq[(Long, Double)] =
+    topKReading(spark, paths, stats, query, k, idfFor)._1
+
+  /** `topK`, plus the block files its tasks opened (path, bytes). */
+  private[graft] def topKReading(spark: SparkSession, paths: IndexPaths, stats: GlobalStats,
+                                 query: String, k: Int,
+                                 idfFor: Seq[String] => Map[String, Double])
+      : (Seq[(Long, Double)], Seq[(String, Long)]) = {
     val tokens = Analyzer.tokenize(query).toIndexedSeq
-    if (tokens.isEmpty) return Nil
+    if (tokens.isEmpty) return (Nil, Nil)
     val termOrder = tokens.distinct
     val mult = tokens.groupBy(identity).map { case (t, xs) => t -> xs.length }
     val idf = idfFor(termOrder)
     val weights = termOrder.map(t => t -> mult(t) * idf(t)).toMap
     val liveTerms = termOrder.filter(weights(_) != 0.0)
-    if (liveTerms.isEmpty) return Nil
+    if (liveTerms.isEmpty) return (Nil, Nil)
     val k1 = stats.k1; val b = stats.b; val avgdl = stats.avgdl
     // blocks written before an incremental avgdl re-fit carry maxTfNorm
     // under the old (possibly smaller) avgdl — scale bounds to stay valid
     val boundScale =
       if (stats.minBlockAvgdl > 0) math.max(1.0, avgdl / stats.minBlockAvgdl) else 1.0
-
-    val blocks = blockScan(spark, paths, stats.nTermBuckets, liveTerms) match {
-      case Some(ds) => ds
-      case None => return Nil
-    }
-    val perShard = blocks.groupByKey(_.shard).mapGroups { (_, it) =>
-      // Single streaming pass over the group: group blocks by term as they
-      // arrive instead of it.toIndexedSeq + groupBy (which held two copies
-      // of every block row of the shard in one heap). Per-shard memory is
-      // additionally bounded at build time: nDocShards auto-scales so a
-      // shard never exceeds ~250k docs (BuildConfig.resolveDocShards).
-      val byTerm = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[BlockRow]]
-      it.foreach { r =>
-        byTerm.getOrElseUpdate(r.term,
-          scala.collection.mutable.ArrayBuffer.empty[BlockRow]) += r
-      }
-      wandShard(byTerm.view.mapValues(_.toIndexedSeq).toMap,
-        termOrder, weights, k, k1, b, avgdl, boundScale)
+    val buckets = liveTerms.map(IndexBuilder.termBucket(_, stats.nTermBuckets)).distinct
+    val blocksRoot = paths.blocks
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    val perShard = sc.parallelize(0 until stats.nDocShards, stats.nDocShards).map { shard =>
+      val (blocks, opened) =
+        BlockFiles.readShard(conf.value.value, blocksRoot, shard, buckets, liveTerms)
+      (wandShard(blocks, termOrder, weights, k, k1, b, avgdl, boundScale), opened)
     }.collect()
 
-    perShard.iterator.flatten.toSeq
-      .sortBy { case (doc, s) => (-s, doc) }
-      .take(k)
+    (perShard.iterator.flatMap(_._1).toSeq.sortBy { case (doc, s) => (-s, doc) }.take(k),
+      perShard.toSeq.flatMap(_._2))
   }
 }

@@ -53,6 +53,26 @@ class ResumableBuildSpec extends AnyFunSuite {
     assert(r1.results.nonEmpty)
   }
 
+  test("the chunk phase writes one chunks_raw file per bucket directory") {
+    val out = IndexPaths(java.nio.file.Files.createTempDirectory("graft-rawfiles").toString)
+    val pages = pagesA
+    assert(pages.rdd.getNumPartitions > 1, "setup: a multi-partition input")
+    ResumableBuild.run(spark, pages, out, build, chunker, resume)
+    val dirs = new java.io.File(ResumableBuild.chunksRawDir(out)).listFiles()
+      .filter(_.getName.startsWith("bucket="))
+    assert(dirs.length > 1, "setup: several bucket directories")
+    dirs.foreach { d =>
+      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"${d.getName} holds ${files.length} parquet files")
+    }
+    // the merged corpus is the chunker's output, deduped
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("chunkId", "source", "page", "chunkIdx", "text")
+        .as[(Long, String, Int, Int, String)].collect().sorted.toSeq
+    assert(rows(spark.read.parquet(out.chunks)) ==
+      rows(ChunkerJob.dedup(ChunkerJob.chunk(pages, chunker)).toDF()))
+  }
+
   test("chunker-config change invalidates checkpoints") {
     val dir = java.nio.file.Files.createTempDirectory("graft-inval").toString
     val out = IndexPaths(dir)

@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.JobCount
+import org.apache.spark.{JobCount, JobTasks}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions.{asc, desc}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import graft.analysis.Analyzer
-import graft.index.{BuildConfig, IndexBuilder, IndexPaths}
+import graft.corpus.{ChunkerConfig, PageDoc}
+import graft.index.{BuildConfig, IndexBuilder, IndexPaths, ResumableBuild, TableIO}
 import graft.query.{LocalBackend, Pipeline, PipelineConfig, SparkBackend, Wand}
 
 /** End-to-end parity of the DISTRIBUTED engine (index build + Spark-backed
@@ -109,29 +111,96 @@ class SparkIndexParitySpec extends AnyFunSuite {
     }
   }
 
-  test("WAND runs two Spark jobs and reads only the live terms' bucket directories") {
+  test("WAND runs one Spark job and reads only the live buckets' directories") {
     val q = multiBucketQuery
-    val live = liveTerms(q)
-    val liveBuckets = live.map(bucketOf).toSet
+    val liveBuckets = liveTerms(q).map(bucketOf).toSet
     val warm = Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor)
-    // the shard shuffle's map and result jobs only: no listing job and no
-    // schema-inference job over the block table's footers
-    val (again, jobs) = JobCount(spark.sparkContext) {
-      Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor)
+    // one task per doc shard: no listing, schema-inference or shuffle job
+    val ((again, opened), jobs) = JobCount(spark.sparkContext) {
+      Wand.topKReading(spark, paths, backend.stats, q, 10, backend.idfFor)
     }
     assert(again == warm)
-    assert(jobs == 2, s"'$q' ran $jobs Spark jobs")
-    val files = Wand.blockScan(spark, paths, backend.stats.nTermBuckets, live)
-      .getOrElse(fail("live buckets have no directories")).inputFiles
-    val blocksDir = new java.io.File(paths.blocks).getCanonicalPath
-    assert(files.nonEmpty)
-    files.foreach { f =>
-      val file = new java.io.File(new java.net.URI(f)).getCanonicalFile
-      val bucketDir = file.getParentFile.getParentFile
-      assert(bucketDir.getParent == blocksDir, f)
-      assert(liveBuckets.map(b => s"bucket=$b").contains(bucketDir.getName),
-        s"$f is outside the live buckets $liveBuckets")
+    assert(jobs == 1, s"'$q' ran $jobs Spark jobs")
+    // the tasks open every data file of the live buckets' directories, and
+    // no other file
+    val blocksDir = new java.io.File(paths.blocks).getCanonicalFile
+    val liveFiles = liveBuckets.flatMap { b =>
+      FileUtils.listFiles(new java.io.File(blocksDir, s"bucket=$b"), Array("parquet"), true)
+        .asScala.map(_.getCanonicalPath)
     }
+    assert(liveFiles.nonEmpty)
+    val openedFiles = opened.map { case (f, _) =>
+      new java.io.File(new java.net.URI(f)).getCanonicalPath }
+    assert(openedFiles.toSet == liveFiles, s"opened $openedFiles, live buckets $liveBuckets")
+    assert(openedFiles.distinct.length == openedFiles.length)
+  }
+
+  test("WAND = scoresDF top-k, one job of nDocShards tasks, across shard layouts") {
+    import spark.implicits._
+    val k1 = corpus.get("k1").asDouble(); val b = corpus.get("b").asDouble()
+    def check(p: IndexPaths, layout: String): Unit = {
+      val be = new SparkBackend(spark, p)
+      try for (q <- wandQueries) {
+        val toks = Analyzer.tokenize(q).toIndexedSeq
+        be.idfFor(toks) // the term-stats lookup job runs outside the count
+        val (wand, tasks) = JobTasks(spark.sparkContext) {
+          Wand.topK(spark, p, be.stats, q, 10, be.idfFor)
+        }
+        assert(tasks == Seq(be.stats.nDocShards), s"$layout '$q': tasks per job $tasks")
+        val exactTop = be.scoresDF(toks).orderBy(desc("score"), asc("chunkId"))
+          .limit(10).as[(Long, Double)].collect().toSeq
+        assert(wand.map(_._1) == exactTop.map(_._1), s"$layout '$q': $wand vs $exactTop")
+        wand.zip(exactTop).foreach { case ((_, gs), (_, es)) =>
+          assert(math.abs(gs - es) < 1e-9, s"$layout '$q' score: $gs vs $es")
+        }
+      } finally be.close()
+    }
+    for (n <- Seq(1, 3, 8)) {
+      val p = IndexPaths(java.nio.file.Files.createTempDirectory(s"graft-shards$n").toString)
+      IndexBuilder.build(spark, spark.createDataset(Goldens.chunks), p,
+        BuildConfig(k1 = k1, b = b, nTermBuckets = 8, nDocShards = n, shufflePartitions = 8))
+      check(p, s"$n shards")
+    }
+    // an incremental update rewrites the affected shards' directories
+    val pages = corpus.get("pages").elements().asScala.toList.map { pg =>
+      PageDoc(pg.get("source").asText(), pg.get("page").asInt(), pg.get("text").asText(), None)
+    }
+    val p = IndexPaths(java.nio.file.Files.createTempDirectory("graft-shardsincr").toString)
+    val cfg = BuildConfig(k1 = k1, b = b, nTermBuckets = 8, nDocShards = 8, shufflePartitions = 8)
+    val chunker = ChunkerConfig(qualityCheck = false)
+    val resume = ResumableBuild.ResumeConfig(nInputBuckets = 4)
+    ResumableBuild.run(spark, spark.createDataset(pages), p, cfg, chunker, resume)
+    val url = pages.head.url
+    val updated = pages.map(pg =>
+      if (pg.url == url) pg.copy(text = pg.text + " incremental parity sentinel") else pg)
+    ResumableBuild.incrementalUpdate(spark, spark.createDataset(updated),
+      Seq(url).toDF("url"), p, cfg, chunker, resume)
+    assert(TableIO.readManifest(p.manifest).exists(_.contains("incremental_shards")),
+      "expected the shard-grain incremental path, not a full rebuild")
+    check(p, "after an incremental update")
+  }
+
+  test("close uncaches the chunk table; a later backend serves the same top-k") {
+    val copy = java.nio.file.Files.createTempDirectory("graft-close").toFile
+    FileUtils.copyDirectory(new java.io.File(paths.root), copy)
+    val p = IndexPaths(copy.getPath)
+    def cached: Boolean = spark.read.parquet(p.chunks).storageLevel != StorageLevel.NONE
+    val q = "machine learning algorithms"
+    val first = new SparkBackend(spark, p)
+    val search = Pipeline.searchTopK(first, q, PipelineConfig())
+    val wand = Wand.topK(spark, p, first.stats, q, 10, first.idfFor)
+    assert(cached)
+    first.close()
+    assert(!cached, "the closed backend's chunk table is still cached")
+    first.close() // idempotent
+    assert(!cached)
+    val second = new SparkBackend(spark, p)
+    try {
+      assert(cached)
+      assert(Pipeline.searchTopK(second, q, PipelineConfig()).results == search.results)
+      assert(Wand.topK(spark, p, second.stats, q, 10, second.idfFor) == wand)
+    } finally second.close()
+    assert(!cached)
   }
 
   test("WAND skips a live term's missing bucket directory") {

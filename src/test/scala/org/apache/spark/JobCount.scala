@@ -1,7 +1,8 @@
 package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Counts the Spark jobs a block of code runs. Lives in the
   * `org.apache.spark` package only to reach `listenerBus.waitUntilEmpty`,
@@ -20,6 +21,31 @@ object JobCount {
       val out = body
       sc.listenerBus.waitUntilEmpty()
       (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** The tasks each Spark job of a block of code ran, in job order, counted
+  * from the task-end events of the job's stages.
+  */
+object JobTasks {
+  def apply[T](sc: SparkContext)(body: => T): (T, Seq[Int]) = {
+    sc.listenerBus.waitUntilEmpty()
+    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val tasks = new java.util.concurrent.ConcurrentSkipListMap[Int, AtomicInteger]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        tasks.put(e.jobId, new AtomicInteger)
+        e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        tasks.get(jobOfStage.get(e.stageId)).incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.listenerBus.waitUntilEmpty()
+      (out, tasks.values.asScala.map(_.get).toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
