@@ -26,7 +26,10 @@ object SparkEntry {
     * before a single row moved. Re-registering an identical view is pure
     * metadata churn, so both are memoized per (session, path); every query
     * still scans the parquet itself (lazy plans — no data or results are
-    * cached). WeakHashMap keyed on the session: stopped sessions drop out.
+    * cached). The map is weak on its session key, but each cached DataFrame
+    * strongly references that same session, so no entry is ever collected:
+    * entries live as long as the JVM, one per session and table, stopped
+    * sessions included.
     */
   private val tableReg = new java.util.WeakHashMap[
     SparkSession, java.util.concurrent.ConcurrentHashMap[String, AnyRef]]()
@@ -223,43 +226,47 @@ object SparkEntry {
   /** Spark re-evaluates CTEs per consumer; the BM25 family (tf/df/idf/
     * stats over documents) shares one checkpointed set of views per sfDir.
     * Semantics identical to the inline CTEs the DuckDB oracles use.
-    */
-  private val bm25Prepared = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-  /** Returns the corpus avgdl (read once per dir off the checkpointed
-    * stats view, embedded as a constant-folded literal by
-    * [[bm25ScoresViewSql]] — saves the per-query scalar-subquery job).
+    *
+    * Returns the corpus avgdl (read once off the checkpointed stats view,
+    * embedded as a constant-folded literal by [[bm25ScoresViewSql]] — saves
+    * the per-query scalar-subquery job). The views are temp views of
+    * `spark`, so the memo is a slot in that session's registry holding the
+    * dir its views were built over: a new session, or another dir in this
+    * one, builds them again.
     */
   private def prepareBm25Views(spark: SparkSession, dir: String): Double = {
     views(spark, dir, "documents")
-    bm25Prepared.computeIfAbsent(dir, _ => {
-      val toks = spark.sql(
-        s"SELECT doc_id, ${Sql.tokensSpark("text")} AS tk FROM documents")
-        .localCheckpoint(true)
-      toks.createOrReplaceTempView("graft_toks")
-      spark.sql("SELECT doc_id, size(tk) AS dl FROM graft_toks")
-        .createOrReplaceTempView("graft_lens")
-      spark.sql("""SELECT count(*) AS n, CAST(sum(size(tk)) AS DOUBLE)/count(*) AS avgdl
-                   FROM graft_toks""").localCheckpoint(true)
-        .createOrReplaceTempView("graft_stats")
-      // dl denormalized onto the tf view (dl is constant per doc_id, so
-      // grouping by it changes nothing): the per-query scores computation
-      // then needs no lens join — one fewer broadcast join in every timed
-      // BM25-family query (guide §2.4)
-      val tf = spark.sql(
-        """SELECT doc_id, term, count(*) AS tf, dl
-           FROM (SELECT doc_id, size(tk) AS dl, explode(tk) AS term FROM graft_toks)
-           GROUP BY doc_id, term, dl""").localCheckpoint(true)
-      tf.createOrReplaceTempView("graft_tf")
-      spark.sql(
-        """WITH df AS (SELECT term, count(*) AS df FROM graft_tf GROUP BY term),
-           rawidf AS (SELECT term, df,
-             ln((SELECT n FROM graft_stats) - df + 0.5) - ln(df + 0.5) AS idf FROM df),
-           eps AS (SELECT 0.25 * avg(idf) AS eps FROM rawidf)
-           SELECT term, df, CASE WHEN idf < 0 THEN (SELECT eps FROM eps) ELSE idf END AS idf
-           FROM rawidf""").localCheckpoint(true)
-        .createOrReplaceTempView("graft_idf")
-      spark.sql("SELECT avgdl FROM graft_stats").head().getDouble(0)
-    })
+    regFor(spark).compute("bm25", (_, cur) => cur match {
+      case prepared @ (`dir`, _) => prepared
+      case _ =>
+        val toks = spark.sql(
+          s"SELECT doc_id, ${Sql.tokensSpark("text")} AS tk FROM documents")
+          .localCheckpoint(true)
+        toks.createOrReplaceTempView("graft_toks")
+        spark.sql("SELECT doc_id, size(tk) AS dl FROM graft_toks")
+          .createOrReplaceTempView("graft_lens")
+        spark.sql("""SELECT count(*) AS n, CAST(sum(size(tk)) AS DOUBLE)/count(*) AS avgdl
+                     FROM graft_toks""").localCheckpoint(true)
+          .createOrReplaceTempView("graft_stats")
+        // dl denormalized onto the tf view (dl is constant per doc_id, so
+        // grouping by it changes nothing): the per-query scores computation
+        // then needs no lens join — one fewer broadcast join in every timed
+        // BM25-family query (guide §2.4)
+        val tf = spark.sql(
+          """SELECT doc_id, term, count(*) AS tf, dl
+             FROM (SELECT doc_id, size(tk) AS dl, explode(tk) AS term FROM graft_toks)
+             GROUP BY doc_id, term, dl""").localCheckpoint(true)
+        tf.createOrReplaceTempView("graft_tf")
+        spark.sql(
+          """WITH df AS (SELECT term, count(*) AS df FROM graft_tf GROUP BY term),
+             rawidf AS (SELECT term, df,
+               ln((SELECT n FROM graft_stats) - df + 0.5) - ln(df + 0.5) AS idf FROM df),
+             eps AS (SELECT 0.25 * avg(idf) AS eps FROM rawidf)
+             SELECT term, df, CASE WHEN idf < 0 THEN (SELECT eps FROM eps) ELSE idf END AS idf
+             FROM rawidf""").localCheckpoint(true)
+          .createOrReplaceTempView("graft_idf")
+        (dir, spark.sql("SELECT avgdl FROM graft_stats").head().getDouble(0))
+    }).asInstanceOf[(String, Double)]._2
   }
 
   // the VALUES frame only ever FILTERED tf (terms are distinct on both

@@ -216,15 +216,12 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     val slack = 1e-6
     var m = math.max(4 * poolSize, poolSize + 200)
     val mCap = 64 * poolSize
-    var iters = 0
     // WAND's candidate order is a deterministic total order, so top-4m is
     // a superset of top-m: across retry rounds only the NEW candidates need
     // the chunk fetch + exact re-score + driver bonus pass (the difflib
     // fuzzy term dominates); previous rounds' scores are exact and reusable.
     val scoredCache = scala.collection.mutable.HashMap.empty[Long, (ChunkRow, Double)]
     while (m <= mCap) {
-      iters += 1
-      lastPoolIters = iters
       val cand = Wand.topK(spark, paths, stats, bm25Query, m, idfFor)
       if (cand.isEmpty) return None
       val exhausted = cand.length < m // all matched docs are candidates
@@ -253,9 +250,6 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     }
     None
   }
-
-  /** Diagnostics: bounded-pool iterations of the last topPool call. */
-  @volatile var lastPoolIters: Int = 0
 
   /** Bonus-score the candidates in parallel on the driver (pure function
     * per row; the difflib fuzzy pass dominates for long queries) into the
