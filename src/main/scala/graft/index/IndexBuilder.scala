@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import graft.analysis.Analyzer
@@ -564,12 +564,14 @@ object IndexBuilder {
   def loadStats(spark: SparkSession, out: IndexPaths): GlobalStats = {
     import spark.implicits._
     // the layout tag is the newest stats column: an index without it
-    // (pre-r5) or tagged "vbyte" holds VByte blocks, which no longer
-    // decode — refuse it (ResumableBuild then takes a full build)
-    Some(spark.read.parquet(out.globalStats))
-      .filter(_.columns.contains("postingCodec"))
-      .map(_.as[GlobalStats].head())
-      .filter(_.postingCodec == Codec.For)
+    // (pre-r5, read as null) or tagged "vbyte" holds VByte blocks, which
+    // no longer decode — refuse it (ResumableBuild then takes a full
+    // build). The tag is filtered on before any other field is decoded;
+    // the encoder's schema spares a schema-inference job, so the read is
+    // one job.
+    spark.read.schema(Encoders.product[GlobalStats].schema).parquet(out.globalStats)
+      .filter(col("postingCodec") === Codec.For)
+      .as[GlobalStats].head(1).headOption
       .getOrElse(throw new IllegalStateException(
         s"index at ${out.root} holds VByte posting blocks, which are no " +
           "longer read: a full rebuild is required"))

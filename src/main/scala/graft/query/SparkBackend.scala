@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.{Analyzer, Scoring}
 import graft.corpus.ChunkRow
@@ -36,8 +36,9 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
   // (scoring over all chunks, reference semantics), so keep it cached
   // until close(); postings stay on parquet where term-bucket partition
   // pruning does the work. The DF keeps the precomputed static-bonus
-  // columns. The fixed term-stats schema skips a schema-inference job.
-  private val chunksRawDF = spark.read.parquet(paths.chunks)
+  // columns. The fixed chunk and term-stats schemas skip a
+  // schema-inference job each.
+  private val chunksRawDF = spark.read.schema(SparkBackend.ChunkSchema).parquet(paths.chunks)
     .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   private lazy val blocksDF = spark.read.parquet(paths.blocks) // scoresDF only
   private val termStatsDF = spark.read
@@ -268,31 +269,17 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     out.foreach { case (c, s) => into(c.chunkId) = (c, s) }
   }
 
-  // chunk-bucket partition pruning for candidate fetches. The bucket COUNT
-  // comes from the recorded build stats — deriving it from max(cbucket)+1
-  // is wrong whenever the highest buckets happen to be empty (the modulus
-  // would shrink and candidate fetches would prune the WRONG partitions);
-  // the max+1 probe survives only as back-compat for pre-r5 indexes that
-  // predate the stats column.
-  private val chunkBucketed = chunksRawDF.columns.contains("cbucket")
-  private val nChunkBuckets =
-    if (!chunkBucketed) 0
-    else if (stats.nChunkBuckets > 0) stats.nChunkBuckets
-    else chunksRawDF.select(max(col("cbucket"))).head().getInt(0) + 1
-
   /** Candidate rows + their precomputed static bonuses (pattern, meta, gib)
-    * from the cached chunk table; with a bucketed chunk table the scan is
-    * pruned to the candidates' partitions (the corpus-sublinear path).
+    * from the cached chunk table, the scan pruned to the candidates'
+    * cbucket partitions (the corpus-sublinear path). The bucket count is
+    * the recorded build stat: every index loadStats accepts is
+    * cbucket-partitioned with at least nDocShards buckets.
     */
   private def fetchChunks(ids: Seq[Long])
       : IndexedSeq[(ChunkRow, (Double, Double, Double))] = {
-    val base =
-      if (chunkBucketed) {
-        val buckets = ids.map(IndexBuilder.chunkBucket(_, nChunkBuckets)).distinct
-        chunksRawDF.filter(col("cbucket").isin(buckets: _*))
-      } else chunksRawDF
-    base
-      .filter(col("chunkId").isin(ids: _*))
+    val buckets = ids.map(IndexBuilder.chunkBucket(_, stats.nChunkBuckets)).distinct
+    chunksRawDF
+      .filter(col("cbucket").isin(buckets: _*) && col("chunkId").isin(ids: _*))
       .select(col("chunkId"), col("docId"), col("source"), col("page"),
         col("chunkIdx"), col("text"), col("meta"),
         col("pattern_b"), col("meta_b"), col("gib"))
@@ -303,16 +290,6 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
         (ChunkRow(id, docId, source, page, idx, text, meta), (pb, mb, gib))
       }.toIndexedSeq
   }
-
-  /** Diagnostics: the last dense pass's frame. The plan string is derived
-    * lazily (`lastDensePlan`) — eagerly stringifying `sparkPlan` here would
-    * run a second full Catalyst planning pass per dense pool call on the
-    * hot path. Every dense pass overwrites it, so resetting it to null
-    * tells whether a later call ran one.
-    */
-  @volatile private[graft] var lastDenseDF: DataFrame = _
-  def lastDensePlan: String =
-    if (lastDenseDF == null) "" else lastDenseDF.queryExecution.sparkPlan.toString
 
   /** Reference-exact dense pass: base BM25 plus bonuses on every chunk,
     * distributed top-k. One narrow map over the cached chunk table: each
@@ -327,12 +304,11 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     val bonusUdf = udf { (text: String, patternB: Double, metaB: Double, gib: Double) =>
       ctx.score(st.scoreText(bmTokens, text), text, patternB, metaB, gib)
     }
-    val scored = chunksRawDF
+    chunksRawDF
       .withColumn("bscore", bonusUdf(col("text"), col("pattern_b"), col("meta_b"), col("gib")))
       .orderBy(desc("bscore"), asc("source"), asc("page"), asc("chunkIdx"))
       .limit(poolSize)
-    lastDenseDF = scored
-    scored.select(col("chunkId"), col("docId"), col("source"), col("page"),
+      .select(col("chunkId"), col("docId"), col("source"), col("page"),
         col("chunkIdx"), col("text"), col("meta"), col("bscore"))
       .as[(Long, Long, String, Int, Int, String, graft.corpus.ChunkMeta, Double)]
       .collect()
@@ -381,4 +357,13 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
       .limit(fbDocs)
       .select("text").as[String].collect().toSeq
   }
+}
+
+object SparkBackend {
+  /** The chunk-table columns a backend serves from: the chunk, its static
+    * bonuses and its cbucket partition.
+    */
+  private[graft] val ChunkSchema = Encoders.product[ChunkRow].schema
+    .add("pattern_b", "double").add("meta_b", "double").add("gib", "double")
+    .add("cbucket", "int")
 }

@@ -1,22 +1,21 @@
 package graft.spark
 
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
 import graft.corpus.{ChunkMeta, ChunkRow}
 import graft.index.{BuildConfig, IndexBuilder, IndexPaths}
 import graft.query.SparkBackend
 
-/** Builds (once per sfDir, cached) a real inverted index over the
-  * `documents` testdata table — each document row is one chunk — so the
-  * engine-path queries (q_search_topk, q_wand_topk) run against persisted
-  * postings exactly like the web corpus does.
+/** Builds (once per session and sfDir, kept in the session's
+  * [[SessionMemo]]) a real inverted index over the `documents` testdata
+  * table — each document row is one chunk — so the engine-path queries
+  * (q_search_topk, q_wand_topk) run against persisted postings exactly
+  * like the web corpus does.
   */
 object DocIndex {
   val TermBuckets = 8
-  private val cache = new ConcurrentHashMap[String, (IndexPaths, SparkBackend)]()
 
   def backendFor(spark: SparkSession, dir: String): (IndexPaths, SparkBackend) =
-    cache.computeIfAbsent(dir, _ => {
+    SessionMemo.getOrPut(spark, s"docindex:$dir") {
       import spark.implicits._
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text", "source")
@@ -31,5 +30,5 @@ object DocIndex {
         BuildConfig(nTermBuckets = TermBuckets, nDocShards = 0,
           shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "8").toInt))
       (paths, new SparkBackend(spark, paths))
-    })
+    }
 }

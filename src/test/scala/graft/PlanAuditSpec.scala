@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.ExecutedPlans
+import org.apache.spark.sql.execution.{FilterExec, GlobalLimitExec, ProjectExec, SortExec,
+  SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{BuildConfig, IndexBuilder, IndexPaths}
 import graft.query.SparkBackend
@@ -48,12 +53,36 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("dense top-k plans TakeOrderedAndProject, not a global sort") {
     val q = "machine learning algorithms"
-    backend.topPool(q, q, 20, graft.query.PipelineConfig(densePoolOnly = true))
-    val plan = backend.lastDensePlan
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"top-k is not TakeOrderedAndProject:\n$plan")
-    assert(!plan.linesIterator.exists(l => l.trim.startsWith("Sort ") ||
-      l.contains("+- Sort [")), s"global sort planned for a limit query:\n$plan")
+    val (_, plans) = ExecutedPlans(spark)(
+      backend.topPool(q, q, 20, graft.query.PipelineConfig(densePoolOnly = true)))
+    val dense = plans.map(_.toString).filter(_.contains(paths.chunks))
+    assert(dense.nonEmpty, "no dense pass captured")
+    for (plan <- dense) {
+      assert(plan.contains("TakeOrderedAndProject"),
+        s"top-k is not TakeOrderedAndProject:\n$plan")
+      assert(!plan.linesIterator.exists(l => l.trim.startsWith("Sort ") ||
+        l.contains("+- Sort [")), s"global sort planned for a limit query:\n$plan")
+    }
+  }
+
+  test("q_rrf_fusion numbers only the top 200 rows of each run") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-docs").toString
+    Goldens.chunks.map(c => (c.chunkId, c.text, c.source)).toDF("doc_id", "text", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    // a window's input is bounded when, below the row-preserving operators
+    // on its side, the first operator is a limit of 200
+    def limited(p: SparkPlan): Boolean = p match {
+      case t: TakeOrderedAndProjectExec => t.limit == 200
+      case l: GlobalLimitExec => l.limit == 200
+      case _: ProjectExec | _: SortExec | _: FilterExec | _: ShuffleExchangeExec =>
+        limited(p.children.head)
+      case _ => false
+    }
+    val plan = SparkEntry.queries("q_rrf_fusion")(spark, dir).queryExecution.sparkPlan
+    val windows = plan.collect { case w: WindowExec => w }
+    assert(windows.length == 2, s"expected one window per run:\n$plan")
+    for (w <- windows) assert(limited(w.child), s"window over unbounded input:\n$w")
   }
 
   test("biblio enrichment joins broadcast the dimension side") {

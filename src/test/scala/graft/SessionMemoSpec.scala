@@ -1,0 +1,125 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Row, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.corpus.{ChunkerConfig, PageDoc, WebPages}
+import graft.index.{BuildConfig, EmbeddingTable, IndexPaths, ResumableBuild}
+import graft.query.EmbeddingProvider
+import graft.spark.{DocIndex, SessionMemo}
+
+/** Engine state lives in one per-session registry (`SessionMemo`): a
+  * session reuses its own doc index and ANN preselector, a new session
+  * builds its own and answers the same, and a stopped session leaves the
+  * registry.
+  */
+class SessionMemoSpec extends AnyFunSuite {
+
+  private lazy val spark = SparkTestSession.spark
+  private lazy val other = spark.newSession()
+
+  /** An sf dir whose `documents` texts carry the catalog query's terms. */
+  private lazy val dir: String = {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft-sessionmemo-docs").toString
+    val words = Seq("spark", "hash", "join", "scan", "merge", "sort", "window", "shuffle")
+    (1 to 60).map { i =>
+      (i.toLong, (0 until 12).map(j => words((i * 7 + j * 3) % words.length)).mkString(" "),
+        s"doc$i.pdf")
+    }.toDF("doc_id", "text", "source").write.parquet(s"$d/documents.parquet")
+    d
+  }
+
+  private object HashProvider extends EmbeddingProvider {
+    def embed(text: String): Option[Array[Float]] = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(text.getBytes("UTF-8"))
+      Some((0 until 8).map(j => (d(j).toInt / 128.0).toFloat).toArray)
+    }
+    def embedQuery(q: String): Option[Array[Float]] = embed(q)
+  }
+
+  private def rows(s: SparkSession, q: String): Seq[Row] =
+    SparkEntry.queries(q)(s, dir).collect().toSeq
+
+  test("DocIndex.backendFor and annFor keep one instance per session") {
+    val (_, backend) = DocIndex.backendFor(spark, dir)
+    assert(DocIndex.backendFor(spark, dir)._2 eq backend, "second call in the same session")
+    assert(!(DocIndex.backendFor(other, dir)._2 eq backend), "call in a new session")
+
+    import spark.implicits._
+    val out = IndexPaths(Files.createTempDirectory("graft-sessionmemo").toString)
+    ResumableBuild.run(spark,
+      WebPages.generate(spark, 60, seed = 7, partitions = 4)
+        .map(p => PageDoc(p.url, 1, p.text, None)),
+      out, BuildConfig(nTermBuckets = 8, nDocShards = 2, shufflePartitions = 8),
+      ChunkerConfig(qualityCheck = false), ResumableBuild.ResumeConfig(nInputBuckets = 4))
+    val ann = EmbeddingTable.annFor(spark, out, HashProvider)
+    assert(EmbeddingTable.annFor(spark, out, HashProvider) eq ann, "second call in the same session")
+    assert(!(EmbeddingTable.annFor(other, out, HashProvider) eq ann), "call in a new session")
+  }
+
+  test("q_search_topk, q_search_confidence and q_wand_topk return equal rows in a newSession()") {
+    for (q <- Seq("q_search_topk", "q_search_confidence", "q_wand_topk")) {
+      val first = rows(spark, q)
+      assert(first.nonEmpty, q)
+      assert(rows(spark, q) == first, s"$q: second call in the same session")
+      assert(rows(other, q) == first, s"$q: call in a new session")
+    }
+  }
+
+  test("a stopped session leaves the registry (child JVM)") {
+    // the child stops its own SparkContext, which the suite's shared
+    // session must not do; it gets the test classpath and the module
+    // opens, and a small heap instead of the suite's pre-touched one
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toList
+    val addOpens = jvmArgs.filter(_.startsWith("--add-opens=")) ++
+      jvmArgs.sliding(2).collect { case List("--add-opens", v) => s"--add-opens=$v" }
+    assert(addOpens.nonEmpty, s"no --add-opens among $jvmArgs")
+    val log = Files.createTempFile("graft-sessionmemo-child", ".log").toFile
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), "graft.SessionMemoChild")
+    val child = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log).start()
+    val done = child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
+    if (!done) child.destroyForcibly()
+    val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
+    assert(done && child.exitValue() == 0, s"child failed:\n$out")
+    assert(out.contains("first session held: false") && out.contains("second session held: true"), out)
+  }
+
+  test("src/main declares no memo map outside SessionMemo") {
+    val main = Paths.get("src/main")
+    assert(Files.isDirectory(main), s"run from the project root: ${main.toAbsolutePath}")
+    val memo = "\\b(ConcurrentHashMap|AtomicReference|WeakHashMap)\\b".r
+    val walk = Files.walk(main)
+    val offenders = try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "SessionMemo.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if memo.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally walk.close()
+    assert(offenders.isEmpty, s"engine state belongs in SessionMemo:\n${offenders.mkString("\n")}")
+  }
+}
+
+/** Child JVM of the lifetime test: stops one session, starts a second,
+  * touches the registry and reports which session it still holds.
+  */
+object SessionMemoChild {
+  def main(args: Array[String]): Unit = {
+    def session() = SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    val first = session()
+    SessionMemo(first).put("probe", "first")
+    first.stop()
+    val second = session()
+    SessionMemo(second).put("probe", "second")
+    println(s"first session held: ${SessionMemo.holds(first)}")
+    println(s"second session held: ${SessionMemo.holds(second)}")
+    second.stop()
+  }
+}

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.JobCount
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.{ExecutedPlans, JobCount}
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.{Analyzer, Scoring}
 import graft.corpus.{ChunkRow, ChunkerConfig, ChunkerJob, PageDoc, WebPages}
@@ -28,6 +27,12 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
       BuildConfig(nTermBuckets = 8, nDocShards = 2, shufflePartitions = 8))
     (p, new SparkBackend(spark, p))
   }
+
+  /** The captured plans that rank the chunk table at `chunks` with a
+    * TakeOrderedAndProject: the dense passes (pool or RM3 feedback).
+    */
+  private def densePasses(plans: Seq[SparkPlan], chunks: String): Seq[String] =
+    plans.map(_.toString).filter(p => p.contains("TakeOrderedAndProject") && p.contains(chunks))
 
   private val queries = Seq(
     "machine learning algorithms",
@@ -69,10 +74,11 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
 
   test("head-term dense pass plans no join and equals the dense reference pool") {
     val q = s"$headTerm learning"
-    val pool = backend.topPool(q, q, 20, PipelineConfig())
+    val (pool, plans) = ExecutedPlans(spark)(backend.topPool(q, q, 20, PipelineConfig()))
     assert(backend.lastPoolPath == "dense") // head term skipped bounded path
-    val plan = backend.lastDensePlan
-    for (join <- Seq("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin"))
+    val dense = densePasses(plans, paths.chunks)
+    assert(dense.nonEmpty, s"no dense pass captured:\n${plans.mkString("\n")}")
+    for (plan <- dense; join <- Seq("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin"))
       assert(!plan.contains(join), s"dense pass plans a $join:\n$plan")
     // reference semantics (main.py:133-174, as LocalBackend): a dense base
     // array over the corpus in its canonical order, bonuses recomputed from
@@ -98,40 +104,29 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
     val cfg = PipelineConfig(densePoolOnly = true)
     val warmPool = backend.topPool(q, q, 20, cfg)
     val warmFb = backend.topDocsForRm3(toks, 10)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized(plans += qe.executedPlan.toString)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    for ((name, call, warm) <- Seq[(String, () => Any, Any)](
+           ("dense pool", () => backend.topPool(q, q, 20, cfg), warmPool),
+           ("RM3 feedback", () => backend.topDocsForRm3(toks, 10), warmFb))) {
+      val ((again, jobs), plans) = ExecutedPlans(spark)(JobCount(spark.sparkContext)(call()))
+      assert(again == warm, name)
+      assert(jobs == 1, s"$name ran $jobs Spark jobs")
+      val seen = plans.map(_.toString)
+      assert(seen.nonEmpty, s"$name: no plan observed")
+      // the cached chunk table's scan shows in the plan, the blocks never
+      assert(seen.forall(_.contains(paths.chunks)), s"$name:\n${seen.mkString("\n")}")
+      assert(!seen.exists(_.contains(paths.blocks)), s"$name reads blocks:\n${seen.mkString("\n")}")
+      assert(!seen.exists(_.contains("Join")), s"$name plans a join:\n${seen.mkString("\n")}")
     }
-    spark.listenerManager.register(listener)
-    try {
-      for ((name, call, warm) <- Seq[(String, () => Any, Any)](
-             ("dense pool", () => backend.topPool(q, q, 20, cfg), warmPool),
-             ("RM3 feedback", () => backend.topDocsForRm3(toks, 10), warmFb))) {
-        plans.synchronized(plans.clear())
-        val (again, jobs) = JobCount(spark.sparkContext)(call())
-        assert(again == warm, name)
-        assert(jobs == 1, s"$name ran $jobs Spark jobs")
-        val seen = plans.synchronized(plans.toList)
-        assert(seen.nonEmpty, s"$name: no plan observed")
-        // the cached chunk table's scan shows in the plan, the blocks never
-        assert(seen.forall(_.contains(paths.chunks)), s"$name:\n${seen.mkString("\n")}")
-        assert(!seen.exists(_.contains(paths.blocks)), s"$name reads blocks:\n${seen.mkString("\n")}")
-      }
-    } finally spark.listenerManager.unregister(listener)
-    val plan = backend.lastDensePlan
-    assert(!plan.contains("Join"), s"dense plan has a join:\n$plan")
   }
 
   test("headTermWand serves a head-term query from WAND only — no dense pass, bounded deviation") {
     val q = s"$headTerm learning"
     val dense = backend.topPool(q, q, 50, PipelineConfig())
     assert(backend.lastPoolPath == "dense") // default mode: reference-exact
-    backend.lastDenseDF = null // sentinel: any dense pass would overwrite it
-    val wand = backend.topPool(q, q, 50, PipelineConfig(headTermWand = true))
+    val (wand, plans) = ExecutedPlans(spark)(
+      backend.topPool(q, q, 50, PipelineConfig(headTermWand = true)))
     assert(backend.lastPoolPath == "wand-headterm")
-    assert(backend.lastDensePlan == "",
+    assert(densePasses(plans, paths.chunks).isEmpty,
       "headTermWand mode executed the dense chunk-table pass")
     assert(wand.length == dense.length)
     // deviation bound: candidate selection ignored bonuses, so at every
@@ -155,16 +150,16 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
   test("q_wand_headterm's corpus routes the full headTermWand pool through WAND (driver scale)") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val (_, b) = graft.spark.DocIndex.backendFor(spark, dir)
+    val (p, b) = graft.spark.DocIndex.backendFor(spark, dir)
     val q = "scan merge sort window" // SparkEntryExtra.HeadQuery
     val toks = graft.analysis.Analyzer.tokenize(q).toSeq
     assert(b.dfFor(toks).values.sum > b.stats.nDocs / 2,
       "setup: the catalog head-term query must be head on the driver corpus")
-    b.lastDenseDF = null // sentinel: any dense chunk-table pass overwrites it
-    val pool = b.topPool(q, q, 50, PipelineConfig(headTermWand = true))
+    val (pool, plans) = ExecutedPlans(spark)(
+      b.topPool(q, q, 50, PipelineConfig(headTermWand = true)))
     assert(b.lastPoolPath == "wand-headterm",
       s"expected wand-headterm routing, got ${b.lastPoolPath}")
-    assert(b.lastDensePlan == "",
+    assert(densePasses(plans, p.chunks).isEmpty,
       "headTermWand mode executed the dense chunk-table pass — blocks-only plan violated")
     assert(pool.nonEmpty)
     // and the catalog entry itself (exact WAND top-20, oracle-matched in

@@ -111,6 +111,14 @@ class SparkIndexParitySpec extends AnyFunSuite {
     }
   }
 
+  test("opening a backend runs one Spark job") {
+    // fixed schemas for the chunk and term-stats tables, and global_stats
+    // read with its encoder's schema: the one job reads the stats row
+    val ix = paths
+    val (_, jobs) = JobCount(spark.sparkContext)(new SparkBackend(spark, ix))
+    assert(jobs == 1, s"backend open ran $jobs Spark jobs")
+  }
+
   test("WAND runs one Spark job and reads only the live buckets' directories") {
     val q = multiBucketQuery
     val liveBuckets = liveTerms(q).map(bucketOf).toSet
@@ -184,7 +192,9 @@ class SparkIndexParitySpec extends AnyFunSuite {
     val copy = java.nio.file.Files.createTempDirectory("graft-close").toFile
     FileUtils.copyDirectory(new java.io.File(paths.root), copy)
     val p = IndexPaths(copy.getPath)
-    def cached: Boolean = spark.read.parquet(p.chunks).storageLevel != StorageLevel.NONE
+    // the backend reads the chunk table with its fixed schema
+    def cached: Boolean =
+      spark.read.schema(SparkBackend.ChunkSchema).parquet(p.chunks).storageLevel != StorageLevel.NONE
     val q = "machine learning algorithms"
     val first = new SparkBackend(spark, p)
     val search = Pipeline.searchTopK(first, q, PipelineConfig())

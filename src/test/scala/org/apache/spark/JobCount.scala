@@ -3,6 +3,9 @@ package org.apache.spark
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Counts the Spark jobs a block of code runs. Lives in the
   * `org.apache.spark` package only to reach `listenerBus.waitUntilEmpty`,
@@ -47,5 +50,28 @@ object JobTasks {
       sc.listenerBus.waitUntilEmpty()
       (out, tasks.values.asScala.map(_.get).toSeq)
     } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** The executed plans of the SQL actions a block of code ran in `spark`'s
+  * session, in completion order. The listener bus is drained before and
+  * after the block, so every plan of the finished block is captured and
+  * none from before it.
+  */
+object ExecutedPlans {
+  def apply[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
+    val bus = spark.sparkContext.listenerBus
+    bus.waitUntilEmpty()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      bus.waitUntilEmpty()
+      (out, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
