@@ -30,12 +30,11 @@ case class GlobalStats(nDocs: Long, totalTokens: Long, avgdl: Double,
                          * with — the incremental path must reuse it (the
                          * shard hash function addresses existing dirs) */
                        nDocShards: Int,
-                       /** resolved chunk-bucket count the chunk table was
-                         * written with (0 = table not cbucket-partitioned).
-                         * Always a multiple of nDocShards, so `shard =
-                         * cbucket % nDocShards`: the incremental exchange
-                         * slice and the query-time candidate fetch both
-                         * prune cbucket DIRECTORIES instead of scanning
+                       /** chunk-bucket count the chunk table was written
+                         * with: one per doc shard, so `shard = cbucket %
+                         * nDocShards`. The incremental exchange slice and
+                         * the query-time candidate fetch both prune cbucket
+                         * DIRECTORIES instead of scanning
                          * corpus-proportional rows. */
                        nChunkBuckets: Int,
                        /** minimum avgdl any LIVE block was built with. An
@@ -57,27 +56,17 @@ case class GlobalStats(nDocs: Long, totalTokens: Long, avgdl: Double,
 case class BuildConfig(
     k1: Double = 1.4,
     b: Double = 0.75,
-    epsilon: Double = 0.25,
     nTermBuckets: Int = 32,
     /** doc-hash salt shards per term (head-term skew + WAND parallelism).
       * 0 = auto: scale with corpus size so one shard never exceeds ~250k
       * docs — WAND parallelism must grow with the corpus, a fixed count
-      * would cap query-time concurrency at 10^12 docs.
+      * would cap query-time concurrency at 10^12 docs. The chunk table is
+      * hash-partitioned on chunkId into one `cbucket` per resolved shard
+      * (`shard = cbucket % nShards`): the bounded pool's candidate fetch
+      * and the incremental exchange slice prune cbucket directories
+      * instead of scanning the corpus.
       */
     nDocShards: Int = 0,
-    blockSize: Int = Codec.DefaultBlockSize,
-    /** chunk-table hash partitions on chunkId (0 = auto: one per resolved
-      * doc shard). With buckets the bounded pool's candidate fetch prunes
-      * to the candidates' partitions instead of scanning the corpus —
-      * required at 10^12 chunks, where even a cached full scan per query
-      * is a scale-killer — and, because the count is validated as a
-      * MULTIPLE of the doc-shard count (`shard = cbucket % nShards`), the
-      * incremental exchange slice fetches the affected shards' chunks by
-      * cbucket partition pruning instead of a corpus-proportional text
-      * scan. Costs one extra clustering shuffle of the chunk table at
-      * build time.
-      */
-    nChunkBuckets: Int = 0,
     /** chunk-table url-hash partitions (0 = off). With them the
       * INCREMENTAL chunk-table rewrite touches only the url-buckets whose
       * chunks changed (dynamic-partition overwrite) instead of re-running
@@ -91,31 +80,26 @@ case class BuildConfig(
     nUrlBuckets: Int = 0,
     shufflePartitions: Int = 32) {
   /** Ends with the block layout tag, so an index written with another
-    * layout never matches and takes a full build.
+    * layout never matches and takes a full build. The idf floor, the block
+    * size and the chunk-bucket count (the `0`: one bucket per doc shard)
+    * are fixed; they are written into the hash as constants, so the hash
+    * of a config is the one it had when they were fields.
     */
   def configHash: String =
-    Analyzer.md5Hex(
-      s"$k1|$b|$epsilon|$nTermBuckets|$nDocShards|$blockSize|$nUrlBuckets|$nChunkBuckets|${Codec.For}")
+    Analyzer.md5Hex(s"$k1|$b|${BuildConfig.Epsilon}|$nTermBuckets|$nDocShards|" +
+      s"${Codec.DefaultBlockSize}|$nUrlBuckets|0|${Codec.For}")
 
   def resolveDocShards(nDocs: Long): Int =
     if (nDocShards > 0) nDocShards
     else math.min(4096L, math.max(4L, nDocs / 250000L + 1L)).toInt
-
-  /** Resolved chunk-bucket count: defaults to the doc-shard grain, and an
-    * explicit value is treated as a MINIMUM rounded UP to the next
-    * multiple of the resolved shard count — the alignment that makes
-    * `shard = cbucket % nShards` hold, so the incremental exchange slice
-    * prunes cbucket directories instead of scanning the corpus. Rounding
-    * (not a hard require) because the shard count is corpus-derived when
-    * nDocShards = 0: a fixed explicit bucket count must not start
-    * crashing builds the day the corpus grows past a shard boundary.
-    */
-  def resolveChunkBuckets(nShards: Int): Int =
-    if (nChunkBuckets <= 0) nShards
-    else ((nChunkBuckets + nShards - 1) / nShards) * nShards
 }
 
 object BuildConfig {
+  /** The idf floor for negative-idf terms is `Epsilon * mean(raw idf)`
+    * (reference BM25Okapi's epsilon).
+    */
+  val Epsilon = 0.25
+
   /** Shuffle partitions per core for the posting exchange. Cores-sized
     * partitions leave (bucket, shard)-group stragglers; 4x was A/B'd best
     * on absolute time at both local[4] and local[16] (BENCH.md round 4) and
@@ -171,16 +155,6 @@ case class PartitionMetric(phase: String, partitionId: Int, rows: Long,
   *    chunk table's denormalized `dl`.
   */
 object IndexBuilder {
-
-  /** Test probe: when `probeExchangeSlice` is set, incrementalBuild
-    * records the (pre-materialization) exchange-slice frame so specs can
-    * assert its chunk-table scan prunes to the affected cbucket
-    * directories (the 100 TB update contract). Opt-in: a production
-    * driver must not pin the last update's plan lineage (and its
-    * checkpoint blocks) for the JVM lifetime.
-    */
-  @volatile private[graft] var probeExchangeSlice = false
-  @volatile private[graft] var lastExchangeSliceDF: DataFrame = _
 
   /** Stable 64-bit id from the md5 of a key (portable, seedless). */
   def stableId(key: String): Long = {
@@ -245,10 +219,10 @@ object IndexBuilder {
 
   /** Chunk-table writer shared by the full and incremental paths.
     * Partition columns: `ubucket` (url hash — the unit of incremental
-    * overwrite) and/or `cbucket` (chunkId hash — the unit of candidate-
-    * fetch pruning), both optional. The frame is clustered on the
-    * partition columns first (an unclustered partitionBy write opens
-    * tasks × dirs parquet writers). `dynamic` = overwrite only the
+    * overwrite) when the config is url-bucketed, then `cbucket` (chunkId
+    * hash — the unit of candidate-fetch pruning). The frame is clustered
+    * on the partition columns first (an unclustered partitionBy write
+    * opens tasks × dirs parquet writers). `dynamic` = overwrite only the
     * partitions present in the frame (the incremental contract).
     */
   private def writeChunksTable(chunksDF: DataFrame, cfg: BuildConfig, nCb: Int,
@@ -260,21 +234,16 @@ object IndexBuilder {
         pmod(xxhash64(col("source")), lit(cfg.nUrlBuckets)).cast("int"))
       parts += "ubucket"
     }
-    if (nCb > 0) {
-      df = df.withColumn("cbucket",
-        pmod(xxhash64(col("chunkId")), lit(nCb)).cast("int"))
-      parts += "cbucket"
-    }
-    if (parts.isEmpty) df.write.mode(SaveMode.Overwrite).parquet(out.chunks)
-    else {
-      val nDirs = math.max(cfg.nUrlBuckets, 1) * math.max(nCb, 1)
-      // clustered + salted write (shared helper; the seed matters here —
-      // cbucket IS pmod(xxhash64(chunkId), nCb), so an unseeded chunkId
-      // salt would be functionally dependent on it and collapse the
-      // commit back to nDirs writer tasks)
-      TableIO.saltedPartitionWrite(df, parts.toSeq, nDirs, col("chunkId"),
-        cfg.shufflePartitions, out.chunks, dynamic)
-    }
+    df = df.withColumn("cbucket",
+      pmod(xxhash64(col("chunkId")), lit(nCb)).cast("int"))
+    parts += "cbucket"
+    val nDirs = math.max(cfg.nUrlBuckets, 1) * nCb
+    // clustered + salted write (shared helper; the seed matters here —
+    // cbucket IS pmod(xxhash64(chunkId), nCb), so an unseeded chunkId
+    // salt would be functionally dependent on it and collapse the
+    // commit back to nDirs writer tasks)
+    TableIO.saltedPartitionWrite(df, parts.toSeq, nDirs, col("chunkId"),
+      cfg.shufflePartitions, out.chunks, dynamic)
   }
 
   /** Content signature of a chunk for change detection: text AND meta
@@ -292,25 +261,21 @@ object IndexBuilder {
     when(norm =!= "", md5(norm))
   }
 
-  /** Write the (chunkId, h) signature side table, ubucket-partitioned when
-    * the chunk table is (same layout = same overwrite grain). ~16 B/chunk:
-    * the incremental diff's read of OLD state.
+  /** Write the (chunkId, h, dhash) signature side table, ubucket-
+    * partitioned like the url-bucketed chunk table (same layout = same
+    * overwrite grain). ~16 B/chunk: the incremental diff's read of OLD
+    * state. Only url-bucketed indexes have one: nothing reads it in any
+    * other layout.
     */
   private def writeChunkSigs(chunksDF: DataFrame, cfg: BuildConfig,
                              out: IndexPaths, dynamic: Boolean): Unit = {
-    val sigs = chunksDF.select(col("chunkId"), sigCol.as("h"),
-      dedupHashCol.as("dhash"), col("source"))
-    if (cfg.nUrlBuckets > 0) {
-      val w = sigs
-        .withColumn("ubucket",
-          pmod(xxhash64(col("source")), lit(cfg.nUrlBuckets)).cast("int"))
-        .drop("source")
-        .repartition(cfg.nUrlBuckets, col("ubucket"))
-        .write.mode(SaveMode.Overwrite)
-      (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
-        .partitionBy("ubucket").parquet(out.chunkSigs)
-    } else
-      sigs.drop("source").write.mode(SaveMode.Overwrite).parquet(out.chunkSigs)
+    val w = chunksDF
+      .select(col("chunkId"), sigCol.as("h"), dedupHashCol.as("dhash"),
+        pmod(xxhash64(col("source")), lit(cfg.nUrlBuckets)).cast("int").as("ubucket"))
+      .repartition(cfg.nUrlBuckets, col("ubucket"))
+      .write.mode(SaveMode.Overwrite)
+    (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy("ubucket").parquet(out.chunkSigs)
   }
 
   /** The single posting-grain exchange + streaming block assembly: the
@@ -322,7 +287,7 @@ object IndexBuilder {
                              metricsAcc: CollectionAccumulator[PartitionMetric])
       : Dataset[BlockRow] = {
     import spark.implicits._
-    val k1 = cfg.k1; val b = cfg.b; val blockSize = cfg.blockSize
+    val k1 = cfg.k1; val b = cfg.b
     // Shuffle the NARROWEST possible posting row (guide §2.3): bucket and
     // shard are pure hash functions of term/chunkId, so they ride along as
     // repartition/sort EXPRESSIONS instead of materialized columns, and
@@ -358,7 +323,7 @@ object IndexBuilder {
       var nBytes = 0L
       def flush(): Unit = if (curTerm != null && ids.nonEmpty) {
         val bs = Codec.buildBlocks(ids.toArray, tfs.toArray, dls.toArray,
-          norms.toArray, blockSize)
+          norms.toArray)
         bs.zipWithIndex.foreach { case (blk, i) =>
           nBytes += blk.docs.length + blk.tfs.length + blk.dls.length
           out += BlockRow(curBucket, curShard, curTerm, i, blk.n, blk.docs,
@@ -404,7 +369,7 @@ object IndexBuilder {
       val totalsRow = dfTable.agg(count(lit(1)), avg("raw_idf")).head()
       val vocabSize = totalsRow.getLong(0)
       val avgRawIdf = totalsRow.getDouble(1)
-      val eps = cfg.epsilon * avgRawIdf
+      val eps = BuildConfig.Epsilon * avgRawIdf
       dfTable
         .withColumn("idf", when(col("raw_idf") < 0, lit(eps)).otherwise(col("raw_idf")))
         .select("term", "df", "idf", "bucket")
@@ -459,8 +424,8 @@ object IndexBuilder {
     // N / avgdl from the denormalized doc-length column — a narrow
     // column-pruned scan (this first pass also fills the cache), available
     // before the posting exchange so block maxima can be finalized in the
-    // same pass — and before the chunk-table commit so the cbucket layout
-    // can be resolved against the corpus-derived shard count.
+    // same pass — and before the chunk-table commit, whose cbucket count
+    // is the corpus-derived shard count.
     val lenRow = chunksOut
       .agg(count(lit(1)), sum("dl"), max(col("pattern_b") + col("meta_b"))).head()
     val nDocs = lenRow.getLong(0)
@@ -469,7 +434,6 @@ object IndexBuilder {
     val maxStaticBonus = lenRow.getDouble(2)
     val avgdl = totalTokens.toDouble / nDocs
     val nShards = cfg.resolveDocShards(nDocs)
-    val nCb = cfg.resolveChunkBuckets(nShards)
     phase("chunk-stats")
 
     // the chunk-table parquet commit runs CONCURRENTLY with everything
@@ -478,16 +442,16 @@ object IndexBuilder {
     // cluster the jobs just share executors. Awaited before returning —
     // callers read out.chunks after build().
     val chunksWrite = scala.concurrent.Future {
-      writeChunksTable(chunksOut, cfg, nCb, out, dynamic = false)
+      writeChunksTable(chunksOut, cfg, nShards, out, dynamic = false)
     }(scala.concurrent.ExecutionContext.global)
     pendingWrites += chunksWrite
     // the signature side table's dedup-hash pass (md5 over normalized
     // text) is a real CPU cost at corpus scale — run it concurrently with
     // the posting exchange like the other commits (same cache input)
-    val sigsWrite = scala.concurrent.Future {
+    val sigsWrite = if (cfg.nUrlBuckets > 0) Some(scala.concurrent.Future {
       writeChunkSigs(chunksOut, cfg, out, dynamic = false)
-    }(scala.concurrent.ExecutionContext.global)
-    pendingWrites += sigsWrite
+    }(scala.concurrent.ExecutionContext.global)) else None
+    pendingWrites ++= sigsWrite
 
     // ---- compressed block build: the single posting-grain exchange ----
     val metricsAcc: CollectionAccumulator[PartitionMetric] =
@@ -516,7 +480,7 @@ object IndexBuilder {
     // ---- statistics (broadcast source) ----
     val (vocabSize, avgRawIdf, eps) = writeTermStats(blocks.toDF(), nDocs, out, cfg)
     phase("stats-agg")
-    scala.concurrent.Await.result(sigsWrite, scala.concurrent.duration.Duration.Inf)
+    sigsWrite.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
     scala.concurrent.Await.result(blocksWrite, scala.concurrent.duration.Duration.Inf)
     scala.concurrent.Await.result(chunksWrite, scala.concurrent.duration.Duration.Inf)
     blocks.unpersist()
@@ -538,7 +502,7 @@ object IndexBuilder {
 
     val snapshotId = Analyzer.md5Hex(s"$nDocs|$totalTokens|${cfg.configHash}")
     val stats = GlobalStats(nDocs, totalTokens, avgdl, vocabSize, avgRawIdf, eps,
-      maxStaticBonus, cfg.k1, cfg.b, cfg.nTermBuckets, nShards, nCb, avgdl,
+      maxStaticBonus, cfg.k1, cfg.b, cfg.nTermBuckets, nShards, nShards, avgdl,
       Codec.For, cfg.configHash, snapshotId)
     Seq(stats).toDS().write.mode(SaveMode.Overwrite).parquet(out.globalStats)
     TableIO.writeManifest(out.manifest, Map(
@@ -595,43 +559,37 @@ object IndexBuilder {
     *  - untouched blocks keep maxTfNorm computed under the previous avgdl;
     *    `minBlockAvgdl` records the floor so WAND's upper bounds stay
     *    valid (see GlobalStats scaladoc);
-    *  - the chunk table: with `cfg.nUrlBuckets > 0` (the ResumableBuild
-    *    default) only the url-bucket partitions containing changed chunks
-    *    are rewritten (dynamic-partition overwrite) — the static-bonus
-    *    analyzer pass runs over those buckets' chunks alone, and the
-    *    global N/avgdl/maxStaticBonus re-fit combines a NARROW
+    *  - the chunk table: only the url-bucket partitions containing changed
+    *    chunks are rewritten (dynamic-partition overwrite) — the
+    *    static-bonus analyzer pass runs over those buckets' chunks alone,
+    *    and the global N/avgdl/maxStaticBonus re-fit combines a NARROW
     *    (dl/pattern_b/meta_b) column scan of the untouched partitions
-    *    with the new partitions' aggregate. Without url-buckets the whole
-    *    table is rewritten (pre-r4 behavior). Callers gate on
-    *    `prev.configHash`/shard-record equality and fall back to the full
-    *    build otherwise (ResumableBuild).
+    *    with the new partitions' aggregate.
+    *
+    * `chunks` carries the chunk table's partition columns `ubucket` and
+    * `cbucket`, so both slices prune directories on the kept side. The
+    * index must be url-bucketed (`cfg.nUrlBuckets > 0`). Callers gate on
+    * `prev.configHash`/shard-record equality and take the full build
+    * otherwise (ResumableBuild).
     */
   def incrementalBuild(spark: SparkSession, chunks: DataFrame,
                        out: IndexPaths, cfg: BuildConfig, prev: GlobalStats,
                        affectedShards: Seq[Int],
-                       affectedUBuckets: Seq[Int] = Nil): GlobalStats = {
+                       affectedUBuckets: Seq[Int]): GlobalStats = {
     import spark.implicits._
     require(prev.nDocShards > 0, "previous build did not record nDocShards")
     require(cfg.configHash == prev.configHash,
       "config changed — incremental update invalid, run a full build")
+    require(cfg.nUrlBuckets > 0 && affectedUBuckets.nonEmpty,
+      "an incremental update rewrites url-bucket partitions of a url-bucketed index")
     val t0 = System.nanoTime()
     val nShards = prev.nDocShards
-    val partialChunks = cfg.nUrlBuckets > 0 && affectedUBuckets.nonEmpty
-    // prefer a materialized `ubucket` column when the input carries one
-    // (the change-proportional assembly keeps the chunk table's PARTITION
-    // column so this filter prunes directories instead of scanning) —
-    // semantically identical to deriving it from the url hash
-    val ubucketCol =
-      if (chunks.columns.contains("ubucket")) col("ubucket")
-      else pmod(xxhash64(col("source")), lit(math.max(1, cfg.nUrlBuckets))).cast("int")
     // static-bonus pass over ONLY the rows whose partitions get rewritten.
     // Eager localCheckpoint (not persist): the change-proportional input
     // derives from the chunk table this method overwrites, so the lineage
     // must be truncated and fully materialized before any mutation —
     // cache eviction + recompute would race the partition swap.
-    val chunksOut = withStaticCols(
-      if (partialChunks) chunks.filter(ubucketCol.isin(affectedUBuckets: _*))
-      else chunks)
+    val chunksOut = withStaticCols(chunks.filter(col("ubucket").isin(affectedUBuckets: _*)))
       .localCheckpoint(true)
     // same error-path contract as build(): a failed update must never
     // leave the detached chunk-table commit racing a caller's retry
@@ -654,11 +612,9 @@ object IndexBuilder {
       // EXISTING table, pruned to the unaffected ubucket dirs (never
       // reads text — the whole point of the partial path)
       val (oldN, oldTok, oldMax) =
-        if (partialChunks)
-          agg3(spark.read.parquet(out.chunks)
-            .filter(!col("ubucket").isin(affectedUBuckets: _*))
-            .select("dl", "pattern_b", "meta_b"))
-        else (0L, 0L, 0.0)
+        agg3(spark.read.parquet(out.chunks)
+          .filter(!col("ubucket").isin(affectedUBuckets: _*))
+          .select("dl", "pattern_b", "meta_b"))
       val nDocs = newN + oldN
       require(nDocs > 0, "empty corpus")
       val totalTokens = newTok + oldTok
@@ -670,35 +626,17 @@ object IndexBuilder {
       // the chunk table itself, and a lazy scan of it would race the
       // partition overwrite below (read-after-delete). chunksOut is
       // likewise fully materialized by the aggs above.
-      // The slice itself: when the input carries the chunk table's
-      // `cbucket` PARTITION column (the change-proportional assembly
-      // preserves it), `shard = cbucket % nShards` — the alignment
-      // validated by resolveChunkBuckets — so the affected-shard fetch is
-      // an isin on the partition column and the scan prunes to the
-      // affected cbucket DIRECTORIES. Without the column (full-diff
-      // fallback, whose input already paid a full dedup shuffle) the
-      // shard is derived by hashing chunkId — a row filter, not pruning.
-      // The bucket count is the one the existing table was WRITTEN with
-      // (0 = pre-cbucket index: keep the ubucket-only layout; mixing
-      // layouts under dynamic overwrite would corrupt the table).
+      // The slice itself: the table has one cbucket per shard (`shard =
+      // cbucket % nShards`), so the affected-shard fetch is an isin on the
+      // partition column and the scan prunes to the affected cbucket
+      // DIRECTORIES. The bucket count is the one the existing table was
+      // WRITTEN with; mixing layouts under dynamic overwrite would corrupt
+      // the table.
       val nCb = prev.nChunkBuckets
-      require(nCb == 0 || cfg.resolveChunkBuckets(nShards) == nCb,
-        s"chunk-bucket layout drift: table has $nCb, config resolves " +
-          s"${cfg.resolveChunkBuckets(nShards)}")
+      require(nCb == nShards,
+        s"chunk-bucket layout drift: table has $nCb buckets for $nShards shards")
       val shardSet = affectedShards.toSet
-      val sliced =
-        // nCb > 0 guard: a table CARRYING cbucket but whose stats predate
-        // the recorded count (nCb == 0) must take the hash-filter path —
-        // an empty isin list would silently drop every kept chunk
-        if (nCb > 0 && chunks.columns.contains("cbucket")) {
-          val affectedCb = (0 until nCb).filter(c => shardSet(c % nShards))
-          chunks.filter(col("cbucket").isin(affectedCb: _*))
-        } else {
-          val shardCol = pmod(xxhash64(col("chunkId")), lit(nShards)).cast("int")
-          chunks.filter(shardCol.isin(affectedShards: _*))
-        }
-      lastExchangeSliceDF = if (probeExchangeSlice) sliced else null
-      val affectedChunks = sliced
+      val affectedChunks = chunks.filter(col("cbucket").isin(affectedShards: _*))
         .select(col("chunkId"), col("docId"), col("source"), col("page"),
           col("chunkIdx"), col("text"), col("meta"))
         .localCheckpoint(true)
@@ -716,30 +654,28 @@ object IndexBuilder {
       TableIO.writeManifest(out.manifest, preManifest +
         ("pending_incremental" -> affectedShards.sorted.mkString(",")))
 
-      // chunk table rewrite — affected ubucket partitions only when the
-      // table is url-bucketed — run CONCURRENTLY with the shard rebuild
-      // below (same overlap pattern as build(); awaited before returning).
+      // chunk table rewrite — affected ubucket partitions only — run
+      // CONCURRENTLY with the shard rebuild below (same overlap pattern as
+      // build(); awaited before returning).
       // Affected dirs are pre-deleted (inside the marker-covered window):
       // dynamic overwrite only replaces partitions PRESENT in the new
       // frame, and an emptied (ubucket, cbucket) combination would
       // otherwise survive as a stale directory.
-      if (partialChunks) {
-        val conf0 = spark.sparkContext.hadoopConfiguration
-        for (u <- affectedUBuckets;
-             root <- Seq(out.chunks, out.chunkSigs)) {
-          val dir = new org.apache.hadoop.fs.Path(s"$root/ubucket=$u")
-          val fs = dir.getFileSystem(conf0)
-          if (fs.exists(dir)) fs.delete(dir, true)
-        }
+      val conf0 = spark.sparkContext.hadoopConfiguration
+      for (u <- affectedUBuckets;
+           root <- Seq(out.chunks, out.chunkSigs)) {
+        val dir = new org.apache.hadoop.fs.Path(s"$root/ubucket=$u")
+        val fs = dir.getFileSystem(conf0)
+        if (fs.exists(dir)) fs.delete(dir, true)
       }
       val chunksWrite = scala.concurrent.Future {
-        writeChunksTable(chunksOut.toDF(), cfg, nCb, out, dynamic = partialChunks)
+        writeChunksTable(chunksOut.toDF(), cfg, nCb, out, dynamic = true)
       }(scala.concurrent.ExecutionContext.global)
       // the sig table's dedup-hash pass overlaps the shard rebuild like the
       // chunk commit does (chunksOut is eagerly checkpointed — no lineage
       // race with the partition deletes above)
       val sigsWrite = scala.concurrent.Future {
-        writeChunkSigs(chunksOut.toDF(), cfg, out, dynamic = partialChunks)
+        writeChunkSigs(chunksOut.toDF(), cfg, out, dynamic = true)
       }(scala.concurrent.ExecutionContext.global)
       pendingChunksWrite = Some(chunksWrite)
       pendingSigsWrite = Some(sigsWrite)
@@ -810,8 +746,7 @@ object IndexBuilder {
         "n_docs" -> nDocs.toString, "total_tokens" -> totalTokens.toString,
         "config_hash" -> cfg.configHash, "n_doc_shards" -> nShards.toString,
         "incremental_shards" -> affectedShards.sorted.mkString(","),
-        "incremental_ubuckets" ->
-          (if (partialChunks) affectedUBuckets.sorted.mkString(",") else "all"),
+        "incremental_ubuckets" -> affectedUBuckets.sorted.mkString(","),
         "build_wall_ms" -> wallMs.toString))
       stats
     } catch {

@@ -243,14 +243,20 @@ object ResumableBuild {
   }
 
   /** Incremental update: reprocess only the url buckets containing changed
-    * urls, overwrite those bucket partitions, then rebuild posting blocks
-    * ONLY for the doc shards whose chunks actually changed (added, removed,
-    * or text-modified — including dedup-keeper migrations across buckets,
-    * which the (chunkId, text-hash) diff catches). Falls back to the full
-    * index phase when no prior compatible index exists (different config
-    * hash, missing shard record) or when more than half the shards are
-    * affected (a full rebuild's single pass is cheaper than paying the
-    * full-corpus stats scan AND a majority of the exchange).
+    * urls, overwrite those bucket partitions, then take one of two paths.
+    *  - Change-proportional: re-decide dedup winners for the hash groups
+    *    the changed buckets touch, and rebuild posting blocks ONLY for the
+    *    doc shards whose chunks changed (added, removed, or text/meta-
+    *    modified — including dedup-keeper migrations across buckets) and
+    *    the chunk table ONLY for the affected url buckets. It runs when a
+    *    prior compatible index exists and at most half the shards change.
+    *  - Full rebuild (`indexPhase`) otherwise: no prior index, a different
+    *    config hash, a crash marker from an earlier build or update, a
+    *    side table that does not cover the raw buckets, a failed read while
+    *    planning, or more than half the shards affected (one full pass is
+    *    then cheaper than the full-corpus stats scan AND a majority of the
+    *    exchange).
+    * An update that changes no indexed chunk leaves the index as it is.
     */
   def incrementalUpdate(spark: SparkSession, pages: Dataset[PageDoc],
                         changedUrls: DataFrame, out: IndexPaths,
@@ -270,20 +276,16 @@ object ResumableBuild {
     val buckets = changedUrls
       .select(pmod(xxhash64(urlCol), lit(resume.nInputBuckets)).cast("int").as("b"))
       .distinct().as[Int].collect().toSeq
-    // prior state BEFORE the chunk phase touches anything it reads; a
-    // `pending_incremental` (crashed shard swap) or `pending_build`
-    // (crashed full build between its table commits) marker means the
-    // on-disk tables may be mutually inconsistent — the only safe base
-    // is a full rebuild
+    // prior state BEFORE the chunk phase touches anything it reads. A crash
+    // marker means the on-disk tables may be mutually inconsistent, and the
+    // only safe base is a full rebuild: `pending_incremental` (crashed
+    // shard swap), `pending_build` (crashed full build between its table
+    // commits) or `pending_update` (an update crashed after its chunk
+    // phase, so chunks_raw/raw_sigs already hold post-overwrite state and
+    // the pre-overwrite snapshot the change-proportional path needs is gone)
     val manifest0 = TableIO.readManifest(out.manifest).getOrElse(Map.empty)
-    val interrupted =
-      manifest0.contains("pending_incremental") || manifest0.contains("pending_build")
-    // `pending_update` means a PREVIOUS update crashed after its chunk
-    // phase: chunks_raw/raw_sigs already hold post-overwrite state, so the
-    // pre-overwrite snapshot the change-proportional path needs is gone —
-    // the FULL-DIFF path (which recomputes from durable current state and
-    // is restart-safe) must serve this retry. Blocks are NOT suspect.
-    val updateInterrupted = manifest0.contains("pending_update")
+    val interrupted = Seq("pending_incremental", "pending_build", "pending_update")
+      .exists(manifest0.contains)
     val effBuild = withUrlBuckets(build, resume)
     val prev = scala.util.Try(IndexBuilder.loadStats(spark, out)).toOption
       .filter(p => !interrupted && p.nDocShards > 0 &&
@@ -291,45 +293,47 @@ object ResumableBuild {
     // change-proportional-dedup preconditions, captured EAGERLY before the
     // chunk phase overwrites the changed buckets: their OLD dedup hashes
     // (the hash groups whose winners may need re-deciding), and PROOF that
-    // the raw-sigs table covers every raw bucket (an index upgraded from a
-    // pre-sig build has sigs only for re-crawled buckets — silently
-    // incomplete coverage would mis-derive the affected groups)
-    val oldBucketHashes =
-      if (updateInterrupted) None
-      else prev.flatMap { _ =>
-        scala.util.Try {
-          val conf = spark.sparkContext.hadoopConfiguration
-          def bucketDirs(root: String): Set[String] = {
-            val dir = new org.apache.hadoop.fs.Path(root)
-            val fs = dir.getFileSystem(conf)
-            if (!fs.exists(dir)) Set.empty[String]
-            else fs.listStatus(dir).filter(_.isDirectory)
-              .map(_.getPath.getName).filter(_.startsWith("bucket=")).toSet
-          }
-          val rawB = bucketDirs(chunksRawDir(out))
-          val sigB = bucketDirs(rawSigsDir(out))
-          require(rawB.nonEmpty && rawB.subsetOf(sigB),
-            s"raw-sigs coverage incomplete: ${(rawB -- sigB).mkString(",")}")
-          spark.read.parquet(rawSigsDir(out))
-            .filter(col("bucket").isin(buckets: _*))
-            .filter(col("dhash").isNotNull)
-            .select("dhash").distinct()
-            .localCheckpoint(true)
-        }.toOption
-      }
+    // the raw-sigs table covers every raw bucket (silently incomplete
+    // coverage would mis-derive the affected groups)
+    val oldBucketHashes = prev.flatMap { _ =>
+      orDecline(scala.util.Try {
+        val conf = spark.sparkContext.hadoopConfiguration
+        def bucketDirs(root: String): Set[String] = {
+          val dir = new org.apache.hadoop.fs.Path(root)
+          val fs = dir.getFileSystem(conf)
+          if (!fs.exists(dir)) Set.empty[String]
+          else fs.listStatus(dir).filter(_.isDirectory)
+            .map(_.getPath.getName).filter(_.startsWith("bucket=")).toSet
+        }
+        val rawB = bucketDirs(chunksRawDir(out))
+        val sigB = bucketDirs(rawSigsDir(out))
+        require(rawB.nonEmpty && rawB.subsetOf(sigB),
+          s"raw-sigs coverage incomplete: ${(rawB -- sigB).mkString(",")}")
+        spark.read.parquet(rawSigsDir(out))
+          .filter(col("bucket").isin(buckets: _*))
+          .filter(col("dhash").isNotNull)
+          .select("dhash").distinct()
+          .localCheckpoint(true)
+      })
+    }
     // the chunk phase's overwrite opens the window the marker describes
     TableIO.writeManifest(out.manifest, manifest0 + ("pending_update" -> "1"))
     chunkBuckets(spark, pages, out, chunker, resume.nInputBuckets, buckets,
       Map("incremental" -> "true"))
-    val result = prev match {
-      case None => indexPhase(spark, out, build, resume)
-      case Some(p) =>
-        val cheap = oldBucketHashes.flatMap(oh =>
-          changeProportionalUpdate(spark, out, build, resume, p, buckets, oh))
-        cheap match {
-          case Some(stats) => stats
-          case None => fullDiffUpdate(spark, out, build, resume, p)
-        }
+    val plan = for (p <- prev; oh <- oldBucketHashes;
+                    (pairs, merged) <- planChangeProportional(spark, out, resume, p, buckets, oh))
+      yield (p, pairs.map(_._1).distinct.sorted, pairs.map(_._2).distinct.sorted, merged)
+    val result = plan match {
+      case Some((p, Seq(), _, _)) => p // nothing changed — index already current
+      case Some((p, shards, ubuckets, merged)) if shards.length * 2 <= p.nDocShards =>
+        val stats = IndexBuilder.incrementalBuild(spark, merged, out, effBuild, p,
+          shards, ubuckets)
+        val manifest = TableIO.readManifest(out.manifest).getOrElse(Map.empty)
+        TableIO.writeManifest(out.manifest,
+          manifest ++ Map("parent_snapshot" -> p.snapshotId,
+            "dedup_mode" -> "change-proportional"))
+        stats
+      case _ => indexPhase(spark, out, build, resume)
     }
     // every branch completed against durable state — close the window
     TableIO.writeManifest(out.manifest,
@@ -337,34 +341,44 @@ object ResumableBuild {
     result
   }
 
-  /** Change-proportional update: re-decides dedup winners ONLY for hash
+  /** A failed read-only planning step declines the change-proportional
+    * path: nothing has been mutated yet, so the update takes the full
+    * rebuild.
+    */
+  private def orDecline[T](t: scala.util.Try[T]): Option[T] = t match {
+    case scala.util.Failure(e) =>
+      System.err.println(
+        s"[incremental] change-proportional path declined (${e.getMessage}) — full rebuild")
+      None
+    case scala.util.Success(v) => Some(v)
+  }
+
+  /** Change-proportional plan: re-decides dedup winners ONLY for hash
     * groups touching a changed bucket (their membership is the only thing
     * a bucket overwrite can alter), assembles the merged corpus as
     * (previous kept rows outside those groups) ∪ (re-decided winners),
-    * and derives the changed rows exactly from (kept-replaced vs winners)
-    * — no full-corpus dedup shuffle, no full-corpus hashing, no old-text
-    * read. Inputs are the raw-sigs and chunk-sigs side tables; any
-    * missing precondition returns None and the caller falls back to the
-    * full-dedup diff path. Winner re-election is provably complete: a
+    * and derives the changed (shard, ubucket) pairs exactly from
+    * (kept-replaced vs winners) — no full-corpus dedup shuffle, no
+    * full-corpus hashing, no old-text read. Inputs are the raw-sigs and
+    * chunk-sigs side tables; a failed read returns None and the caller
+    * takes the full rebuild. Winner re-election is provably complete: a
     * group with no member in a changed bucket has identical membership
     * and therefore an identical keep-first winner.
     */
-  private def changeProportionalUpdate(spark: SparkSession, out: IndexPaths,
-                                       build: BuildConfig, resume: ResumeConfig,
-                                       p: GlobalStats, changedBuckets: Seq[Int],
-                                       oldBucketHashes: DataFrame)
-      : Option[GlobalStats] = {
+  private def planChangeProportional(spark: SparkSession, out: IndexPaths,
+                                     resume: ResumeConfig, p: GlobalStats,
+                                     changedBuckets: Seq[Int],
+                                     oldBucketHashes: DataFrame)
+      : Option[(Seq[(Int, Int)], DataFrame)] = {
     import spark.implicits._
-    val effBuild = withUrlBuckets(build, resume)
     val nB = resume.nInputBuckets
     val core = Seq("chunkId", "docId", "source", "page", "chunkIdx", "text", "meta")
 
     // READ-ONLY planning under Try: a missing side table or transient read
-    // failure here falls back safely (nothing has been mutated yet). Once
-    // execution starts below, failures PROPAGATE — the pending marker set
-    // by incrementalBuild governs recovery, and silently falling back to
-    // the full-diff path against half-mutated state would be wrong.
-    val planTry = scala.util.Try {
+    // failure here declines safely (nothing has been mutated yet). Once
+    // execution starts in incrementalBuild, failures PROPAGATE — the
+    // pending marker it sets governs recovery.
+    orDecline(scala.util.Try {
 
     // affected hash groups = groups with a member in a changed bucket,
     // before (captured pre-overwrite) or after the re-chunk
@@ -387,19 +401,15 @@ object ResumableBuild {
     // winners carry BOTH chunk-table partition columns so the assembled
     // merged frame matches the table layout (ubucket = overwrite grain,
     // cbucket = the shard-aligned exchange-slice pruning grain)
-    val winners0 = ChunkerJob.dedup(rawCand).toDF()
+    val winners = ChunkerJob.dedup(rawCand).toDF()
       .withColumn("ubucket", pmod(xxhash64(col("source")), lit(nB)).cast("int"))
-    val winners = (if (p.nChunkBuckets > 0)
-        winners0.withColumn("cbucket",
-          pmod(xxhash64(col("chunkId")), lit(p.nChunkBuckets)).cast("int"))
-      else winners0)
+      .withColumn("cbucket",
+        pmod(xxhash64(col("chunkId")), lit(p.nChunkBuckets)).cast("int"))
       .localCheckpoint(true)
 
     // previous kept rows of those groups get replaced wholesale; the sig
     // side table carries their (h, dhash, ubucket) without any text read
-    val keptSigs = spark.read.parquet(out.chunkSigs) // chunkId, h, dhash, ubucket
-    require(keptSigs.columns.contains("dhash"), "chunk_sigs predates dhash")
-    val replaced = keptSigs
+    val replaced = spark.read.parquet(out.chunkSigs) // chunkId, h, dhash, ubucket
       .filter(col("dhash").isNotNull)
       .join(affected, Seq("dhash"), "left_semi")
       .select(col("chunkId"), col("h"), col("ubucket").cast("int").as("u"))
@@ -416,120 +426,20 @@ object ResumableBuild {
         col("u"))
       .distinct().as[(Int, Int)].collect().toSeq
 
-      // merged corpus (LAZY — built only if executed), carrying the chunk
-      // table's PARTITION columns: `ubucket` so incrementalBuild's
-      // affected-bucket chunk rewrite prunes directories on the kept side,
-      // and `cbucket` so its affected-SHARD exchange slice does too
-      // (shard = cbucket % nShards) — the kept side is never scanned
-      // corpus-proportionally on either axis
-      val keptTable = spark.read.parquet(out.chunks)
-      val partCols = Seq("ubucket") ++
-        (if (keptTable.columns.contains("cbucket")) Seq("cbucket") else Nil)
-      val keptSide = keptTable
-        .select(core.map(col) ++
-          partCols.map(c => col(c).cast("int").as(c)): _*)
-        .join(replaced.select("chunkId"), Seq("chunkId"), "left_anti")
-      val merged = keptSide.unionByName(winners.select(
-        core.map(col) ++ partCols.map(col): _*))
-      (pairs, merged)
-    }
-
-    planTry match {
-      case scala.util.Failure(e) =>
-        System.err.println(
-          s"[incremental] change-proportional path declined (${e.getMessage}) — falling back")
-        None
-      case scala.util.Success((pairs, merged)) =>
-        val shards = pairs.map(_._1).distinct.sorted
-        val ubuckets = pairs.map(_._2).distinct.sorted
-        Some(
-          if (shards.isEmpty) p // nothing changed — index already current
-          else if (shards.length * 2 > p.nDocShards)
-            indexPhase(spark, out, build, resume)
-          else {
-            val stats = IndexBuilder.incrementalBuild(spark, merged, out,
-              effBuild, p, shards, ubuckets)
-            val manifest = TableIO.readManifest(out.manifest).getOrElse(Map.empty)
-            TableIO.writeManifest(out.manifest,
-              manifest ++ Map("parent_snapshot" -> p.snapshotId,
-                "dedup_mode" -> "change-proportional"))
-            stats
-          })
-    }
-  }
-
-  /** FALLBACK incremental path: full dedup + sig-table diff — used when
-    * the raw-sigs side table is absent (older index) or the
-    * change-proportional assembly declined.
-    */
-  private def fullDiffUpdate(spark: SparkSession, out: IndexPaths,
-                             build: BuildConfig, resume: ResumeConfig,
-                             p: GlobalStats): GlobalStats = {
-    import spark.implicits._
-    val effBuild = withUrlBuckets(build, resume)
-    // the dedup shuffle feeds both the diff and (on the incremental
-    // path) the rebuild — cache it so it runs once per update
-    val merged = mergedChunks(spark, out, resume)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // changed chunks = symmetric diff of (chunkId, hash(text, meta))
-          // between the indexed chunk table and the new merged corpus —
-          // meta is in the signature because the precomputed static-bonus
-          // columns and the served citations depend on it, not just on
-          // text. Collected EAGERLY (shard-count-bounded) before the chunk
-          // table is overwritten underneath the diff's scan; an unreadable
-          // chunk table (torn previous overwrite) means the diff base is
-          // gone — full rebuild, never a wedged retry loop.
-          // the diff compares (chunkId, content-hash, ubucket) — the
-          // affected doc SHARDS and URL-BUCKETS (the two partial-overwrite
-          // grains) come out of one collect. Old state comes from the
-          // chunk_sigs side table (16 B/chunk — no old-text read at 100 TB);
-          // computing it from the chunk table is the fallback for indexes
-          // that predate the side table. Any sig/chunks divergence is
-          // impossible outside a crash, and crashes set a pending marker
-          // that already forces the full rebuild.
-          val diffTry = scala.util.Try {
-            val oldSig = {
-              val sigs = scala.util.Try(spark.read.parquet(out.chunkSigs))
-                .filter(_.columns.contains("ubucket"))
-              sigs.map(_.select(col("chunkId"), col("h"),
-                  col("ubucket").cast("int").as("u")))
-                .getOrElse(spark.read.parquet(out.chunks)
-                  .select(col("chunkId"), IndexBuilder.sigCol.as("h"),
-                    pmod(xxhash64(col("source")), lit(resume.nInputBuckets))
-                      .cast("int").as("u")))
-            }
-            val newSig = merged.toDF()
-              .select(col("chunkId"), IndexBuilder.sigCol.as("h"),
-                pmod(xxhash64(col("source")), lit(resume.nInputBuckets))
-                  .cast("int").as("u"))
-            newSig.except(oldSig).union(oldSig.except(newSig))
-              .select(
-                pmod(xxhash64(col("chunkId")), lit(p.nDocShards))
-                  .cast("int").as("s"),
-                col("u"))
-              .distinct().as[(Int, Int)].collect().toSeq
-          }
-          diffTry match {
-            case scala.util.Failure(e) =>
-              System.err.println(
-                s"[incremental] diff base unreadable (${e.getMessage}) — full rebuild")
-              indexPhase(spark, out, build, resume)
-            case scala.util.Success(pairs) =>
-              val shards = pairs.map(_._1).distinct.sorted
-              val ubuckets = pairs.map(_._2).distinct.sorted
-              if (shards.isEmpty) p // nothing changed — index already current
-              else if (shards.length * 2 > p.nDocShards)
-                indexPhase(spark, out, build, resume)
-              else {
-                val stats = IndexBuilder.incrementalBuild(spark, merged.toDF(),
-                  out, effBuild, p, shards, ubuckets)
-                val manifest = TableIO.readManifest(out.manifest).getOrElse(Map.empty)
-                TableIO.writeManifest(out.manifest,
-                  manifest + ("parent_snapshot" -> p.snapshotId))
-                stats
-              }
-          }
-        } finally merged.unpersist()
+    // merged corpus (LAZY — built only if executed), carrying the chunk
+    // table's PARTITION columns: `ubucket` so incrementalBuild's
+    // affected-bucket chunk rewrite prunes directories on the kept side,
+    // and `cbucket` so its affected-SHARD exchange slice does too
+    // (shard = cbucket % nShards) — the kept side is never scanned
+    // corpus-proportionally on either axis
+    val partCols = Seq("ubucket", "cbucket")
+    val keptSide = spark.read.parquet(out.chunks)
+      .select(core.map(col) ++
+        partCols.map(c => col(c).cast("int").as(c)): _*)
+      .join(replaced.select("chunkId"), Seq("chunkId"), "left_anti")
+    val merged = keptSide.unionByName(winners.select(
+      core.map(col) ++ partCols.map(col): _*))
+    (pairs, merged)
+    })
   }
 }

@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Lifetime: an entry lives until its session's SparkContext stops. Every
   * access first drops the sessions whose context has stopped, so a
-  * stopped session is released at the next touch of the registry.
+  * stopped session is released at the next touch of the registry. A
+  * dropped value that is `AutoCloseable` is closed then; its `close` must
+  * not call into the stopped SparkContext.
   *
   * A builder that may itself use the registry must not run inside
   * `computeIfAbsent`/`compute` on the returned map (ConcurrentHashMap
@@ -22,7 +24,14 @@ object SessionMemo {
   private val bySession = new ConcurrentHashMap[SparkSession, ConcurrentHashMap[String, AnyRef]]()
 
   def apply(spark: SparkSession): ConcurrentHashMap[String, AnyRef] = {
-    bySession.keySet.removeIf(_.sparkContext.isStopped)
+    bySession.keySet.forEach { s =>
+      // a failed close (say, a temp dir already gone) must not fail the
+      // caller, whose session is another one
+      if (s.sparkContext.isStopped) Option(bySession.remove(s)).foreach(_.values.forEach {
+        case c: AutoCloseable => scala.util.Try(c.close())
+        case _ =>
+      })
+    }
     bySession.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, AnyRef]())
   }
 

@@ -80,6 +80,14 @@ class ForCodecSpec extends AnyFunSuite {
     assert(hash != Analyzer.md5Hex("1.4|0.75|0.25|32|0|128|0|0"))
   }
 
+  test("configHash of the default and the ResumableBuild configs is pinned") {
+    // an index written before the idf floor, block size and chunk-bucket
+    // count became constants must keep matching, or its next update would
+    // take a full rebuild
+    assert(BuildConfig().configHash == "750ce904634a2b51d3ee4961d4f9aa7e")
+    assert(BuildConfig(nUrlBuckets = 16).configHash == "e8f077e00c0aa0e23cada61dd0699bbc")
+  }
+
   test("pre-r5 stats without a postingCodec column load as vbyte") {
     // stats written before the layout tag existed mean VByte blocks, which
     // this code no longer decodes: loading them asks for a full rebuild

@@ -1,6 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.ExecutedPlans
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.{ChunkerConfig, ChunkerJob, PageDoc, WebPages}
@@ -155,7 +156,6 @@ class ResumableBuildSpec extends AnyFunSuite {
     val beforeU = filesByU()
     assert(before.keySet.size > 4, "setup: expected many shard dirs")
     assert(beforeU.keySet.size > 4, "setup: expected many ubucket dirs")
-    IndexBuilder.probeExchangeSlice = true
 
     // one url gets new text; everything else byte-identical
     val targetUrl = pagesA.select("url").as[String].orderBy("url").head()
@@ -164,8 +164,8 @@ class ResumableBuildSpec extends AnyFunSuite {
         p.copy(text = p.text + " incremental shard sentinel marker")
       else p)
     val changedDF = Seq(targetUrl).toDF("url")
-    val stats = ResumableBuild.incrementalUpdate(
-      spark, pagesB, changedDF, out, build16, chunker, resume)
+    val (stats, plans) = ExecutedPlans(spark)(ResumableBuild.incrementalUpdate(
+      spark, pagesB, changedDF, out, build16, chunker, resume))
 
     val manifest = TableIO.readManifest(out.manifest).get
     assert(manifest.contains("incremental_shards"),
@@ -206,23 +206,23 @@ class ResumableBuildSpec extends AnyFunSuite {
     // THE 100 TB update contract (VERDICT r4 #1): the exchange slice's
     // chunk-table scan must prune to the affected cbucket directories
     // (shard = cbucket % nShards) — listFiles under the scan's own
-    // partition filters is the exact file set the executed scan reads
-    val slice = IndexBuilder.lastExchangeSliceDF
-    IndexBuilder.probeExchangeSlice = false
-    assert(slice != null, "incrementalBuild did not record the slice probe")
-    // collect scan leaves THROUGH AdaptiveSparkPlanExec (AQE roots hide
-    // their subtree from plain collect)
+    // partition filters is the exact file set the executed scan reads.
+    // Collect scan leaves THROUGH AdaptiveSparkPlanExec and its query
+    // stages (AQE roots and stages hide their subtree from plain collect)
     def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         fileScans(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => fileScans(q.plan)
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => fileScans(r.child)
       case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(fileScans)
     }
-    val chunkScans = fileScans(slice.queryExecution.executedPlan).filter(
-      _.relation.location.rootPaths
-        .exists(_.toString.stripSuffix("/").endsWith("/chunks")))
-    assert(chunkScans.nonEmpty, "exchange slice has no chunk-table scan")
+    val chunkScans = plans.flatMap(fileScans).filter(s =>
+      s.relation.location.rootPaths
+        .exists(_.toString.stripSuffix("/").endsWith("/chunks")) &&
+        s.partitionFilters.exists(_.references.exists(_.name == "cbucket")))
+    assert(chunkScans.nonEmpty, "the update ran no cbucket-pruned chunk-table scan")
     val readFiles = chunkScans.flatMap(s =>
       s.relation.location.listFiles(s.partitionFilters, s.dataFilters)
         .flatMap(_.files.map(_.getPath.toString)))
@@ -369,7 +369,7 @@ class ResumableBuildSpec extends AnyFunSuite {
     assert(!TableIO.readManifest(out.manifest).get.contains("pending_update"))
   }
 
-  test("a crashed update (pending_update marker) retries via the restart-safe full-diff path") {
+  test("a crashed update (pending_update marker) retries as a full rebuild") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pupd").toString
     val out = IndexPaths(dir)
     ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
@@ -384,17 +384,62 @@ class ResumableBuildSpec extends AnyFunSuite {
       Seq(targetUrl).toDF("url"), out, build, chunker, resume)
     val m = TableIO.readManifest(out.manifest).get
     assert(!m.contains("pending_update"), "marker must clear on completion")
-    assert(!m.contains("dedup_mode"),
-      "interrupted retry must use the full-diff path, not change-proportional")
-    assert(stats.nDocs > 0)
+    assert(!m.contains("incremental_shards"),
+      "interrupted retry must take the full-rebuild path, not shard-grain")
+    val direct = IndexBuilder.build(spark, ChunkerJob.chunk(pagesB, chunker),
+      IndexPaths(java.nio.file.Files.createTempDirectory("graft-pupd-d").toString),
+      build)
+    assert(stats.nDocs == direct.nDocs)
+    assert(math.abs(stats.avgdl - direct.avgdl) < 1e-12)
+    assert(stats.vocabSize == direct.vocabSize)
     assert(spark.read.parquet(out.chunks)
       .filter(col("text").contains("retry sentinel")).count() > 0)
+  }
+
+  test("a raw-sigs bucket missing for an untouched bucket declines to a full rebuild") {
+    val build16 = build.copy(nDocShards = 16)
+    val out = IndexPaths(java.nio.file.Files.createTempDirectory("graft-sigsgap").toString)
+    ResumableBuild.run(spark, pagesA, out, build16, chunker, resume)
+    val targetUrl = pagesA.select("url").as[String].orderBy("url").head()
+    val targetB = IndexBuilder.termBucket(targetUrl, resume.nInputBuckets)
+    // the side table no longer covers one bucket the update does not touch:
+    // the change-proportional path cannot see that bucket's dedup groups
+    val gap = (0 until resume.nInputBuckets).filter(_ != targetB)
+      .map(b => java.nio.file.Paths.get(s"${ResumableBuild.rawSigsDir(out)}/bucket=$b"))
+      .find(java.nio.file.Files.isDirectory(_)).get
+    val walk = java.nio.file.Files.walk(gap)
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(java.nio.file.Files.delete(_))
+    finally walk.close()
+    val pagesB = pagesA.map(p =>
+      if (p.url == targetUrl) p.copy(text = p.text + " coverage gap sentinel") else p)
+    val stats = ResumableBuild.incrementalUpdate(spark, pagesB,
+      Seq(targetUrl).toDF("url"), out, build16, chunker, resume)
+    val m = TableIO.readManifest(out.manifest).get
+    assert(!m.contains("incremental_shards"), "a coverage gap must take the full rebuild")
+    assert(!m.keySet.exists(_.startsWith("pending_")), s"marker left behind: $m")
+    val out2 = IndexPaths(
+      java.nio.file.Files.createTempDirectory("graft-sigsgap-direct").toString)
+    IndexBuilder.build(spark, ChunkerJob.chunk(pagesB, chunker), out2, build16)
+    val b1 = new graft.query.SparkBackend(spark, out)
+    val b2 = new graft.query.SparkBackend(spark, out2)
+    for (q <- Seq("quantum physics experiment", "coverage gap sentinel",
+        "climate ocean temperature")) {
+      val w1 = graft.query.Wand.topK(spark, out, b1.stats, q, 10, b1.idfFor)
+      val w2 = graft.query.Wand.topK(spark, out2, b2.stats, q, 10, b2.idfFor)
+      assert(w1.nonEmpty, s"'$q' found nothing")
+      assert(w1.map(_._1) == w2.map(_._1), s"'$q' WAND ids differ")
+      w1.zip(w2).foreach { case ((_, x), (_, y)) => assert(math.abs(x - y) < 1e-9) }
+    }
+    assert(stats.nDocs == b2.stats.nDocs)
   }
 
   test("minBlockAvgdl recovers once every stale shard is rebuilt (no permanent ratchet)") {
     import graft.corpus.{ChunkMeta, ChunkRow}
     val nSh = 4
-    val cfg = BuildConfig(nTermBuckets = 4, nDocShards = nSh, shufflePartitions = 8)
+    // one url bucket: every chunk sits in ubucket 0, so each update
+    // rewrites the whole (tiny) chunk table and only the named shards' blocks
+    val cfg = BuildConfig(nTermBuckets = 4, nDocShards = nSh, nUrlBuckets = 1,
+      shufflePartitions = 8)
     // deterministic chunk ids per doc shard (shard = pmod(xxhash64(id), n),
     // the same hash chunkBucket computes)
     val idsByShard = (0 until nSh).map { s =>
@@ -407,14 +452,17 @@ class ResumableBuildSpec extends AnyFunSuite {
       (0 until words).map(w => s"quantum$w").mkString(" "), ChunkMeta())
     def corpus(lenOf: Long => Int) =
       idsByShard.values.flatten.map(id => mkChunk(id, lenOf(id))).toSeq
+    // an update's input carries the chunk table's partition columns
+    def frame(lenOf: Long => Int) = spark.createDataset(corpus(lenOf)).toDF()
+      .withColumn("ubucket", lit(0))
+      .withColumn("cbucket", pmod(xxhash64(col("chunkId")), lit(nSh)).cast("int"))
     val out = IndexPaths(
       java.nio.file.Files.createTempDirectory("graft-avgdl").toString)
     val s0 = IndexBuilder.build(spark, spark.createDataset(corpus(_ => 10)), out, cfg)
     // update 1: shards 0,1 rebuilt under a LARGER avgdl; 2,3 left stale
     val shard01 = (idsByShard(0) ++ idsByShard(1)).toSet
     val s1 = IndexBuilder.incrementalBuild(spark,
-      spark.createDataset(corpus(id => if (shard01(id)) 30 else 10)).toDF(),
-      out, cfg, s0, Seq(0, 1))
+      frame(id => if (shard01(id)) 30 else 10), out, cfg, s0, Seq(0, 1), Seq(0))
     assert(s1.avgdl > s0.avgdl)
     assert(math.abs(s1.minBlockAvgdl - s0.avgdl) < 1e-12,
       "stale shards 2,3 must still pin the bound floor")
@@ -422,7 +470,7 @@ class ResumableBuildSpec extends AnyFunSuite {
     // so the floor must RECOVER to the oldest live shard's avgdl (a pure
     // ratchet would keep s0.avgdl forever and inflate WAND bounds)
     val s2 = IndexBuilder.incrementalBuild(spark,
-      spark.createDataset(corpus(_ => 30)).toDF(), out, cfg, s1, Seq(2, 3))
+      frame(_ => 30), out, cfg, s1, Seq(2, 3), Seq(0))
     assert(math.abs(s2.minBlockAvgdl - s1.avgdl) < 1e-12,
       s"floor should recover to ${s1.avgdl}, got ${s2.minBlockAvgdl}")
     assert(s2.minBlockAvgdl > s0.avgdl)

@@ -87,6 +87,7 @@ class SessionMemoSpec extends AnyFunSuite {
     val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
     assert(done && child.exitValue() == 0, s"child failed:\n$out")
     assert(out.contains("first session held: false") && out.contains("second session held: true"), out)
+    assert(out.contains("first doc index dir exists: false"), out)
   }
 
   test("src/main declares no memo map outside SessionMemo") {
@@ -106,20 +107,29 @@ class SessionMemoSpec extends AnyFunSuite {
   }
 }
 
-/** Child JVM of the lifetime test: stops one session, starts a second,
-  * touches the registry and reports which session it still holds.
+/** Child JVM of the lifetime test: builds a doc index in one session and
+  * stops it, starts a second, touches the registry and reports which
+  * session it still holds and whether the first doc index's directory is
+  * still there.
   */
 object SessionMemoChild {
   def main(args: Array[String]): Unit = {
     def session() = SparkSession.builder().master("local[1]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "4").getOrCreate()
     val first = session()
     SessionMemo(first).put("probe", "first")
+    val docs = Files.createTempDirectory("graft-sessionmemo-child-docs")
+    import first.implicits._
+    (1 to 20).map(i => (i.toLong, s"spark hash join scan $i", s"doc$i.pdf"))
+      .toDF("doc_id", "text", "source").write.parquet(s"$docs/documents.parquet")
+    val (paths, _) = DocIndex.backendFor(first, docs.toString)
     first.stop()
     val second = session()
     SessionMemo(second).put("probe", "second")
     println(s"first session held: ${SessionMemo.holds(first)}")
     println(s"second session held: ${SessionMemo.holds(second)}")
+    println(s"first doc index dir exists: ${Files.exists(Paths.get(paths.root))}")
     second.stop()
   }
 }

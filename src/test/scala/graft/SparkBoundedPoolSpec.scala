@@ -176,8 +176,7 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
     val pathsB = IndexPaths(
       java.nio.file.Files.createTempDirectory("graft-cbucket").toString)
     IndexBuilder.build(spark, chunks, pathsB,
-      BuildConfig(nTermBuckets = 8, nDocShards = 2, shufflePartitions = 8,
-        nChunkBuckets = 16))
+      BuildConfig(nTermBuckets = 8, nDocShards = 16, shufflePartitions = 8))
     val bucketed = new SparkBackend(spark, pathsB)
     for (q <- queries.take(3)) {
       val a = bucketed.topPool(q, q, 50, PipelineConfig())
