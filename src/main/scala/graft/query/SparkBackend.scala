@@ -1,69 +1,83 @@
 package graft.query
 
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.{Analyzer, Scoring}
 import graft.corpus.ChunkRow
-import graft.index.{GlobalStats, IndexBuilder, IndexPaths}
+import graft.index.{BlockFiles, GlobalStats, IndexBuilder, IndexPaths}
+import graft.spark.SessionMemo
 
 /** Distributed SearchBackend over the persisted index tables.
   *
   * Physical plan of a pool (SURVEY §3.4 Job 3):
-  *  1. query terms -> idf from the bucket-pruned term-stats scan; the
-  *     default bounded pool takes its candidates from WAND (`Wand.topK`:
-  *     one job, one task per doc shard, each reading its own blocks of the
-  *     query terms' buckets) and re-scores only those rows exactly;
-  *  2. the dense pool (bounded fallback, head terms) is ONE narrow map over
+  *  1. query terms -> idf, read on the driver with no Spark job: each
+  *     missing term's `term_stats/bucket=b` files, with the term filter
+  *     pushed into parquet (`BlockFiles.readTermStats`);
+  *  2. the default bounded pool is ONE Spark job per round (`Wand.round`):
+  *     one task per doc shard reads its own blocks of the query terms'
+  *     buckets, runs WAND, then reads its own candidates' chunk rows from
+  *     its `cbucket=shard` directories and re-scores them exactly; the
+  *     driver merges the shard lists, adds the query bonuses and checks the
+  *     rank-safety bound (see boundedPool);
+  *  3. the dense pool (bounded fallback, head terms) is ONE narrow map over
   *     the cached chunk table: each chunk's base BM25 comes from its own
-  *     text (`Bm25Stats.scoreText`, the same kernel as the bounded re-score
-  *     and `LocalBackend`, summed in query-token order), then its bonuses
-  *     (reference semantics, main.py:140-167) — no posting read, shuffle,
-  *     broadcast or join;
-  *  3. distributed top-k via orderBy().limit() — Catalyst plans
+  *     text (`Bm25Stats.scoreText`, the same kernel as the in-task
+  *     re-score and `LocalBackend`, summed in query-token order), then its
+  *     bonuses (reference semantics, main.py:140-167) — no posting read,
+  *     shuffle, broadcast or join;
+  *  4. distributed top-k via orderBy().limit() — Catalyst plans
   *     TakeOrderedAndProject, no global sort; RM3 feedback
   *     (`topDocsForRm3`) is the same single pass over base BM25;
-  *  4. everything after the <=poolSize pool runs driver-side (Pipeline).
+  *  5. everything after the <=poolSize pool runs driver-side (Pipeline).
   */
 final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     extends SearchBackend with AutoCloseable {
   import spark.implicits._
 
   val stats: GlobalStats = IndexBuilder.loadStats(spark, paths)
-  // bucket count travels with the index — a mismatched constant here would
-  // silently prune the wrong partitions
-  private val nTermBuckets: Int = stats.nTermBuckets
-  // serving state: the dense pool and RM3 read the chunk table in full
-  // (scoring over all chunks, reference semantics), so keep it cached
-  // until close(); postings stay on parquet where term-bucket partition
-  // pruning does the work. The DF keeps the precomputed static-bonus
-  // columns. The fixed chunk and term-stats schemas skip a
-  // schema-inference job each.
+  require(stats.nChunkBuckets == stats.nDocShards,
+    s"index at ${paths.root} has ${stats.nChunkBuckets} chunk buckets for " +
+      s"${stats.nDocShards} doc shards: a full rebuild is required")
+  // the dense pool and RM3 read the chunk table in full (scoring over all
+  // chunks, reference semantics), so keep it cached until close(); the
+  // first dense or RM3 pass fills the cache. Postings, term stats and the
+  // bounded pool's rows stay on parquet, read by directory. The DF keeps
+  // the precomputed static-bonus columns; the fixed schema skips a
+  // schema-inference job. Backends over one table in one session share
+  // the cache entry, so it is counted and dropped by the last close().
   private val chunksRawDF = spark.read.schema(SparkBackend.ChunkSchema).parquet(paths.chunks)
-    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private val openBackends = SessionMemo(spark)
+    .computeIfAbsent(s"open:${paths.chunks}", _ => new AtomicInteger).asInstanceOf[AtomicInteger]
+  openBackends.synchronized {
+    openBackends.incrementAndGet()
+    chunksRawDF.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+  private var closed = false
   private lazy val blocksDF = spark.read.parquet(paths.blocks) // scoresDF only
-  private val termStatsDF = spark.read
-    .schema("term STRING, df BIGINT, idf DOUBLE, bucket INT").parquet(paths.termStats)
   private val idfCache = scala.collection.mutable.HashMap.empty[String, (Double, Long)]
 
   private def statsFor(terms: Seq[String]): Map[String, (Double, Long)] = {
     val missing = terms.distinct.filterNot(idfCache.contains)
     if (missing.nonEmpty) {
-      val buckets = missing.map(IndexBuilder.termBucket(_, nTermBuckets)).distinct
-      val found = termStatsDF
-        .filter(col("bucket").isin(buckets: _*) && col("term").isin(missing: _*))
-        .select("term", "idf", "df").as[(String, Double, Long)].collect()
-        .map(r => r._1 -> (r._2, r._3)).toMap
+      val found = BlockFiles.readTermStats(spark.sparkContext.hadoopConfiguration,
+        paths.termStats, missing, stats.nTermBuckets)
       missing.foreach(t => idfCache(t) = found.getOrElse(t, (0.0, 0L)))
     }
     terms.map(t => t -> idfCache(t)).toMap
   }
 
-  /** Uncaches the chunk table; idempotent. Later calls read it from disk.
-    * Backends over the same table in one session share the cache entry.
+  /** Uncaches the chunk table when this is the last open backend over it
+    * in the session; idempotent. Later calls read it from disk.
     */
-  override def close(): Unit = chunksRawDF.unpersist()
+  override def close(): Unit = openBackends.synchronized {
+    if (!closed) {
+      closed = true
+      if (openBackends.decrementAndGet() == 0) chunksRawDF.unpersist()
+    }
+  }
 
-  /** idf lookup for query terms — bucket-pruned scan of term_stats. */
+  /** idf lookup for query terms, read from term_stats with no Spark job. */
   def idfFor(terms: Seq[String]): Map[String, Double] =
     statsFor(terms).map { case (t, (idf, _)) => t -> idf }
 
@@ -83,7 +97,7 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
       .filter(_._3 != 0.0)
     if (qRows.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF("chunkId", "score")
-    val buckets = qRows.map(r => IndexBuilder.termBucket(r._1, nTermBuckets)).distinct
+    val buckets = qRows.map(r => IndexBuilder.termBucket(r._1, stats.nTermBuckets)).distinct
     val q = qRows.toDF("term", "pos", "idf")
     val k1 = stats.k1; val b = stats.b; val avgdl = stats.avgdl
     // Per-position partial sums keep the whole aggregation inside
@@ -146,15 +160,15 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     // of the corpus gives WAND nothing to prune AND defeats the bounded
     // pool's safety proof, so the default serves it reference-exact (dense
     // pass over all chunks — O(corpus) per query). With headTermWand the
-    // pool candidates come from WAND top-poolSize on base BM25 and only
-    // those rows are fetched + exactly re-scored: the blocks scan (bucket-
-    // pruned) is the only corpus-sized read, the chunk table is touched
-    // only by the candidates' partition-pruned id fetch. Deviation bound:
-    // see PipelineConfig.headTermWand.
+    // pool candidates come from WAND top-poolSize on base BM25, and the
+    // same job's tasks fetch and exactly re-score only those rows: the
+    // blocks scan (bucket-pruned) is the only corpus-sized read, the chunk
+    // table is touched only by each shard's id-filtered fetch. Deviation
+    // bound: see PipelineConfig.headTermWand.
     if (cfg.headTermWand && !cfg.densePoolOnly &&
         dfFor(bmTokens.distinct).values.sum > stats.nDocs / 2) {
       lastPoolPath = "wand-headterm"
-      return wandOnlyPool(ctx, bm25Query, bmTokens, poolSize)
+      return wandOnlyPool(ctx, bm25Query, poolSize)
     }
     if (!cfg.densePoolOnly) {
       boundedPool(ctx, query, bm25Query, bmTokens, poolSize, cfg) match {
@@ -167,23 +181,18 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
   }
 
   /** Head-term serving pool: WAND top-poolSize candidates by base BM25,
-    * exact re-score + bonuses on those rows only (never a chunk-table
-    * scan). Candidate selection ignores bonuses, so vs the dense reference
-    * pool a chunk can be displaced only when its bonus advantage exceeds
-    * its base-score deficit — bounded by maxBonus(query, cfg).
+    * exact re-score (in the WAND tasks) + bonuses on those rows only (never
+    * a chunk-table scan). Candidate selection ignores bonuses, so vs the
+    * dense reference pool a chunk can be displaced only when its bonus
+    * advantage exceeds its base-score deficit — bounded by
+    * maxBonus(query, cfg).
     */
-  private def wandOnlyPool(ctx: Scoring.QueryBonusContext,
-                           bm25Query: String, bmTokens: IndexedSeq[String],
+  private def wandOnlyPool(ctx: Scoring.QueryBonusContext, bm25Query: String,
                            poolSize: Int): IndexedSeq[(ChunkRow, Double)] = {
-    val cand = Wand.topK(spark, paths, stats, bm25Query, poolSize, idfFor)
-    if (cand.isEmpty) return IndexedSeq.empty
-    val rows = fetchChunks(cand.map(_._1))
-    val exactBase = bm25ScoresFor(bmTokens, rows.map(_._1))
-    val scored = scala.collection.mutable.HashMap.empty[Long, (ChunkRow, Double)]
-    scoreCandidatesInto(ctx, rows, exactBase, scored)
-    scored.values.toIndexedSeq
+    val round = Wand.round(spark, paths, stats, bm25Query, poolSize, idfFor, Some(Set.empty))
+    val byId = round.rows.map(f => f.row.chunkId -> f).toMap
+    scoreCandidates(ctx, round.merged.take(poolSize).flatMap(c => byId.get(c._1)))
       .sortBy { case (c, s) => (-s, c.source, c.page, c.chunkIdx) }
-      .take(poolSize)
   }
 
   /** Diagnostics: which path served the last topPool call. */
@@ -199,6 +208,26 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     cfg.proxLambda + cfg.ngramLambda + stats.maxStaticBonus +
       (if (query != null && query.length >= 20) 2.0 else 0.0)
 
+  /** Rank safety: whenever this returns a pool, it is the dense pool.
+    *  - Each shard's task returns its top-M docs by exact base BM25, so the
+    *    union of the shard lists contains the global top-M, and the
+    *    driver's merge `cand` (the union's best M) is the global top-M.
+    *  - A doc outside `cand` has base <= cand's M-th base: the merge cut
+    *    it, or its shard returned M docs and it ranks below them, and that
+    *    shard's M-th base is <= the merged M-th base (the shard alone has
+    *    M docs at or above it).
+    *  - When `cand` holds fewer than M docs, every shard returned fewer
+    *    than M rows, so every doc with a live query term is a candidate and
+    *    an excluded doc has base 0 (weights here are >= 0: a term with a
+    *    negative idf has df > nDocs/2 and takes the dense path).
+    *  - Bonuses add at most bMax, so no excluded doc scores above
+    *    excludedUpper; when theta (the P-th candidate's bonused score)
+    *    exceeds it, the candidates' top P is the dense top P.
+    * "Exhausted" (`Round.allShort`): every shard returned fewer than M
+    * rows. The round then holds every matching doc and its row, so a
+    * larger M merges further from the same lists and runs no job.
+    * The dense fallback (None) is the reference-exact plan.
+    */
   private def boundedPool(ctx: Scoring.QueryBonusContext, query: String,
                           bm25Query: String,
                           bmTokens: IndexedSeq[String], poolSize: Int,
@@ -219,24 +248,28 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     val mCap = 64 * poolSize
     // WAND's candidate order is a deterministic total order, so top-4m is
     // a superset of top-m: across retry rounds only the NEW candidates need
-    // the chunk fetch + exact re-score + driver bonus pass (the difflib
-    // fuzzy term dominates); previous rounds' scores are exact and reusable.
-    val scoredCache = scala.collection.mutable.HashMap.empty[Long, (ChunkRow, Double)]
+    // the fetch + exact re-score (the tasks skip ids already fetched) and
+    // the driver bonus pass (the difflib fuzzy term dominates); previous
+    // rounds' scores are exact and reusable.
+    val fetched = scala.collection.mutable.HashMap.empty[Long, Wand.Fetched]
+    val scored = scala.collection.mutable.HashMap.empty[Long, (ChunkRow, Double)]
+    var round: Wand.Round = null
     while (m <= mCap) {
-      val cand = Wand.topK(spark, paths, stats, bm25Query, m, idfFor)
+      if (round == null || !round.allShort) {
+        round = Wand.round(spark, paths, stats, bm25Query, m, idfFor, Some(fetched.keySet.toSet))
+        round.rows.foreach(f => fetched(f.row.chunkId) = f)
+      }
+      val cand = round.merged.take(m)
       if (cand.isEmpty) return None
-      val exhausted = cand.length < m // all matched docs are candidates
-      val wandMinBase = cand.iterator.map(_._2).min
-      val newIds = cand.map(_._1).filterNot(scoredCache.contains)
-      val rows = fetchChunks(newIds)
-      val exactBase = bm25ScoresFor(bmTokens, rows.map(_._1))
-      scoreCandidatesInto(ctx, rows, exactBase, scoredCache)
-      val scored = cand.iterator.flatMap(c => scoredCache.get(c._1)).toIndexedSeq
+      val complete = cand.length < m // every matching doc is a candidate
+      scoreCandidates(ctx, cand.map(_._1).filterNot(scored.contains).flatMap(fetched.get))
+        .foreach(cs => scored(cs._1.chunkId) = cs)
+      val pool = cand.iterator.flatMap(c => scored.get(c._1)).toIndexedSeq
         .sortBy { case (c, s) => (-s, c.source, c.page, c.chunkIdx) }
-      if (scored.length >= poolSize) {
-        val theta = scored(poolSize - 1)._2
-        val excludedUpper = (if (exhausted) 0.0 else wandMinBase) + bMax + slack
-        if (excludedUpper < theta) return Some(scored.take(poolSize).toIndexedSeq)
+      if (pool.length >= poolSize) {
+        val theta = pool(poolSize - 1)._2
+        val excludedUpper = (if (complete) 0.0 else cand.last._2) + bMax + slack
+        if (excludedUpper < theta) return Some(pool.take(poolSize))
         // Cost-based futility cut (parity-safe: the dense fallback is the
         // reference-exact plan, this only skips retries that rarely pay):
         // excluded docs always have base >= 0, so the bound can never hold
@@ -244,51 +277,44 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
         // is still below bMax after a full round, two more 4x WAND +
         // re-score rounds are unlikely to lift theta past it — serve dense
         // now instead of paying both paths.
-        if (!exhausted && theta <= bMax + slack) return None
+        if (!complete && theta <= bMax + slack) return None
       }
-      if (exhausted) return None // growing m cannot add candidates
+      if (complete) return None // growing m cannot add candidates
       m *= 4
     }
     None
   }
 
-  /** Bonus-score the candidates in parallel on the driver (pure function
-    * per row; the difflib fuzzy pass dominates for long queries) into the
-    * given cache; callers sort by the pool's deterministic order.
+  /** Bonus-score fetched candidates in parallel on the driver (pure
+    * function per row; the difflib fuzzy pass dominates for long queries);
+    * callers sort by the pool's deterministic order.
     */
-  private def scoreCandidatesInto(ctx: Scoring.QueryBonusContext,
-                                  rows: IndexedSeq[(ChunkRow, (Double, Double, Double))],
-                                  exactBase: Map[Long, Double],
-                                  into: scala.collection.mutable.HashMap[Long, (ChunkRow, Double)])
-      : Unit = {
+  private def scoreCandidates(ctx: Scoring.QueryBonusContext,
+                              fetched: Seq[Wand.Fetched]): IndexedSeq[(ChunkRow, Double)] = {
+    val rows = fetched.toIndexedSeq
     val out = new Array[(ChunkRow, Double)](rows.length)
     java.util.stream.IntStream.range(0, rows.length).parallel().forEach { i =>
-      val (c, (pb, mb, gib)) = rows(i)
-      out(i) = (c, ctx.score(exactBase.getOrElse(c.chunkId, 0.0), c.text, pb, mb, gib))
+      val Wand.Fetched(c, base, (pb, mb, gib)) = rows(i)
+      out(i) = (c, ctx.score(base, c.text, pb, mb, gib))
     }
-    out.foreach { case (c, s) => into(c.chunkId) = (c, s) }
+    out.toIndexedSeq
   }
 
-  /** Candidate rows + their precomputed static bonuses (pattern, meta, gib)
-    * from the cached chunk table, the scan pruned to the candidates'
-    * cbucket partitions (the corpus-sublinear path). The bucket count is
-    * the recorded build stat: every index loadStats accepts is
-    * cbucket-partitioned with at least nDocShards buckets.
+  /** Rows of arbitrary ids (ANN candidates), each with its exact base for
+    * `tokens`: one Spark job, one task per doc shard the ids fall in, each
+    * reading only its own `cbucket=shard` directories.
     */
-  private def fetchChunks(ids: Seq[Long])
-      : IndexedSeq[(ChunkRow, (Double, Double, Double))] = {
-    val buckets = ids.map(IndexBuilder.chunkBucket(_, stats.nChunkBuckets)).distinct
-    chunksRawDF
-      .filter(col("cbucket").isin(buckets: _*) && col("chunkId").isin(ids: _*))
-      .select(col("chunkId"), col("docId"), col("source"), col("page"),
-        col("chunkIdx"), col("text"), col("meta"),
-        col("pattern_b"), col("meta_b"), col("gib"))
-      .as[(Long, Long, String, Int, Int, String, graft.corpus.ChunkMeta,
-           Double, Double, Double)]
-      .collect()
-      .map { case (id, docId, source, page, idx, text, meta, pb, mb, gib) =>
-        (ChunkRow(id, docId, source, page, idx, text, meta), (pb, mb, gib))
-      }.toIndexedSeq
+  private def fetchRows(ids: Seq[Long], tokens: IndexedSeq[String]): Seq[Wand.Fetched] = {
+    val byShard = ids.distinct.groupBy(IndexBuilder.chunkBucket(_, stats.nDocShards))
+      .map { case (s, xs) => s -> xs.toSet }
+    if (byShard.isEmpty) return Nil
+    val shards = byShard.keys.toSeq.sorted
+    val conf = SessionMemo.hadoopConf(spark)
+    val root = paths.chunks
+    val st = bm25StatsFor(tokens)
+    spark.sparkContext.parallelize(shards, shards.length).flatMap { s =>
+      Wand.fetchShard(conf.value.value, root, s, byShard(s), tokens, st)._1
+    }.collect().toSeq
   }
 
   /** Reference-exact dense pass: base BM25 plus bonuses on every chunk,
@@ -327,15 +353,13 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
       if (bm25Query == query) qTokens else Analyzer.tokenize(bm25Query).toIndexedSeq
     val ctx = new Scoring.QueryBonusContext(query, qTokens, cfg.proxWindow,
       cfg.proxLambda, cfg.ngramLambda)
-    val rows = fetchChunks(ids)
-    val base = bm25ScoresFor(bmTokens, rows.map(_._1))
-    val byId = rows.map { case (c, (pb, mb, gib)) =>
-      c.chunkId -> ((c, ctx.score(base.getOrElse(c.chunkId, 0.0), c.text, pb, mb, gib)))
-    }.toMap
+    val byId = scoreCandidates(ctx, fetchRows(ids, bmTokens))
+      .map(cs => cs._1.chunkId -> cs).toMap
     ids.flatMap(byId.get).toIndexedSeq
   }
 
-  /** Driver-side exact re-scoring of pool chunks (pool <= 200). */
+  /** Driver-side exact re-scoring of pool chunks (pool <= 200; Pipeline's
+    * re-ranking runs). */
   override def bm25ScoresFor(queryTokens: Seq[String], chunks: Seq[ChunkRow]): Map[Long, Double] = {
     val st = bm25StatsFor(queryTokens)
     chunks.map(c => c.chunkId -> st.scoreText(queryTokens, c.text)).toMap

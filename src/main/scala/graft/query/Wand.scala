@@ -1,9 +1,11 @@
 package graft.query
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.util.SerializableConfiguration
 import graft.analysis.Analyzer
+import graft.corpus.ChunkRow
 import graft.index.{BlockFiles, BlockRow, Codec, GlobalStats, IndexBuilder, IndexPaths}
+import graft.spark.SessionMemo
 
 /** Block-max WAND top-k over the compressed posting blocks (north star:
   * "query-time top-k BM25 scoring uses block-max WAND posting-list
@@ -15,8 +17,11 @@ import graft.index.{BlockFiles, BlockRow, Codec, GlobalStats, IndexBuilder, Inde
   * shard and no shuffle: each task lists and reads its own shard's
   * directories of the live query terms' buckets (`BlockFiles.readShard`),
   * runs `wandShard` and returns its top-k, so the driver merges k*nShards
-  * rows and no Dataset is planned per call. No full head-term posting list
-  * is ever materialized on one executor. This replaces a Dataset
+  * rows and no Dataset is planned per call. On the bounded pool path
+  * (`round` with `fetch`) the same task also reads its candidates' chunk
+  * rows and re-scores them exactly, so a pool round is this one job. No
+  * full head-term posting list is ever materialized on one executor. This
+  * replaces a Dataset
   * `groupByKey(shard).mapGroups`: it paid Catalyst planning and an AQE
   * re-plan per call, and AQE coalesced the shard groups into one task, so
   * the shards ran serially.
@@ -172,21 +177,43 @@ object Wand {
   def topK(spark: SparkSession, paths: IndexPaths, stats: GlobalStats,
            query: String, k: Int,
            idfFor: Seq[String] => Map[String, Double]): Seq[(Long, Double)] =
-    topKReading(spark, paths, stats, query, k, idfFor)._1
+    round(spark, paths, stats, query, k, idfFor, fetch = None).merged.take(k)
 
-  /** `topK`, plus the block files its tasks opened (path, bytes). */
-  private[graft] def topKReading(spark: SparkSession, paths: IndexPaths, stats: GlobalStats,
-                                 query: String, k: Int,
-                                 idfFor: Seq[String] => Map[String, Double])
-      : (Seq[(Long, Double)], Seq[(String, Long)]) = {
+  /** A candidate chunk fetched in its shard's task: the row, its exact base
+    * BM25 (`Bm25Stats.scoreText`, the dense pass's kernel) and its static
+    * bonuses (pattern, meta, gib).
+    */
+  private[graft] final case class Fetched(row: ChunkRow, base: Double, statics: (Double, Double, Double))
+
+  /** One WAND job. `merged` is every shard's top-k, best first (up to
+    * k × shards rows; its first k are the global top-k). `allShort`: every
+    * shard returned fewer than k rows, so `merged` holds every doc with a
+    * live query term and a larger k returns the same list. `rows` are the
+    * fetched candidates, and `opened` the files each shard's task opened
+    * (shard, path, bytes).
+    */
+  private[graft] final case class Round(merged: Seq[(Long, Double)], allShort: Boolean,
+                                        rows: Seq[Fetched], opened: Seq[(Int, String, Long)])
+
+  /** The WAND job behind `topK`. With `fetch = Some(known)`, each shard's
+    * task also reads the chunk rows of its own top-k candidates that are
+    * not in `known`, and re-scores them exactly. The chunk table has one
+    * cbucket per doc shard and `shard = chunkBucket(chunkId, nShards)`, so
+    * those rows sit in the task's own `cbucket=shard` directories.
+    */
+  private[graft] def round(spark: SparkSession, paths: IndexPaths, stats: GlobalStats,
+                           query: String, k: Int,
+                           idfFor: Seq[String] => Map[String, Double],
+                           fetch: Option[Set[Long]]): Round = {
+    val none = Round(Nil, allShort = true, Nil, Nil)
     val tokens = Analyzer.tokenize(query).toIndexedSeq
-    if (tokens.isEmpty) return (Nil, Nil)
+    if (tokens.isEmpty) return none
     val termOrder = tokens.distinct
     val mult = tokens.groupBy(identity).map { case (t, xs) => t -> xs.length }
     val idf = idfFor(termOrder)
     val weights = termOrder.map(t => t -> mult(t) * idf(t)).toMap
     val liveTerms = termOrder.filter(weights(_) != 0.0)
-    if (liveTerms.isEmpty) return (Nil, Nil)
+    if (liveTerms.isEmpty) return none
     val k1 = stats.k1; val b = stats.b; val avgdl = stats.avgdl
     // blocks written before an incremental avgdl re-fit carry maxTfNorm
     // under the old (possibly smaller) avgdl — scale bounds to stay valid
@@ -194,15 +221,33 @@ object Wand {
       if (stats.minBlockAvgdl > 0) math.max(1.0, avgdl / stats.minBlockAvgdl) else 1.0
     val buckets = liveTerms.map(IndexBuilder.termBucket(_, stats.nTermBuckets)).distinct
     val blocksRoot = paths.blocks
-    val sc = spark.sparkContext
-    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    val perShard = sc.parallelize(0 until stats.nDocShards, stats.nDocShards).map { shard =>
-      val (blocks, opened) =
-        BlockFiles.readShard(conf.value.value, blocksRoot, shard, buckets, liveTerms)
-      (wandShard(blocks, termOrder, weights, k, k1, b, avgdl, boundScale), opened)
-    }.collect()
+    val chunksRoot = paths.chunks
+    val rescore = Bm25Stats(stats.nDocs, avgdl, idf, k1, b)
+    val conf = SessionMemo.hadoopConf(spark)
+    val perShard = spark.sparkContext.parallelize(0 until stats.nDocShards, stats.nDocShards)
+      .map { shard =>
+        val c = conf.value.value
+        val (blocks, openedBlocks) = BlockFiles.readShard(c, blocksRoot, shard, buckets, liveTerms)
+        val top = wandShard(blocks, termOrder, weights, k, k1, b, avgdl, boundScale)
+        val (rows, openedChunks) = fetch match {
+          case Some(known) => fetchShard(c, chunksRoot, shard,
+            top.iterator.map(_._1).filterNot(known).toSet, tokens, rescore)
+          case None => (Nil, Nil)
+        }
+        (top, rows, (openedBlocks ++ openedChunks).map { case (f, n) => (shard, f, n) })
+      }.collect()
+    Round(perShard.iterator.flatMap(_._1).toSeq.sortBy { case (doc, s) => (-s, doc) },
+      perShard.forall(_._1.length < k), perShard.toSeq.flatMap(_._2),
+      perShard.toSeq.flatMap(_._3))
+  }
 
-    (perShard.iterator.flatMap(_._1).toSeq.sortBy { case (doc, s) => (-s, doc) }.take(k),
-      perShard.toSeq.flatMap(_._2))
+  /** Task side: the rows of `ids` in chunk bucket `shard`, each with its
+    * exact base for `tokens`.
+    */
+  private[query] def fetchShard(conf: Configuration, chunksRoot: String, shard: Int,
+                                ids: Set[Long], tokens: IndexedSeq[String], st: Bm25Stats)
+      : (Seq[Fetched], Seq[(String, Long)]) = {
+    val (rows, opened) = BlockFiles.readChunks(conf, chunksRoot, shard, ids)
+    (rows.map { case (c, statics) => Fetched(c, st.scoreText(tokens, c.text), statics) }, opened)
   }
 }

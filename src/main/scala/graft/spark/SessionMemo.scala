@@ -1,12 +1,16 @@
 package graft.spark
 
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 /** The engine's one memo: a string-keyed slot map per SparkSession. Each
   * caller keeps its state under its own key prefix (`df:`/`view:` for
   * parquet handles and temp views, `bm25` for the BM25 catalog views,
-  * `docindex:` for the catalog's doc index, `ann:` for ANN preselectors),
+  * `docindex:` for the catalog's doc index, `ann:` for ANN preselectors,
+  * `open:` for the count of open backends per chunk table and
+  * `hadoopConf` for the broadcast Hadoop configuration),
   * so a new session builds its own state instead of being served another
   * session's.
   *
@@ -45,6 +49,16 @@ object SessionMemo {
       case v => v.asInstanceOf[T]
     }
   }
+
+  /** The session's Hadoop configuration, broadcast once. Task-side
+    * readers (`BlockFiles` in the WAND and chunk-fetch tasks) take it from
+    * here instead of broadcasting it per call.
+    */
+  def hadoopConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    getOrPut(spark, "hadoopConf") {
+      val sc = spark.sparkContext
+      sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    }
 
   /** Whether the registry still holds `spark` (the lifetime spec's probe). */
   private[graft] def holds(spark: SparkSession): Boolean = bySession.containsKey(spark)

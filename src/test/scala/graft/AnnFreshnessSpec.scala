@@ -8,7 +8,7 @@ import graft.query._
 /** ANN preselect (brute force + multi-probe LSH + run-D wiring) and the
   * DOI-metadata TTL freshness split.
   */
-class AnnFreshnessSpec extends AnyFunSuite {
+class AnnFreshnessSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -81,7 +81,7 @@ class AnnFreshnessSpec extends AnyFunSuite {
     // the oracles CROSS JOIN an empty query-vector CTE and return nothing;
     // the entries must do the same instead of failing on the missing row
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-noquery").toString
+    val dir = tempDir("graft-noquery")
     val rng = new scala.util.Random(11)
     (1 until 40).map(i => (i.toLong, Array.fill(64)(rng.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import graft.corpus.{Biblio, ChunkMeta, ChunkRow}
 
-class BiblioSpec extends AnyFunSuite {
+class BiblioSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("fallback citekey + collision suffixing parity vs reference") {
@@ -31,7 +31,7 @@ class BiblioSpec extends AnyFunSuite {
 
   test("bibliography broadcast enrichment fills missing fields only") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("biblio").toString
+    val dir = tempDir("biblio")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/biblio.json"),
       """[
         {"pdfFile": "siteA.pdf", "citekey": "smith2020x", "title": "A Paper",

@@ -9,7 +9,7 @@ import graft.query.{PipelineConfig, SearchOutput}
   * config.py:273-289) and the JSON subprocess protocol
   * (subprocess_interface.py:82-300): request types, validation, envelopes.
   */
-class ConfigSpec extends AnyFunSuite {
+class ConfigSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   test("defaults map to the reference PipelineConfig defaults") {
     assert(GraftConfig.toPipelineConfig(GraftConfig.defaults) == PipelineConfig())
@@ -75,7 +75,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("precedence: defaults < yaml < env < cli") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cfg")
+    val dir = java.nio.file.Paths.get(tempDir("graft-cfg"))
     val yaml = dir.resolve("config.yaml")
     java.nio.file.Files.writeString(yaml,
       """bm25:

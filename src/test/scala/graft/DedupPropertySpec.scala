@@ -13,7 +13,7 @@ import graft.index._
   * previous winner changes or disappears. Seeded generators, both paths
   * executed per case.
   */
-class DedupPropertySpec extends AnyFunSuite {
+class DedupPropertySpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -62,16 +62,14 @@ class DedupPropertySpec extends AnyFunSuite {
       }
       val mutated = base.flatMap(p => byUrl.get(p.url))
 
-      val out = IndexPaths(java.nio.file.Files
-        .createTempDirectory(s"graft-prop-$seed").toString)
+      val out = IndexPaths(tempDir(s"graft-prop-$seed"))
       ResumableBuild.run(spark, spark.createDataset(base), out, build, chunker, resume)
       ResumableBuild.incrementalUpdate(spark, spark.createDataset(mutated),
         changedUrls.toSeq.toDF("url"), out, build, chunker, resume)
       if (TableIO.readManifest(out.manifest).get.get("dedup_mode")
           .contains("change-proportional")) cheapPathSeen += 1
 
-      val out2 = IndexPaths(java.nio.file.Files
-        .createTempDirectory(s"graft-prop-direct-$seed").toString)
+      val out2 = IndexPaths(tempDir(s"graft-prop-direct-$seed"))
       ResumableBuild.run(spark, spark.createDataset(mutated), out2, build,
         chunker, resume)
 

@@ -14,7 +14,7 @@ import graft.query.EmbeddingProvider
   * check (the reference invalidates its FAISS cache by manifest hash,
   * semantic_index.py:25-71).
   */
-class EmbeddingFreshnessSpec extends AnyFunSuite {
+class EmbeddingFreshnessSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -48,7 +48,7 @@ class EmbeddingFreshnessSpec extends AnyFunSuite {
 
   test("re-crawl replaces exactly the changed doc's vectors; untouched partitions byte-identical") {
     val out = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-embfresh").toString)
+      tempDir("graft-embfresh"))
     ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
     EmbeddingTable.build(spark, out, HashProvider)
     assert(EmbeddingTable.isFresh(spark, out))
@@ -104,7 +104,7 @@ class EmbeddingFreshnessSpec extends AnyFunSuite {
 
   test("annFor kind=ivf: codebook fitted once and persisted; all-cells probe == brute; fit survives snapshot churn") {
     val out = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-embivf").toString)
+      tempDir("graft-embivf"))
     ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
     EmbeddingTable.build(spark, out, HashProvider)
 
@@ -201,7 +201,7 @@ class EmbeddingFreshnessSpec extends AnyFunSuite {
 
   test("removed urls evict their vectors on refresh") {
     val out = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-embevict").toString)
+      tempDir("graft-embevict"))
     ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
     EmbeddingTable.build(spark, out, HashProvider)
     val urls = pagesA.select("url").as[String].collect()

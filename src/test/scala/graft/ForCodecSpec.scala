@@ -14,7 +14,7 @@ import graft.query.{SparkBackend, Wand}
   * VByte blocks (stats tagged "vbyte", or written before the tag existed)
   * is refused at open, and the next update rebuilds it in full.
   */
-class ForCodecSpec extends AnyFunSuite {
+class ForCodecSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val chunker = ChunkerConfig(qualityCheck = false)
@@ -40,7 +40,7 @@ class ForCodecSpec extends AnyFunSuite {
   }
 
   private def tempIndex(name: String): IndexPaths =
-    IndexPaths(java.nio.file.Files.createTempDirectory(name).toString)
+    IndexPaths(tempDir(name))
 
   private def runBuild(recrawl: Boolean): IndexPaths = {
     val out = tempIndex("graft-layout")

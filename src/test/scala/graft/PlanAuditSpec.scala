@@ -15,12 +15,12 @@ import graft.query.SparkBackend
   * dimension sides, and TakeOrderedAndProject (never a global sort) for
   * top-k.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val (paths, backend) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit").toString
+    val dir = tempDir("graft-planaudit")
     val p = IndexPaths(dir)
     IndexBuilder.build(spark, spark.createDataset(Goldens.chunks), p,
       BuildConfig(nTermBuckets = 8, nDocShards = 2, shufflePartitions = 8))
@@ -67,7 +67,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q_rrf_fusion numbers only the top 200 rows of each run") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-docs").toString
+    val dir = tempDir("graft-planaudit-docs")
     Goldens.chunks.map(c => (c.chunkId, c.text, c.source)).toDF("doc_id", "text", "source")
       .write.parquet(s"$dir/documents.parquet")
     // a window's input is bounded when, below the row-preserving operators

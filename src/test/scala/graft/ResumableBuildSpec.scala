@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.{ChunkerConfig, ChunkerJob, PageDoc, WebPages}
 import graft.index._
 
-class ResumableBuildSpec extends AnyFunSuite {
+class ResumableBuildSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -19,7 +19,7 @@ class ResumableBuildSpec extends AnyFunSuite {
     .map(p => PageDoc(p.url, 1, p.text, None))
 
   test("build resumes from checkpoints after a mid-build crash") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-resume").toString
+    val dir = tempDir("graft-resume")
     val out = IndexPaths(dir)
     val ex = intercept[RuntimeException] {
       ResumableBuild.chunkPhase(spark, pagesA, out, chunker,
@@ -35,7 +35,7 @@ class ResumableBuildSpec extends AnyFunSuite {
     val stats = ResumableBuild.indexPhase(spark, out, build, resume)
 
     // equivalent non-resumed build
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-direct").toString
+    val dir2 = tempDir("graft-direct")
     val out2 = IndexPaths(dir2)
     val direct = IndexBuilder.build(spark,
       ChunkerJob.chunk(pagesA, chunker), out2, build)
@@ -55,7 +55,7 @@ class ResumableBuildSpec extends AnyFunSuite {
   }
 
   test("the chunk phase writes one chunks_raw file per bucket directory") {
-    val out = IndexPaths(java.nio.file.Files.createTempDirectory("graft-rawfiles").toString)
+    val out = IndexPaths(tempDir("graft-rawfiles"))
     val pages = pagesA
     assert(pages.rdd.getNumPartitions > 1, "setup: a multi-partition input")
     ResumableBuild.run(spark, pages, out, build, chunker, resume)
@@ -75,7 +75,7 @@ class ResumableBuildSpec extends AnyFunSuite {
   }
 
   test("chunker-config change invalidates checkpoints") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-inval").toString
+    val dir = tempDir("graft-inval")
     val out = IndexPaths(dir)
     ResumableBuild.chunkPhase(spark, pagesA, out, chunker, resume)
     assert(TableIO.readCheckpoints(out.checkpoints).size == resume.nInputBuckets)
@@ -86,7 +86,7 @@ class ResumableBuildSpec extends AnyFunSuite {
   }
 
   test("warc_ts changed-detection: a re-crawled url triggers exactly its bucket") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ts").toString
+    val dir = tempDir("graft-ts")
     val out = IndexPaths(dir)
     val crawlA = WebPages.generate(spark, 150, seed = 42, partitions = 4)
     ResumableBuild.run(spark, crawlA.map(p => PageDoc(p.url, 1, p.text, None)),
@@ -124,7 +124,7 @@ class ResumableBuildSpec extends AnyFunSuite {
 
   test("incremental update rebuilds only affected doc shards' block partitions") {
     val build16 = build.copy(nDocShards = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-shardincr").toString
+    val dir = tempDir("graft-shardincr")
     val out = IndexPaths(dir)
     ResumableBuild.run(spark, pagesA, out, build16, chunker, resume)
 
@@ -248,7 +248,7 @@ class ResumableBuildSpec extends AnyFunSuite {
 
     // result parity vs a from-scratch build over the same final corpus
     val out2 = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-shardincr-direct").toString)
+      tempDir("graft-shardincr-direct"))
     val direct = IndexBuilder.build(spark,
       ChunkerJob.chunk(pagesB, chunker), out2, build16)
     assert(stats.nDocs == direct.nDocs)
@@ -290,7 +290,7 @@ class ResumableBuildSpec extends AnyFunSuite {
 
   test("a metadata-only change is caught by the incremental diff (static bonuses depend on it)") {
     val build16 = build.copy(nDocShards = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-metaincr").toString
+    val dir = tempDir("graft-metaincr")
     val out = IndexPaths(dir)
     ResumableBuild.run(spark, pagesA, out, build16, chunker, resume)
     val targetUrl = pagesA.select("url").as[String].orderBy("url").head()
@@ -309,7 +309,7 @@ class ResumableBuildSpec extends AnyFunSuite {
   }
 
   test("a crashed incremental swap (pending_incremental marker) forces a full rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pending").toString
+    val dir = tempDir("graft-pending")
     val out = IndexPaths(dir)
     ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
     // simulate a crash inside the shard-swap window of a previous update
@@ -343,7 +343,7 @@ class ResumableBuildSpec extends AnyFunSuite {
   }
 
   test("incremental update evicts removed urls, including a fully-emptied bucket") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-evict").toString
+    val dir = tempDir("graft-evict")
     val out = IndexPaths(dir)
     ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
     // remove EVERY url of one bucket: its re-chunk yields zero rows, and
@@ -363,14 +363,14 @@ class ResumableBuildSpec extends AnyFunSuite {
       s"${ResumableBuild.chunksRawDir(out)}/bucket=$b0")),
       "emptied raw bucket dir must be deleted (stale under dynamic overwrite)")
     val direct = IndexBuilder.build(spark, ChunkerJob.chunk(pagesB, chunker),
-      IndexPaths(java.nio.file.Files.createTempDirectory("graft-evict-d").toString),
+      IndexPaths(tempDir("graft-evict-d")),
       build)
     assert(stats.nDocs == direct.nDocs)
     assert(!TableIO.readManifest(out.manifest).get.contains("pending_update"))
   }
 
   test("a crashed update (pending_update marker) retries as a full rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pupd").toString
+    val dir = tempDir("graft-pupd")
     val out = IndexPaths(dir)
     ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
     // simulate: previous update crashed after its chunk phase — the
@@ -387,7 +387,7 @@ class ResumableBuildSpec extends AnyFunSuite {
     assert(!m.contains("incremental_shards"),
       "interrupted retry must take the full-rebuild path, not shard-grain")
     val direct = IndexBuilder.build(spark, ChunkerJob.chunk(pagesB, chunker),
-      IndexPaths(java.nio.file.Files.createTempDirectory("graft-pupd-d").toString),
+      IndexPaths(tempDir("graft-pupd-d")),
       build)
     assert(stats.nDocs == direct.nDocs)
     assert(math.abs(stats.avgdl - direct.avgdl) < 1e-12)
@@ -398,7 +398,7 @@ class ResumableBuildSpec extends AnyFunSuite {
 
   test("a raw-sigs bucket missing for an untouched bucket declines to a full rebuild") {
     val build16 = build.copy(nDocShards = 16)
-    val out = IndexPaths(java.nio.file.Files.createTempDirectory("graft-sigsgap").toString)
+    val out = IndexPaths(tempDir("graft-sigsgap"))
     ResumableBuild.run(spark, pagesA, out, build16, chunker, resume)
     val targetUrl = pagesA.select("url").as[String].orderBy("url").head()
     val targetB = IndexBuilder.termBucket(targetUrl, resume.nInputBuckets)
@@ -418,7 +418,7 @@ class ResumableBuildSpec extends AnyFunSuite {
     assert(!m.contains("incremental_shards"), "a coverage gap must take the full rebuild")
     assert(!m.keySet.exists(_.startsWith("pending_")), s"marker left behind: $m")
     val out2 = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-sigsgap-direct").toString)
+      tempDir("graft-sigsgap-direct"))
     IndexBuilder.build(spark, ChunkerJob.chunk(pagesB, chunker), out2, build16)
     val b1 = new graft.query.SparkBackend(spark, out)
     val b2 = new graft.query.SparkBackend(spark, out2)
@@ -457,7 +457,7 @@ class ResumableBuildSpec extends AnyFunSuite {
       .withColumn("ubucket", lit(0))
       .withColumn("cbucket", pmod(xxhash64(col("chunkId")), lit(nSh)).cast("int"))
     val out = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-avgdl").toString)
+      tempDir("graft-avgdl"))
     val s0 = IndexBuilder.build(spark, spark.createDataset(corpus(_ => 10)), out, cfg)
     // update 1: shards 0,1 rebuilt under a LARGER avgdl; 2,3 left stale
     val shard01 = (idsByShard(0) ++ idsByShard(1)).toSet
@@ -477,7 +477,7 @@ class ResumableBuildSpec extends AnyFunSuite {
   }
 
   test("incremental update reprocesses only changed urls' buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-incr").toString
+    val dir = tempDir("graft-incr")
     val out = IndexPaths(dir)
     ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
     val priorHashes = ResumableBuild.urlTextHashes(

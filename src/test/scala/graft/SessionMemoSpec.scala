@@ -14,7 +14,7 @@ import graft.spark.{DocIndex, SessionMemo}
   * builds its own and answers the same, and a stopped session leaves the
   * registry.
   */
-class SessionMemoSpec extends AnyFunSuite {
+class SessionMemoSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val other = spark.newSession()
@@ -22,7 +22,7 @@ class SessionMemoSpec extends AnyFunSuite {
   /** An sf dir whose `documents` texts carry the catalog query's terms. */
   private lazy val dir: String = {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft-sessionmemo-docs").toString
+    val d = tempDir("graft-sessionmemo-docs")
     val words = Seq("spark", "hash", "join", "scan", "merge", "sort", "window", "shuffle")
     (1 to 60).map { i =>
       (i.toLong, (0 until 12).map(j => words((i * 7 + j * 3) % words.length)).mkString(" "),
@@ -49,7 +49,7 @@ class SessionMemoSpec extends AnyFunSuite {
     assert(!(DocIndex.backendFor(other, dir)._2 eq backend), "call in a new session")
 
     import spark.implicits._
-    val out = IndexPaths(Files.createTempDirectory("graft-sessionmemo").toString)
+    val out = IndexPaths(tempDir("graft-sessionmemo"))
     ResumableBuild.run(spark,
       WebPages.generate(spark, 60, seed = 7, partitions = 4)
         .map(p => PageDoc(p.url, 1, p.text, None)),
@@ -85,9 +85,17 @@ class SessionMemoSpec extends AnyFunSuite {
     val done = child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
     if (!done) child.destroyForcibly()
     val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
+    log.delete()
     assert(done && child.exitValue() == 0, s"child failed:\n$out")
     assert(out.contains("first session held: false") && out.contains("second session held: true"), out)
     assert(out.contains("first doc index dir exists: false"), out)
+    assert(out.contains("second context's broadcast is fresh and readable: true"), out)
+  }
+
+  test("the Hadoop configuration is broadcast once per session") {
+    val b = SessionMemo.hadoopConf(spark)
+    assert(SessionMemo.hadoopConf(spark).id == b.id, "second call in the same session")
+    assert(SessionMemo.hadoopConf(other).id != b.id, "call in a new session")
   }
 
   test("src/main declares no memo map outside SessionMemo") {
@@ -124,12 +132,18 @@ object SessionMemoChild {
     (1 to 20).map(i => (i.toLong, s"spark hash join scan $i", s"doc$i.pdf"))
       .toDF("doc_id", "text", "source").write.parquet(s"$docs/documents.parquet")
     val (paths, _) = DocIndex.backendFor(first, docs.toString)
+    val conf = SessionMemo.hadoopConf(first)
     first.stop()
     val second = session()
     SessionMemo(second).put("probe", "second")
+    val conf2 = SessionMemo.hadoopConf(second)
+    val readable = second.sparkContext.parallelize(1 to 2, 2)
+      .map(_ => conf2.value.value.get("fs.defaultFS") != null).collect().forall(identity)
+    println(s"second context's broadcast is fresh and readable: ${!(conf2 eq conf) && readable}")
     println(s"first session held: ${SessionMemo.holds(first)}")
     println(s"second session held: ${SessionMemo.holds(second)}")
     println(s"first doc index dir exists: ${Files.exists(Paths.get(paths.root))}")
     second.stop()
+    org.apache.commons.io.FileUtils.deleteQuietly(docs.toFile)
   }
 }

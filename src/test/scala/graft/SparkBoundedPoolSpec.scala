@@ -1,19 +1,19 @@
 package graft
 
-import org.apache.spark.{ExecutedPlans, JobCount}
+import org.apache.spark.{ExecutedPlans, JobCount, JobTasks}
 import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.{Analyzer, Scoring}
 import graft.corpus.{ChunkRow, ChunkerConfig, ChunkerJob, PageDoc, WebPages}
-import graft.index.{BuildConfig, IndexBuilder, IndexPaths}
-import graft.query.{Bm25, Bm25Stats, PipelineConfig, SparkBackend}
+import graft.index.{BlockFiles, BuildConfig, IndexBuilder, IndexPaths, ResumableBuild, TableIO}
+import graft.query.{Bm25, Bm25Stats, Pipeline, PipelineConfig, SparkBackend, Wand}
 
 /** The rank-safe bounded pool (WAND top-M superset + exact re-score) must
   * return the exact same pool — ids AND scores — as the reference-exact
   * dense bonus pass, and must actually engage (not just fall back) on a
   * corpus large enough that the safety bound is provable.
   */
-class SparkBoundedPoolSpec extends AnyFunSuite {
+class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val (paths, backend) = {
@@ -21,8 +21,7 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
     val pages = WebPages.generate(spark, 2000, 42, 8)
       .map(p => PageDoc(p.url, 1, p.text, None))
     val chunks = ChunkerJob.chunk(pages, ChunkerConfig())
-    val p = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-bounded").toString)
+    val p = IndexPaths(tempDir("graft-bounded"))
     IndexBuilder.build(spark, chunks, p,
       BuildConfig(nTermBuckets = 8, nDocShards = 2, shufflePartitions = 8))
     (p, new SparkBackend(spark, p))
@@ -41,21 +40,123 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
     "spark shuffle partition",
     "index build throughput")
 
-  test("bounded pool == dense pool (ids, scores, order) and engages") {
+  /** Asserts that `be`'s default pool equals its dense pool (ids, scores,
+    * order) for every query and pool size; returns how many took the
+    * bounded path.
+    */
+  private def boundedEqualsDense(be: SparkBackend, label: String): Int = {
     var engaged = 0
     for (q <- queries; poolSize <- Seq(20, 100)) {
-      val dense = backend.topPool(q, q, poolSize,
-        PipelineConfig(densePoolOnly = true))
-      assert(backend.lastPoolPath == "dense")
-      val auto = backend.topPool(q, q, poolSize, PipelineConfig())
-      if (backend.lastPoolPath == "bounded") engaged += 1
+      val dense = be.topPool(q, q, poolSize, PipelineConfig(densePoolOnly = true))
+      assert(be.lastPoolPath == "dense")
+      val auto = be.topPool(q, q, poolSize, PipelineConfig())
+      if (be.lastPoolPath == "bounded") engaged += 1
       assert(auto.map(_._1.chunkId) == dense.map(_._1.chunkId),
-        s"'$q' pool=$poolSize ids differ (path=${backend.lastPoolPath})")
+        s"$label '$q' pool=$poolSize ids differ (path=${be.lastPoolPath})")
       auto.zip(dense).foreach { case ((_, gs), (_, es)) =>
-        assert(gs == es, s"'$q' pool=$poolSize score $gs != $es")
+        assert(gs == es, s"$label '$q' pool=$poolSize score $gs != $es")
       }
     }
-    assert(engaged > 0, "bounded path never engaged — safety bound broken or corpus too small")
+    engaged
+  }
+
+  test("bounded pool == dense pool (ids, scores, order) and engages") {
+    assert(boundedEqualsDense(backend, "cbucket index") > 0,
+      "bounded path never engaged — safety bound broken or corpus too small")
+  }
+
+  /** A url-bucketed index after a shard-grain incremental update: its
+    * chunk rows lie under several `ubucket` dirs, in files of the build and
+    * of the update.
+    */
+  private lazy val updated: IndexPaths = {
+    import spark.implicits._
+    val pages = WebPages.generate(spark, 800, 42, 8)
+      .map(p => PageDoc(p.url, 1, p.text, None)).collect().toSeq
+    val p = IndexPaths(tempDir("graft-bounded-updated"))
+    val cfg = BuildConfig(nTermBuckets = 8, nDocShards = 8, shufflePartitions = 8)
+    val resume = ResumableBuild.ResumeConfig(nInputBuckets = 4)
+    ResumableBuild.run(spark, spark.createDataset(pages), p, cfg, ChunkerConfig(), resume)
+    val url = pages.head.url
+    val recrawl = pages.map(pg =>
+      if (pg.url == url) pg.copy(text = pg.text + " machine learning recrawl sentinel") else pg)
+    ResumableBuild.incrementalUpdate(spark, spark.createDataset(recrawl),
+      Seq(url).toDF("url"), p, cfg, ChunkerConfig(), resume)
+    assert(TableIO.readManifest(p.manifest).exists(_.contains("incremental_shards")),
+      "expected the shard-grain incremental path, not a full rebuild")
+    p
+  }
+
+  test("bounded pool == dense pool on an updated url-bucketed index") {
+    val be = new SparkBackend(spark, updated)
+    try assert(boundedEqualsDense(be, "url-bucketed index") > 0, "bounded path never engaged")
+    finally be.close()
+  }
+
+  test("the chunk reader matches Catalyst across ubucket dirs and an update's files") {
+    val expected = IndexFilesSpec.catalystRows(spark, updated)
+    val ids = expected.values.flatten.map(_._1.chunkId).toSet
+    val conf = spark.sparkContext.hadoopConfiguration
+    val writeId = "part-\\d+-([0-9a-f-]{36})".r
+    val writes = scala.collection.mutable.Set.empty[String]
+    for (s <- 0 until 8) {
+      val (rows, opened) = BlockFiles.readChunks(conf, updated.chunks, s, ids)
+      assert(rows.length == expected(s).size && rows.toSet == expected(s), s"cbucket $s")
+      assert(opened.forall(_._1.contains(s"/cbucket=$s/")), s"cbucket $s: $opened")
+      assert(opened.map(_._1.replaceAll(".*/(ubucket=\\d+)/.*", "$1")).distinct.size > 1,
+        s"cbucket $s: rows under one ubucket dir: $opened")
+      writes ++= opened.flatMap(o => writeId.findFirstMatchIn(o._1).map(_.group(1)))
+    }
+    assert(writes.size >= 2, s"expected files of the build and of the update: $writes")
+  }
+
+  test("each WAND shard task fetches and re-scores its candidates from its own chunk bucket") {
+    val be = new SparkBackend(spark, updated)
+    try {
+      val q = queries.head
+      val (round, tasks) = JobTasks(spark.sparkContext)(
+        Wand.round(spark, updated, be.stats, q, 50, be.idfFor, fetch = Some(Set.empty)))
+      assert(tasks == Seq(be.stats.nDocShards), s"tasks per job $tasks")
+      val chunkFiles = round.opened.filter(_._2.contains("/chunks/"))
+      assert(chunkFiles.nonEmpty)
+      chunkFiles.foreach { case (s, f, _) =>
+        assert(f.contains(s"/cbucket=$s/"), s"shard $s's task opened $f") }
+      // every shard list's candidate comes back once, exactly re-scored
+      val cands = round.merged.map(_._1)
+      assert(round.rows.map(_.row.chunkId).sorted == cands.sorted)
+      val exact = be.bm25ScoresFor(Analyzer.tokenize(q).toIndexedSeq, round.rows.map(_.row))
+      round.rows.foreach(f => assert(f.base == exact(f.row.chunkId)))
+      assert(round.merged.take(50) == Wand.topK(spark, updated, be.stats, q, 50, be.idfFor))
+      // ids the driver already holds are left out
+      val known = cands.take(10).toSet
+      val again = Wand.round(spark, updated, be.stats, q, 50, be.idfFor, fetch = Some(known))
+      assert(again.merged == round.merged)
+      assert(again.rows.map(_.row.chunkId).toSet == cands.toSet -- known)
+    } finally be.close()
+  }
+
+  test("a bounded light search runs one Spark job, its terms cached or one of them not") {
+    val be = new SparkBackend(spark, paths)
+    val cfg = PipelineConfig()
+    def search(q: String): Int = {
+      val (_, jobs) = JobCount(spark.sparkContext)(Pipeline.searchTopK(be, q, cfg))
+      assert(be.lastPoolPath == "bounded", s"'$q' took the ${be.lastPoolPath} path")
+      jobs
+    }
+    try {
+      val light = queries.find { q =>
+        be.topPool(q, q, cfg.poolSize, cfg)
+        be.lastPoolPath == "bounded"
+      }.getOrElse(fail("no query takes the bounded path"))
+      assert(search(light) == 1, s"'$light' with every term cached")
+      // a rare term the backend has not looked up yet
+      import spark.implicits._
+      val rare = spark.read.parquet(paths.termStats)
+        .filter("df between 3 and 30 and term rlike '^[a-z]{5,}$'")
+        .select("term").as[String].collect().sorted
+        .find(t => !light.contains(t)).getOrElse(fail("no rare term"))
+      assert(search(s"$light $rare") == 1, s"'$light $rare' with '$rare' not cached")
+    } finally be.close()
   }
 
   /** The most frequent indexed term: a head term (df > nDocs/2 on a Zipf
@@ -173,8 +274,7 @@ class SparkBoundedPoolSpec extends AnyFunSuite {
     val pages = WebPages.generate(spark, 800, 42, 8)
       .map(p => PageDoc(p.url, 1, p.text, None))
     val chunks = ChunkerJob.chunk(pages, ChunkerConfig())
-    val pathsB = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-cbucket").toString)
+    val pathsB = IndexPaths(tempDir("graft-cbucket"))
     IndexBuilder.build(spark, chunks, pathsB,
       BuildConfig(nTermBuckets = 8, nDocShards = 16, shufflePartitions = 8))
     val bucketed = new SparkBackend(spark, pathsB)

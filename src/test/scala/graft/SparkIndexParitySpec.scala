@@ -15,12 +15,12 @@ import graft.query.{LocalBackend, Pipeline, PipelineConfig, SparkBackend, Wand}
   * query pipeline + WAND) against the reference goldens and the in-memory
   * oracle path.
   */
-class SparkIndexParitySpec extends AnyFunSuite {
+class SparkIndexParitySpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   private lazy val spark = SparkTestSession.spark
   private lazy val corpus = Goldens.corpus
   private lazy val paths = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-index").toString
+    val dir = tempDir("graft-index")
     val p = IndexPaths(dir)
     import spark.implicits._
     val ds = spark.createDataset(Goldens.chunks)
@@ -124,10 +124,10 @@ class SparkIndexParitySpec extends AnyFunSuite {
     val liveBuckets = liveTerms(q).map(bucketOf).toSet
     val warm = Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor)
     // one task per doc shard: no listing, schema-inference or shuffle job
-    val ((again, opened), jobs) = JobCount(spark.sparkContext) {
-      Wand.topKReading(spark, paths, backend.stats, q, 10, backend.idfFor)
+    val (round, jobs) = JobCount(spark.sparkContext) {
+      Wand.round(spark, paths, backend.stats, q, 10, backend.idfFor, fetch = None)
     }
-    assert(again == warm)
+    assert(round.merged.take(10) == warm)
     assert(jobs == 1, s"'$q' ran $jobs Spark jobs")
     // the tasks open every data file of the live buckets' directories, and
     // no other file
@@ -137,7 +137,7 @@ class SparkIndexParitySpec extends AnyFunSuite {
         .asScala.map(_.getCanonicalPath)
     }
     assert(liveFiles.nonEmpty)
-    val openedFiles = opened.map { case (f, _) =>
+    val openedFiles = round.opened.map { case (_, f, _) =>
       new java.io.File(new java.net.URI(f)).getCanonicalPath }
     assert(openedFiles.toSet == liveFiles, s"opened $openedFiles, live buckets $liveBuckets")
     assert(openedFiles.distinct.length == openedFiles.length)
@@ -164,7 +164,7 @@ class SparkIndexParitySpec extends AnyFunSuite {
       } finally be.close()
     }
     for (n <- Seq(1, 3, 8)) {
-      val p = IndexPaths(java.nio.file.Files.createTempDirectory(s"graft-shards$n").toString)
+      val p = IndexPaths(tempDir(s"graft-shards$n"))
       IndexBuilder.build(spark, spark.createDataset(Goldens.chunks), p,
         BuildConfig(k1 = k1, b = b, nTermBuckets = 8, nDocShards = n, shufflePartitions = 8))
       check(p, s"$n shards")
@@ -173,7 +173,7 @@ class SparkIndexParitySpec extends AnyFunSuite {
     val pages = corpus.get("pages").elements().asScala.toList.map { pg =>
       PageDoc(pg.get("source").asText(), pg.get("page").asInt(), pg.get("text").asText(), None)
     }
-    val p = IndexPaths(java.nio.file.Files.createTempDirectory("graft-shardsincr").toString)
+    val p = IndexPaths(tempDir("graft-shardsincr"))
     val cfg = BuildConfig(k1 = k1, b = b, nTermBuckets = 8, nDocShards = 8, shufflePartitions = 8)
     val chunker = ChunkerConfig(qualityCheck = false)
     val resume = ResumableBuild.ResumeConfig(nInputBuckets = 4)
@@ -189,7 +189,7 @@ class SparkIndexParitySpec extends AnyFunSuite {
   }
 
   test("close uncaches the chunk table; a later backend serves the same top-k") {
-    val copy = java.nio.file.Files.createTempDirectory("graft-close").toFile
+    val copy = new java.io.File(tempDir("graft-close"))
     FileUtils.copyDirectory(new java.io.File(paths.root), copy)
     val p = IndexPaths(copy.getPath)
     // the backend reads the chunk table with its fixed schema
@@ -213,12 +213,28 @@ class SparkIndexParitySpec extends AnyFunSuite {
     assert(!cached)
   }
 
+  test("closing one of two backends over a table keeps it cached for the other") {
+    val copy = new java.io.File(tempDir("graft-twoopen"))
+    FileUtils.copyDirectory(new java.io.File(paths.root), copy)
+    val p = IndexPaths(copy.getPath)
+    def cached: Boolean = spark.sharedState.cacheManager.lookupCachedData(
+      spark.read.schema(SparkBackend.ChunkSchema).parquet(p.chunks)
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+    val first = new SparkBackend(spark, p)
+    val second = new SparkBackend(spark, p)
+    first.close()
+    first.close() // idempotent: it does not count twice
+    assert(cached, "closing one backend uncached the table under the other")
+    second.close()
+    assert(!cached, "the last close left the table cached")
+  }
+
   test("WAND skips a live term's missing bucket directory") {
     val q = multiBucketQuery
     val live = liveTerms(q)
     val gone = live.head
     val kept = live.filter(bucketOf(_) != bucketOf(gone))
-    val copy = java.nio.file.Files.createTempDirectory("graft-nobucket").toFile
+    val copy = new java.io.File(tempDir("graft-nobucket"))
     FileUtils.copyDirectory(new java.io.File(paths.root), copy)
     val p = IndexPaths(copy.getPath)
     FileUtils.deleteDirectory(new java.io.File(s"${p.blocks}/bucket=${bucketOf(gone)}"))
@@ -246,7 +262,7 @@ class SparkIndexParitySpec extends AnyFunSuite {
     val chunks = texts.zipWithIndex.map { case (t, i) =>
       graft.corpus.ChunkRow(i.toLong, i.toLong, s"s$i", 1, 0, t, graft.corpus.ChunkMeta())
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-negidf").toString
+    val dir = tempDir("graft-negidf")
     val p = IndexPaths(dir)
     IndexBuilder.build(spark, spark.createDataset(chunks), p,
       BuildConfig(nTermBuckets = 4, nDocShards = 2, shufflePartitions = 4))
@@ -276,7 +292,7 @@ class SparkIndexParitySpec extends AnyFunSuite {
       graft.corpus.ChunkRow(i.toLong, i.toLong, s"s$i", 1, 0,
         s"${alpha}common tokens everywhere", graft.corpus.ChunkMeta())
     }
-    val p = IndexPaths(java.nio.file.Files.createTempDirectory("graft-rm3floor").toString)
+    val p = IndexPaths(tempDir("graft-rm3floor"))
     IndexBuilder.build(spark, spark.createDataset(chunks), p,
       BuildConfig(nTermBuckets = 4, nDocShards = 2, shufflePartitions = 4))
     val be = new SparkBackend(spark, p)
@@ -332,7 +348,7 @@ class SparkIndexParitySpec extends AnyFunSuite {
     val chunks = texts.zipWithIndex.map { case (t, i) =>
       graft.corpus.ChunkRow(i.toLong, i.toLong, s"s$i", 1, 0, t, graft.corpus.ChunkMeta())
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards7").toString
+    val dir = tempDir("graft-shards7")
     val p = IndexPaths(dir)
     IndexBuilder.build(spark, spark.createDataset(chunks), p,
       BuildConfig(nTermBuckets = 4, nDocShards = 7, shufflePartitions = 8))

@@ -13,7 +13,7 @@ import graft.streaming.StreamIngest
   * produce the SAME index as the batch `update` path over the same final
   * corpus — and must take the change-proportional route, not a rebuild.
   */
-class StreamIngestSpec extends AnyFunSuite {
+class StreamIngestSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -33,12 +33,11 @@ class StreamIngestSpec extends AnyFunSuite {
 
     // --- streaming path ---
     val outS = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-streamingest").toString)
+      tempDir("graft-streamingest"))
     val input = MemoryStream[(String, Timestamp, String)]
     val query = input.toDF().toDF("url", "warc_ts", "text")
       .writeStream
-      .option("checkpointLocation", java.nio.file.Files
-        .createTempDirectory("graft-streamckpt").toString)
+      .option("checkpointLocation", tempDir("graft-streamckpt"))
       .foreachBatch(StreamIngest.sink(outS, build, chunker, resume))
       .start()
     // batch 1: the full initial crawl
@@ -71,7 +70,7 @@ class StreamIngestSpec extends AnyFunSuite {
 
     // --- batch `update` path over the same corpus history ---
     val outB = IndexPaths(
-      java.nio.file.Files.createTempDirectory("graft-batchupd").toString)
+      tempDir("graft-batchupd"))
     val pagesA = spark.createDataset(crawlA.map { case (u, t) =>
       PageDoc(u, 1, t, None) })
     ResumableBuild.run(spark, pagesA, outB, build, chunker, resume)

@@ -10,13 +10,13 @@ import graft.index.TableIO
   * stand-in): lineage must survive crash at any phase boundary, concurrent
   * writers, and hostile field content. Pure JVM — no Spark session.
   */
-class TableIOSeamSpec extends AnyFunSuite {
+class TableIOSeamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   private def samples[T](gen: Gen[T], n: Int = 200): Seq[T] =
     (1 to n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("graft-seam").resolve(name).toString
+    java.nio.file.Paths.get(tempDir("graft-seam")).resolve(name).toString
 
   private val anyString: Gen[String] = Gen.listOf(Gen.frequency(
     8 -> Gen.asciiPrintableChar, 1 -> Gen.oneOf('\n', '\t', '"', '\\'),
