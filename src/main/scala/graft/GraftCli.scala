@@ -56,10 +56,7 @@ object GraftCli {
     val paths = IndexPaths(args(1))
     val spark = session()
     import spark.implicits._
-    // backends opened by this invocation, closed before the session stops
-    val opened = scala.collection.mutable.ArrayBuffer.empty[SparkBackend]
-    def openBackend(): SparkBackend = { val b = new SparkBackend(spark, paths); opened += b; b }
-    def exit(code: Int): Nothing = { opened.foreach(_.close()); spark.stop(); sys.exit(code) }
+    def exit(code: Int): Nothing = { spark.stop(); sys.exit(code) }
 
     cmd match {
       case "subprocess" =>
@@ -69,7 +66,7 @@ object GraftCli {
         // --batch <file> switches to batch mode (cli_subprocess.py:124-230):
         // a {"queries": [...]} file, one engine session across all queries,
         // output to --output <file> or stdout.
-        lazy val backend = openBackend() // one session per invocation
+        lazy val backend = new SparkBackend(spark, paths) // one session per invocation
         val deps = graft.config.Subprocess.Deps(
           runQuery = (q, cfg) =>
             Pipeline.searchTopK(backend, q,
@@ -192,14 +189,14 @@ object GraftCli {
           s"ubuckets=${m.getOrElse("incremental_ubuckets", "-")}")
       case "query" =>
         val q = args.drop(2).mkString(" ")
-        val backend = openBackend()
+        val backend = new SparkBackend(spark, paths)
         val out = Pipeline.searchTopK(backend, q, pipelineCfg)
         println(s"[graft] query='$q' confidence=${out.confidence.level}(${out.confidence.score})")
         out.results.foreach(r =>
           println(f"  ${r.score.getOrElse(0.0)}%8.3f ${r.source.file}%-40s ${r.text.take(70)}"))
       case "wand" =>
         val q = args.drop(2).mkString(" ")
-        val backend = openBackend()
+        val backend = new SparkBackend(spark, paths)
         val top = Wand.topK(spark, paths, backend.stats, q, 10, backend.idfFor)
         println(s"[graft] WAND top-${top.length} for '$q':")
         top.foreach { case (doc, s) => println(f"  $s%10.4f  doc=$doc") }
@@ -236,7 +233,6 @@ object GraftCli {
         System.err.println(s"unknown command $other\n$usage")
         exit(2)
     }
-    opened.foreach(_.close())
     spark.stop()
   }
 }

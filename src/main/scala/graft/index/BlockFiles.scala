@@ -44,31 +44,31 @@ object BlockFiles {
     override protected def getReadSupport: ReadSupport[Group] = new Projection(columns)
   }
 
-  /** Every row of every data file in `dirs`, read with `filter` pushed
-    * into parquet (row groups whose min/max exclude it are skipped) and
-    * only `columns` materialized. An incremental update appends files, so
-    * a directory is listed, not named; `_`/`.`-prefixed files are skipped
-    * and a missing directory holds no rows. Also returns the files opened,
-    * with their sizes.
+  /** Hands every row of every data file in `dirs` to `visit`, read with
+    * `filter` (if any) pushed into parquet (row groups whose min/max
+    * exclude it are skipped) and only `columns` materialized. An
+    * incremental update appends files, so a directory is listed, not
+    * named; `_`/`.`-prefixed files are skipped and a missing directory
+    * holds no rows. Returns the files opened, with their sizes.
     */
-  private def read[T](conf: Configuration, dirs: Seq[Path], filter: FilterPredicate,
-                      columns: Set[String])(row: Group => T): (Seq[T], Seq[(String, Long)]) = {
-    val out = mutable.ArrayBuffer.empty[T]
+  private def read(conf: Configuration, dirs: Seq[Path], filter: Option[FilterPredicate],
+                   columns: Set[String])(visit: Group => Unit): Seq[(String, Long)] = {
     val opened = mutable.ArrayBuffer.empty[(String, Long)]
+    val pushed = filter.fold(FilterCompat.NOOP)(FilterCompat.get)
     for (dir <- dirs) {
       val files =
         try dir.getFileSystem(conf).listStatus(dir).toSeq
         catch { case _: java.io.FileNotFoundException => Nil }
       for (f <- files if f.isFile && !f.getPath.getName.matches("[_.].*")) {
         opened += f.getPath.toString -> f.getLen
-        val reader = new Reader(f, conf, columns).withFilter(FilterCompat.get(filter)).build()
+        val reader = new Reader(f, conf, columns).withFilter(pushed).build()
         try {
           var g = reader.read()
-          while (g != null) { out += row(g); g = reader.read() }
+          while (g != null) { visit(g); g = reader.read() }
         } finally reader.close()
       }
     }
-    (out.toSeq, opened.toSeq)
+    opened.toSeq
   }
 
   private def termIn(terms: Seq[String]): FilterPredicate =
@@ -85,19 +85,19 @@ object BlockFiles {
   private[graft] def readShard(conf: Configuration, blocksRoot: String, shard: Int,
                                buckets: Seq[Int], terms: Seq[String])
       : (Map[String, IndexedSeq[BlockRow]], Seq[(String, Long)]) = {
-    val filter = termIn(terms)
-    val perBucket = buckets.map { bucket =>
+    val filter = Some(termIn(terms))
+    val rows = mutable.ArrayBuffer.empty[BlockRow]
+    val opened = buckets.flatMap { bucket =>
       read(conf, Seq(new Path(s"$blocksRoot/bucket=$bucket/shard=$shard")),
         filter, BlockColumns) { g =>
-        BlockRow(bucket, shard, g.getString("term", 0),
+        rows += BlockRow(bucket, shard, g.getString("term", 0),
           g.getInteger("blockId", 0), g.getInteger("n", 0),
           g.getBinary("docs", 0).getBytes, g.getBinary("tfs", 0).getBytes,
           g.getBinary("dls", 0).getBytes, g.getDouble("maxTfNorm", 0),
           g.getLong("firstDoc", 0), g.getLong("lastDoc", 0))
       }
     }
-    (perBucket.flatMap(_._1).groupBy(_.term).map { case (t, rs) => t -> rs.toIndexedSeq },
-      perBucket.flatMap(_._2))
+    (rows.groupBy(_.term).map { case (t, rs) => t -> rs.toIndexedSeq }, opened)
   }
 
   /** (idf, df) of each of `terms` found in `term_stats`, copied from the
@@ -111,9 +111,11 @@ object BlockFiles {
       : Map[String, (Double, Long)] = {
     val dirs = terms.map(IndexBuilder.termBucket(_, nTermBuckets)).distinct
       .map(b => new Path(s"$termStatsRoot/bucket=$b"))
-    read(conf, dirs, termIn(terms), Set("term", "df", "idf")) { g =>
-      g.getString("term", 0) -> (g.getDouble("idf", 0), g.getLong("df", 0))
-    }._1.toMap
+    val found = mutable.Map.empty[String, (Double, Long)]
+    read(conf, dirs, Some(termIn(terms)), Set("term", "df", "idf")) { g =>
+      found(g.getString("term", 0)) = (g.getDouble("idf", 0), g.getLong("df", 0))
+    }
+    found.toMap
   }
 
   /** A chunk row with its precomputed static bonuses (pattern, meta, gib). */
@@ -122,14 +124,17 @@ object BlockFiles {
   private val ChunkColumns = Set("chunkId", "docId", "source", "page", "chunkIdx", "text",
     "meta", "pattern_b", "meta_b", "gib")
 
-  /** The rows of `ids` in chunk bucket `cbucket`: every data file of
-    * `chunks/cbucket=c`, or of each `chunks/ubucket=u/cbucket=c` in a
-    * url-bucketed index, read with a pushed `chunkId IN (...)` filter and
-    * only the served columns. Also returns the files opened.
+  /** Hands each row of chunk bucket `cbucket` to `visit`: every data file
+    * of `chunks/cbucket=c`, or of each `chunks/ubucket=u/cbucket=c` in a
+    * url-bucketed index, with only the served columns. `ids = Some(set)`
+    * keeps the rows of `set` (a pushed `chunkId IN (...)` filter; an empty
+    * set opens no file); `None` visits the whole bucket. Returns the files
+    * opened.
     */
   private[graft] def readChunks(conf: Configuration, chunksRoot: String, cbucket: Int,
-                                ids: Set[Long]): (Seq[ChunkWithStatics], Seq[(String, Long)]) = {
-    if (ids.isEmpty) return (Nil, Nil)
+                                ids: Option[Set[Long]])
+                               (visit: ChunkWithStatics => Unit): Seq[(String, Long)] = {
+    if (ids.exists(_.isEmpty)) return Nil
     val root = new Path(chunksRoot)
     val ubuckets =
       try root.getFileSystem(conf).listStatus(root).toSeq
@@ -138,13 +143,13 @@ object BlockFiles {
       catch { case _: java.io.FileNotFoundException => Nil }
     val dirs = (if (ubuckets.isEmpty) Seq(root) else ubuckets)
       .map(new Path(_, s"cbucket=$cbucket"))
-    val filter = FilterApi.in[java.lang.Long, Operators.LongColumn](
-      FilterApi.longColumn("chunkId"), ids.map(Long.box).asJava)
+    val filter = ids.map(set => FilterApi.in[java.lang.Long, Operators.LongColumn](
+      FilterApi.longColumn("chunkId"), set.map(Long.box).asJava): FilterPredicate)
     read(conf, dirs, filter, ChunkColumns) { g =>
-      (ChunkRow(g.getLong("chunkId", 0), g.getLong("docId", 0), g.getString("source", 0),
+      visit((ChunkRow(g.getLong("chunkId", 0), g.getLong("docId", 0), g.getString("source", 0),
         g.getInteger("page", 0), g.getInteger("chunkIdx", 0), g.getString("text", 0),
         chunkMeta(g.getGroup("meta", 0))),
-        (g.getDouble("pattern_b", 0), g.getDouble("meta_b", 0), g.getDouble("gib", 0)))
+        (g.getDouble("pattern_b", 0), g.getDouble("meta_b", 0), g.getDouble("gib", 0))))
     }
   }
 

@@ -84,15 +84,7 @@ object Components {
       // empty label frame (edge-less graph) sums to NULL -> zero
       Option(df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
-    val dbg = sys.env.contains("GRAFT_COMPONENTS_DEBUG")
-    def dt[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      if (dbg) System.err.println(
-        f"[components] $label: ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      a
-    }
-    var prevSum = dt("init")(lblSum(labels))
+    var prevSum = lblSum(labels)
     var changed = true
     var round = 0
     // inside the loop both join sides are already hash-partitioned on the
@@ -118,7 +110,7 @@ object Components {
           .repartition(parts, col("id"))
           .groupBy("id").agg(min("lbl").as("lbl"))
           .persist()
-        val nextSum = dt(s"round $round")(lblSum(next))
+        val nextSum = lblSum(next)
         // persist (unlike localCheckpoint) keeps the logical lineage, which
         // would otherwise deepen by one join+aggregate per round and make
         // ANALYSIS time quadratic on adversarial deep graphs — truncate it

@@ -70,8 +70,8 @@ case class PipelineConfig(
     headTermWand: Boolean = false)
 
 /** Abstraction over where the heavy scans run. The distributed engine
-  * implements this with Spark jobs (full-corpus scoring + TakeOrdered pool,
-  * global RM3 feedback); tests use an in-memory backend. Everything *after*
+  * implements this with Spark jobs (per-shard top-k pool and RM3 feedback
+  * tasks, merged on the driver); tests use an in-memory backend. Everything *after*
   * the ≤poolSize candidate pool is inherently sequential in the reference
   * (greedy selection, RRF dict-order semantics) and runs driver-side —
   * SURVEY.md §2.8.

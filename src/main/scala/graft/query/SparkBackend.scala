@@ -1,8 +1,8 @@
 package graft.query
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.analysis.{Analyzer, Scoring}
 import graft.corpus.ChunkRow
 import graft.index.{BlockFiles, GlobalStats, IndexBuilder, IndexPaths}
@@ -20,40 +20,25 @@ import graft.spark.SessionMemo
   *     its `cbucket=shard` directories and re-scores them exactly; the
   *     driver merges the shard lists, adds the query bonuses and checks the
   *     rank-safety bound (see boundedPool);
-  *  3. the dense pool (bounded fallback, head terms) is ONE narrow map over
-  *     the cached chunk table: each chunk's base BM25 comes from its own
-  *     text (`Bm25Stats.scoreText`, the same kernel as the in-task
-  *     re-score and `LocalBackend`, summed in query-token order), then its
-  *     bonuses (reference semantics, main.py:140-167) — no posting read,
-  *     shuffle, broadcast or join;
-  *  4. distributed top-k via orderBy().limit() — Catalyst plans
-  *     TakeOrderedAndProject, no global sort; RM3 feedback
-  *     (`topDocsForRm3`) is the same single pass over base BM25;
+  *  3. the dense pool (bounded fallback, head terms) is ONE Spark job with
+  *     one task per doc shard (`topChunks`): each task streams its own
+  *     `cbucket=shard` chunk files through `BlockFiles`, scores every row's
+  *     base BM25 from its own text (`Bm25Stats.scoreText`, the same kernel
+  *     as the in-task re-score and `LocalBackend`, summed in query-token
+  *     order), then its bonuses (reference semantics, main.py:140-167) —
+  *     no posting read, Catalyst plan, shuffle or cache;
+  *  4. each task keeps its top k in a k-row heap and the driver merges the
+  *     at most k × shards rows in the pool order (`PoolOrder`); RM3
+  *     feedback (`topDocsForRm3`) is the same job over base BM25;
   *  5. everything after the <=poolSize pool runs driver-side (Pipeline).
   */
-final class SparkBackend(spark: SparkSession, paths: IndexPaths)
-    extends SearchBackend with AutoCloseable {
+final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchBackend {
   import spark.implicits._
 
   val stats: GlobalStats = IndexBuilder.loadStats(spark, paths)
   require(stats.nChunkBuckets == stats.nDocShards,
     s"index at ${paths.root} has ${stats.nChunkBuckets} chunk buckets for " +
       s"${stats.nDocShards} doc shards: a full rebuild is required")
-  // the dense pool and RM3 read the chunk table in full (scoring over all
-  // chunks, reference semantics), so keep it cached until close(); the
-  // first dense or RM3 pass fills the cache. Postings, term stats and the
-  // bounded pool's rows stay on parquet, read by directory. The DF keeps
-  // the precomputed static-bonus columns; the fixed schema skips a
-  // schema-inference job. Backends over one table in one session share
-  // the cache entry, so it is counted and dropped by the last close().
-  private val chunksRawDF = spark.read.schema(SparkBackend.ChunkSchema).parquet(paths.chunks)
-  private val openBackends = SessionMemo(spark)
-    .computeIfAbsent(s"open:${paths.chunks}", _ => new AtomicInteger).asInstanceOf[AtomicInteger]
-  openBackends.synchronized {
-    openBackends.incrementAndGet()
-    chunksRawDF.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-  private var closed = false
   private lazy val blocksDF = spark.read.parquet(paths.blocks) // scoresDF only
   private val idfCache = scala.collection.mutable.HashMap.empty[String, (Double, Long)]
 
@@ -65,16 +50,6 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
       missing.foreach(t => idfCache(t) = found.getOrElse(t, (0.0, 0L)))
     }
     terms.map(t => t -> idfCache(t)).toMap
-  }
-
-  /** Uncaches the chunk table when this is the last open backend over it
-    * in the session; idempotent. Later calls read it from disk.
-    */
-  override def close(): Unit = openBackends.synchronized {
-    if (!closed) {
-      closed = true
-      if (openBackends.decrementAndGet() == 0) chunksRawDF.unpersist()
-    }
   }
 
   /** idf lookup for query terms, read from term_stats with no Spark job. */
@@ -146,8 +121,7 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     * dense one. Falls back to the reference-exact dense pass over all
     * chunks when the bound cannot be proven (tiny corpora, weak queries,
     * head terms) — so golden parity is untouched. The dense pass is one
-    * narrow job over the cached chunk table (see densePool): it reads no
-    * posting blocks and moves no score frame, at any corpus size.
+    * job of per-shard tasks over the chunk files (see densePool).
     */
   override def topPool(query: String, bm25Query: String, poolSize: Int,
                        cfg: PipelineConfig): IndexedSeq[(ChunkRow, Double)] = {
@@ -192,7 +166,7 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     val round = Wand.round(spark, paths, stats, bm25Query, poolSize, idfFor, Some(Set.empty))
     val byId = round.rows.map(f => f.row.chunkId -> f).toMap
     scoreCandidates(ctx, round.merged.take(poolSize).flatMap(c => byId.get(c._1)))
-      .sortBy { case (c, s) => (-s, c.source, c.page, c.chunkIdx) }
+      .sorted(SparkBackend.PoolOrder)
   }
 
   /** Diagnostics: which path served the last topPool call. */
@@ -265,7 +239,7 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
       scoreCandidates(ctx, cand.map(_._1).filterNot(scored.contains).flatMap(fetched.get))
         .foreach(cs => scored(cs._1.chunkId) = cs)
       val pool = cand.iterator.flatMap(c => scored.get(c._1)).toIndexedSeq
-        .sortBy { case (c, s) => (-s, c.source, c.page, c.chunkIdx) }
+        .sorted(SparkBackend.PoolOrder)
       if (pool.length >= poolSize) {
         val theta = pool(poolSize - 1)._2
         val excludedUpper = (if (complete) 0.0 else cand.last._2) + bMax + slack
@@ -317,30 +291,37 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
     }.collect().toSeq
   }
 
-  /** Reference-exact dense pass: base BM25 plus bonuses on every chunk,
-    * distributed top-k. One narrow map over the cached chunk table: each
-    * chunk scores its own text with the bounded path's re-score kernel, so
-    * no posting block is read and no score frame is shuffled, broadcast or
-    * joined, and bounded == dense holds by construction.
+  /** The corpus's top `k` chunks under `score` (of a row and its static
+    * bonuses), in the pool order: one Spark job with one task per doc
+    * shard. Each task streams every row of its own `cbucket=shard`
+    * directories (each `ubucket=u/cbucket=shard` in a url-bucketed index)
+    * and keeps a k-row heap, so it holds O(k) rows; the driver merges the
+    * at most k × shards rows.
+    */
+  private def topChunks(k: Int)(score: BlockFiles.ChunkWithStatics => Double)
+      : IndexedSeq[(ChunkRow, Double)] = {
+    val conf = SessionMemo.hadoopConf(spark)
+    val root = paths.chunks
+    val n = stats.nDocShards
+    val perShard = spark.sparkContext.parallelize(0 until n, n).map { s =>
+      val top = new SparkBackend.TopK(k)
+      BlockFiles.readChunks(conf.value.value, root, s, None)(r => top.offer((r._1, score(r))))
+      top.rows
+    }.collect()
+    SparkBackend.merge(k, perShard)
+  }
+
+  /** Reference-exact dense pass (`topChunks`): base BM25 plus bonuses on
+    * every chunk, each scoring its own text with the bounded path's
+    * re-score kernel, so bounded == dense holds by construction.
     */
   private def densePool(ctx: Scoring.QueryBonusContext,
                         bmTokens: IndexedSeq[String],
                         poolSize: Int): IndexedSeq[(ChunkRow, Double)] = {
     val st = bm25StatsFor(bmTokens)
-    val bonusUdf = udf { (text: String, patternB: Double, metaB: Double, gib: Double) =>
-      ctx.score(st.scoreText(bmTokens, text), text, patternB, metaB, gib)
+    topChunks(poolSize) { case (c, (pb, mb, gib)) =>
+      ctx.score(st.scoreText(bmTokens, c.text), c.text, pb, mb, gib)
     }
-    chunksRawDF
-      .withColumn("bscore", bonusUdf(col("text"), col("pattern_b"), col("meta_b"), col("gib")))
-      .orderBy(desc("bscore"), asc("source"), asc("page"), asc("chunkIdx"))
-      .limit(poolSize)
-      .select(col("chunkId"), col("docId"), col("source"), col("page"),
-        col("chunkIdx"), col("text"), col("meta"), col("bscore"))
-      .as[(Long, Long, String, Int, Int, String, graft.corpus.ChunkMeta, Double)]
-      .collect()
-      .map { case (id, docId, source, page, idx, text, meta, s) =>
-        (ChunkRow(id, docId, source, page, idx, text, meta), s)
-      }.toIndexedSeq
   }
 
   /** Bonused baseline scores for arbitrary ids (ANN semantic candidates),
@@ -366,28 +347,43 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths)
   }
 
   /** RM3 feedback: the top fbDocs of the dense base-BM25 array (prf.py:29)
-    * in one narrow pass over the cached chunk table, same kernel as the
-    * dense pool. Every chunk is ranked by (score desc, corpus order), so
-    * zero-score chunks fill in corpus order and, under a negative idf
-    * floor, rank above the negatively scored matches, as in the reference.
+    * in the dense pool's job shape (`topChunks`), same kernel. Every chunk
+    * is ranked in the pool order, so zero-score chunks fill in corpus
+    * order and, under a negative idf floor, rank above the negatively
+    * scored matches, as in the reference.
     */
   override def topDocsForRm3(queryTokens: Seq[String], fbDocs: Int): Seq[String] = {
     val toks = queryTokens.toIndexedSeq
     val st = bm25StatsFor(toks)
-    val baseUdf = udf((text: String) => st.scoreText(toks, text))
-    chunksRawDF
-      .withColumn("score", baseUdf(col("text")))
-      .orderBy(desc("score"), asc("source"), asc("page"), asc("chunkIdx"))
-      .limit(fbDocs)
-      .select("text").as[String].collect().toSeq
+    topChunks(fbDocs)(r => st.scoreText(toks, r._1.text)).map(_._1.text)
   }
 }
 
 object SparkBackend {
-  /** The chunk-table columns a backend serves from: the chunk, its static
-    * bonuses and its cbucket partition.
+  /** The pool order, best first: score descending, then corpus order
+    * (source, page, chunkIdx) ascending. It is Catalyst's `orderBy(desc(score),
+    * asc(source), asc(page), asc(chunkIdx))`: 0.0 and -0.0 tie, NaN ranks
+    * first, a null source first and sources compare as UTF-8 bytes.
     */
-  private[graft] val ChunkSchema = Encoders.product[ChunkRow].schema
-    .add("pattern_b", "double").add("meta_b", "double").add("gib", "double")
-    .add("cbucket", "int")
+  private[graft] val PoolOrder: Ordering[(ChunkRow, Double)] = {
+    val corpus = Ordering.by((c: ChunkRow) =>
+      (Option(c.source).map(UTF8String.fromString), c.page, c.chunkIdx))
+    (x, y) => {
+      val byScore = if (x._2 == y._2) 0 else java.lang.Double.compare(y._2, x._2)
+      if (byScore != 0) byScore else corpus.compare(x._1, y._1)
+    }
+  }
+
+  /** The best `k` rows offered; the heap's head is the worst row kept. */
+  private[graft] final class TopK(k: Int) {
+    private val heap = scala.collection.mutable.PriorityQueue.empty(PoolOrder)
+    def offer(r: (ChunkRow, Double)): Unit =
+      if (heap.size < k) heap.enqueue(r)
+      else if (k > 0 && PoolOrder.lt(r, heap.head)) { heap.dequeue(); heap.enqueue(r) }
+    def rows: Seq[(ChunkRow, Double)] = heap.toList
+  }
+
+  /** The global top `k` of per-shard top-k lists, in the pool order. */
+  private[graft] def merge(k: Int, shards: Seq[Seq[(ChunkRow, Double)]]): IndexedSeq[(ChunkRow, Double)] =
+    shards.flatten.sorted(PoolOrder).take(k).toIndexedSeq
 }

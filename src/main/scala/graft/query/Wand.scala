@@ -247,7 +247,10 @@ object Wand {
   private[query] def fetchShard(conf: Configuration, chunksRoot: String, shard: Int,
                                 ids: Set[Long], tokens: IndexedSeq[String], st: Bm25Stats)
       : (Seq[Fetched], Seq[(String, Long)]) = {
-    val (rows, opened) = BlockFiles.readChunks(conf, chunksRoot, shard, ids)
-    (rows.map { case (c, statics) => Fetched(c, st.scoreText(tokens, c.text), statics) }, opened)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Fetched]
+    val opened = BlockFiles.readChunks(conf, chunksRoot, shard, Some(ids)) { case (c, statics) =>
+      rows += Fetched(c, st.scoreText(tokens, c.text), statics)
+    }
+    (rows.toSeq, opened)
   }
 }

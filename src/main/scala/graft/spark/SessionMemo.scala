@@ -8,9 +8,8 @@ import org.apache.spark.util.SerializableConfiguration
 /** The engine's one memo: a string-keyed slot map per SparkSession. Each
   * caller keeps its state under its own key prefix (`df:`/`view:` for
   * parquet handles and temp views, `bm25` for the BM25 catalog views,
-  * `docindex:` for the catalog's doc index, `ann:` for ANN preselectors,
-  * `open:` for the count of open backends per chunk table and
-  * `hadoopConf` for the broadcast Hadoop configuration),
+  * `docindex:` for the catalog's doc index, `ann:` for ANN preselectors
+  * and `hadoopConf` for the broadcast Hadoop configuration),
   * so a new session builds its own state instead of being served another
   * session's.
   *
@@ -18,7 +17,9 @@ import org.apache.spark.util.SerializableConfiguration
   * access first drops the sessions whose context has stopped, so a
   * stopped session is released at the next touch of the registry. A
   * dropped value that is `AutoCloseable` is closed then; its `close` must
-  * not call into the stopped SparkContext.
+  * not call into the stopped SparkContext. A JVM shutdown hook closes
+  * every value still held, so a JVM that exits without stopping its
+  * sessions deletes their temp index directories too.
   *
   * A builder that may itself use the registry must not run inside
   * `computeIfAbsent`/`compute` on the returned map (ConcurrentHashMap
@@ -26,15 +27,19 @@ import org.apache.spark.util.SerializableConfiguration
   */
 object SessionMemo {
   private val bySession = new ConcurrentHashMap[SparkSession, ConcurrentHashMap[String, AnyRef]]()
+  sys.addShutdownHook(bySession.values.forEach(closeAll))
+
+  /** Closes the map's `AutoCloseable` values; a failed close (say, a temp
+    * dir already gone) must not fail the caller.
+    */
+  private def closeAll(memo: ConcurrentHashMap[String, AnyRef]): Unit = memo.values.forEach {
+    case c: AutoCloseable => scala.util.Try(c.close())
+    case _ =>
+  }
 
   def apply(spark: SparkSession): ConcurrentHashMap[String, AnyRef] = {
     bySession.keySet.forEach { s =>
-      // a failed close (say, a temp dir already gone) must not fail the
-      // caller, whose session is another one
-      if (s.sparkContext.isStopped) Option(bySession.remove(s)).foreach(_.values.forEach {
-        case c: AutoCloseable => scala.util.Try(c.close())
-        case _ =>
-      })
+      if (s.sparkContext.isStopped) Option(bySession.remove(s)).foreach(closeAll)
     }
     bySession.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, AnyRef]())
   }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.{JobCount, JobTasks}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.{ChunkMeta, ChunkRow}
@@ -48,14 +49,17 @@ class IndexFilesSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     assert(expected.keySet == (0 until nShards).toSet)
     val ids = chunks.map(_.chunkId).toSet
     for (s <- 0 until nShards) {
-      val (rows, opened) = BlockFiles.readChunks(conf, paths.chunks, s, ids)
+      val (rows, opened) = IndexFilesSpec.readChunks(conf, paths.chunks, s, Some(ids))
       assert(rows.length == expected(s).size && rows.toSet == expected(s), s"cbucket $s")
       assert(opened.nonEmpty && opened.forall(_._1.contains(s"/cbucket=$s/")), s"cbucket $s: $opened")
       // the pushed id filter keeps only the asked rows
       val some = expected(s).take(2).map(_._1.chunkId)
-      assert(BlockFiles.readChunks(conf, paths.chunks, s, some)._1.map(_._1.chunkId).toSet == some)
+      assert(IndexFilesSpec.readChunks(conf, paths.chunks, s, Some(some))._1.map(_._1.chunkId).toSet == some)
+      // no id set: the whole bucket
+      val all = IndexFilesSpec.readChunks(conf, paths.chunks, s, None)
+      assert(all._1.length == rows.length && all._1.toSet == rows.toSet && all._2 == opened)
     }
-    assert(BlockFiles.readChunks(conf, paths.chunks, 0, Set.empty) == ((Nil, Nil)))
+    assert(IndexFilesSpec.readChunks(conf, paths.chunks, 0, Some(Set.empty)) == ((Nil, Nil)))
     // every metadata shape went through the reader
     val metas = expected.values.flatten.map(_._1.meta).toSet
     assert(metas.contains(ChunkMeta()))
@@ -80,43 +84,54 @@ class IndexFilesSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     assert(present.map(IndexBuilder.termBucket(_, 4)).distinct.size > 1)
     val terms = present ++ Seq("zzyzxnotaterm", gone, present.head, "zzyzxnotaterm")
     val be = new SparkBackend(spark, copy) // opening runs its own job
-    try {
-      val ((idf, df), jobs) = JobCount(spark.sparkContext)((be.idfFor(terms), be.dfFor(terms)))
-      assert(jobs == 0, s"the term-stats lookup ran $jobs Spark jobs")
-      for (t <- terms) {
-        val (ei, ed) = expected.getOrElse(t, (0.0, 0L))
-        assert(idf(t) == ei && df(t) == ed, s"'$t': (${idf(t)}, ${df(t)}) vs ($ei, $ed)")
-      }
-    } finally be.close()
+    val ((idf, df), jobs) = JobCount(spark.sparkContext)((be.idfFor(terms), be.dfFor(terms)))
+    assert(jobs == 0, s"the term-stats lookup ran $jobs Spark jobs")
+    for (t <- terms) {
+      val (ei, ed) = expected.getOrElse(t, (0.0, 0L))
+      assert(idf(t) == ei && df(t) == ed, s"'$t': (${idf(t)}, ${df(t)}) vs ($ei, $ed)")
+    }
   }
 
   test("bonusedScoresFor fetches arbitrary ids in one job over their shards") {
     val be = new SparkBackend(spark, paths)
-    try {
-      val ids = Seq(chunks(5).chunkId, 424242L, chunks(0).chunkId, chunks(12).chunkId)
-      val shards = ids.map(IndexBuilder.chunkBucket(_, nShards)).distinct
-      val q = "spark engines water"
-      val (got, tasks) = JobTasks(spark.sparkContext)(
-        be.bonusedScoresFor(q, q, ids, PipelineConfig()))
-      assert(tasks == Seq(shards.size), s"tasks per job $tasks")
-      val expected = new LocalBackend(chunks.toIndexedSeq).bonusedScoresFor(q, q, ids, PipelineConfig())
-      assert(got.map(_._1.chunkId) == Seq(chunks(5), chunks(0), chunks(12)).map(_.chunkId))
-      assert(got.map(_._1) == expected.map(_._1))
-      got.zip(expected).foreach { case ((c, gs), (_, es)) =>
-        assert(math.abs(gs - es) < 1e-9, s"${c.chunkId}: $gs vs $es")
-      }
-      assert(be.bonusedScoresFor(q, q, Nil, PipelineConfig()).isEmpty)
-    } finally be.close()
+    val ids = Seq(chunks(5).chunkId, 424242L, chunks(0).chunkId, chunks(12).chunkId)
+    val shards = ids.map(IndexBuilder.chunkBucket(_, nShards)).distinct
+    val q = "spark engines water"
+    val (got, tasks) = JobTasks(spark.sparkContext)(
+      be.bonusedScoresFor(q, q, ids, PipelineConfig()))
+    assert(tasks == Seq(shards.size), s"tasks per job $tasks")
+    val expected = new LocalBackend(chunks.toIndexedSeq).bonusedScoresFor(q, q, ids, PipelineConfig())
+    assert(got.map(_._1.chunkId) == Seq(chunks(5), chunks(0), chunks(12)).map(_.chunkId))
+    assert(got.map(_._1) == expected.map(_._1))
+    got.zip(expected).foreach { case ((c, gs), (_, es)) =>
+      assert(math.abs(gs - es) < 1e-9, s"${c.chunkId}: $gs vs $es")
+    }
+    assert(be.bonusedScoresFor(q, q, Nil, PipelineConfig()).isEmpty)
   }
 }
 
 object IndexFilesSpec {
+  /** The chunk-table columns the serving reader returns, and the cbucket
+    * partition.
+    */
+  private val ChunkSchema = Encoders.product[ChunkRow].schema
+    .add("pattern_b", "double").add("meta_b", "double").add("gib", "double")
+    .add("cbucket", "int")
+
+  /** `BlockFiles.readChunks`'s visited rows, collected, and its files. */
+  def readChunks(conf: Configuration, root: String, cbucket: Int, ids: Option[Set[Long]])
+      : (Seq[BlockFiles.ChunkWithStatics], Seq[(String, Long)]) = {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[BlockFiles.ChunkWithStatics]
+    val opened = BlockFiles.readChunks(conf, root, cbucket, ids)(rows += _)
+    (rows.toSeq, opened)
+  }
+
   /** A Catalyst read of the chunk table: each cbucket's rows with their
     * static bonuses (pattern, meta, gib).
     */
   def catalystRows(spark: SparkSession, p: IndexPaths): Map[Int, Set[BlockFiles.ChunkWithStatics]] = {
     import spark.implicits._
-    spark.read.schema(SparkBackend.ChunkSchema).parquet(p.chunks)
+    spark.read.schema(ChunkSchema).parquet(p.chunks)
       .select(col("cbucket"), col("chunkId"), col("docId"), col("source"), col("page"),
         col("chunkIdx"), col("text"), col("meta"), col("pattern_b"), col("meta_b"), col("gib"))
       .as[(Int, Long, Long, String, Int, Int, String, ChunkMeta, Double, Double, Double)]

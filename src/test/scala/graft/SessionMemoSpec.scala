@@ -69,10 +69,12 @@ class SessionMemoSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     }
   }
 
-  test("a stopped session leaves the registry (child JVM)") {
-    // the child stops its own SparkContext, which the suite's shared
-    // session must not do; it gets the test classpath and the module
-    // opens, and a small heap instead of the suite's pre-touched one
+  /** Runs `main` in a child JVM and returns its output once it exited 0.
+    * The child may stop its own SparkContext or exit, which the suite's
+    * shared session must not do; it gets the test classpath and the module
+    * opens, and a small heap instead of the suite's pre-touched one.
+    */
+  private def runChild(main: String): String = {
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toList
     val addOpens = jvmArgs.filter(_.startsWith("--add-opens=")) ++
@@ -80,16 +82,29 @@ class SessionMemoSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     assert(addOpens.nonEmpty, s"no --add-opens among $jvmArgs")
     val log = Files.createTempFile("graft-sessionmemo-child", ".log").toFile
     val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++
-      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), "graft.SessionMemoChild")
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), main)
     val child = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log).start()
     val done = child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
     if (!done) child.destroyForcibly()
     val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
     log.delete()
     assert(done && child.exitValue() == 0, s"child failed:\n$out")
+    out
+  }
+
+  test("a stopped session leaves the registry (child JVM)") {
+    val out = runChild("graft.SessionMemoChild")
     assert(out.contains("first session held: false") && out.contains("second session held: true"), out)
     assert(out.contains("first doc index dir exists: false"), out)
     assert(out.contains("second context's broadcast is fresh and readable: true"), out)
+  }
+
+  test("a JVM that exits without stopping its session deletes its doc index (child JVM)") {
+    val out = runChild("graft.SessionMemoExitChild")
+    val root = "doc index dir: (.+)".r.findFirstMatchIn(out).map(_.group(1).trim)
+      .getOrElse(fail(s"no doc index dir reported:\n$out"))
+    assert(Paths.get(root).getFileName.toString.startsWith("graft-docindex"), root)
+    assert(!Files.exists(Paths.get(root)), s"$root is still there after the child exited")
   }
 
   test("the Hadoop configuration is broadcast once per session") {
@@ -98,20 +113,52 @@ class SessionMemoSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     assert(SessionMemo.hadoopConf(other).id != b.id, "call in a new session")
   }
 
-  test("src/main declares no memo map outside SessionMemo") {
-    val main = Paths.get("src/main")
-    assert(Files.isDirectory(main), s"run from the project root: ${main.toAbsolutePath}")
-    val memo = "\\b(ConcurrentHashMap|AtomicReference|WeakHashMap)\\b".r
-    val walk = Files.walk(main)
-    val offenders = try walk.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "SessionMemo.scala")
+  /** The lines of the Scala files under `dir` (except `skip`) that
+    * match `pattern`, as `path:line: text`.
+    */
+  private def sourceLines(dir: String, pattern: scala.util.matching.Regex,
+                          skip: Set[String]): List[String] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !skip(p.getFileName.toString))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if memo.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+          case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
         }
       }.toList
     finally walk.close()
+  }
+
+  test("src/main declares no memo map outside SessionMemo") {
+    val offenders = sourceLines("src/main",
+      "\\b(ConcurrentHashMap|AtomicReference|WeakHashMap)\\b".r, Set("SessionMemo.scala"))
     assert(offenders.isEmpty, s"engine state belongs in SessionMemo:\n${offenders.mkString("\n")}")
+    // the search path reads the index files in its tasks and caches no
+    // table; the ANN preselectors (Ann.scala) cache their embedding frames
+    val caching = sourceLines("src/main/scala/graft/query",
+      "\\.(persist|unpersist|cache)\\(".r, Set("Ann.scala"))
+    assert(caching.isEmpty, s"the search path caches a table:\n${caching.mkString("\n")}")
+  }
+}
+
+/** Child JVM of the exit test: builds a doc index, reports its directory
+  * and exits without stopping its session.
+  */
+object SessionMemoExitChild {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "4").getOrCreate()
+    val docs = Files.createTempDirectory("graft-sessionmemo-exit-docs")
+    import spark.implicits._
+    (1 to 20).map(i => (i.toLong, s"spark hash join scan $i", s"doc$i.pdf"))
+      .toDF("doc_id", "text", "source").write.parquet(s"$docs/documents.parquet")
+    val (paths, _) = DocIndex.backendFor(spark, docs.toString)
+    org.apache.commons.io.FileUtils.deleteQuietly(docs.toFile)
+    println(s"doc index dir: ${paths.root}")
+    sys.exit(0)
   }
 }
 

@@ -1,7 +1,7 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.{ExecutedPlans, JobCount, JobTasks}
-import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.{Analyzer, Scoring}
 import graft.corpus.{ChunkRow, ChunkerConfig, ChunkerJob, PageDoc, WebPages}
@@ -26,12 +26,6 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
       BuildConfig(nTermBuckets = 8, nDocShards = 2, shufflePartitions = 8))
     (p, new SparkBackend(spark, p))
   }
-
-  /** The captured plans that rank the chunk table at `chunks` with a
-    * TakeOrderedAndProject: the dense passes (pool or RM3 feedback).
-    */
-  private def densePasses(plans: Seq[SparkPlan], chunks: String): Seq[String] =
-    plans.map(_.toString).filter(p => p.contains("TakeOrderedAndProject") && p.contains(chunks))
 
   private val queries = Seq(
     "machine learning algorithms",
@@ -89,8 +83,7 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   test("bounded pool == dense pool on an updated url-bucketed index") {
     val be = new SparkBackend(spark, updated)
-    try assert(boundedEqualsDense(be, "url-bucketed index") > 0, "bounded path never engaged")
-    finally be.close()
+    assert(boundedEqualsDense(be, "url-bucketed index") > 0, "bounded path never engaged")
   }
 
   test("the chunk reader matches Catalyst across ubucket dirs and an update's files") {
@@ -100,7 +93,7 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     val writeId = "part-\\d+-([0-9a-f-]{36})".r
     val writes = scala.collection.mutable.Set.empty[String]
     for (s <- 0 until 8) {
-      val (rows, opened) = BlockFiles.readChunks(conf, updated.chunks, s, ids)
+      val (rows, opened) = IndexFilesSpec.readChunks(conf, updated.chunks, s, Some(ids))
       assert(rows.length == expected(s).size && rows.toSet == expected(s), s"cbucket $s")
       assert(opened.forall(_._1.contains(s"/cbucket=$s/")), s"cbucket $s: $opened")
       assert(opened.map(_._1.replaceAll(".*/(ubucket=\\d+)/.*", "$1")).distinct.size > 1,
@@ -112,27 +105,25 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   test("each WAND shard task fetches and re-scores its candidates from its own chunk bucket") {
     val be = new SparkBackend(spark, updated)
-    try {
-      val q = queries.head
-      val (round, tasks) = JobTasks(spark.sparkContext)(
-        Wand.round(spark, updated, be.stats, q, 50, be.idfFor, fetch = Some(Set.empty)))
-      assert(tasks == Seq(be.stats.nDocShards), s"tasks per job $tasks")
-      val chunkFiles = round.opened.filter(_._2.contains("/chunks/"))
-      assert(chunkFiles.nonEmpty)
-      chunkFiles.foreach { case (s, f, _) =>
-        assert(f.contains(s"/cbucket=$s/"), s"shard $s's task opened $f") }
-      // every shard list's candidate comes back once, exactly re-scored
-      val cands = round.merged.map(_._1)
-      assert(round.rows.map(_.row.chunkId).sorted == cands.sorted)
-      val exact = be.bm25ScoresFor(Analyzer.tokenize(q).toIndexedSeq, round.rows.map(_.row))
-      round.rows.foreach(f => assert(f.base == exact(f.row.chunkId)))
-      assert(round.merged.take(50) == Wand.topK(spark, updated, be.stats, q, 50, be.idfFor))
-      // ids the driver already holds are left out
-      val known = cands.take(10).toSet
-      val again = Wand.round(spark, updated, be.stats, q, 50, be.idfFor, fetch = Some(known))
-      assert(again.merged == round.merged)
-      assert(again.rows.map(_.row.chunkId).toSet == cands.toSet -- known)
-    } finally be.close()
+    val q = queries.head
+    val (round, tasks) = JobTasks(spark.sparkContext)(
+      Wand.round(spark, updated, be.stats, q, 50, be.idfFor, fetch = Some(Set.empty)))
+    assert(tasks == Seq(be.stats.nDocShards), s"tasks per job $tasks")
+    val chunkFiles = round.opened.filter(_._2.contains("/chunks/"))
+    assert(chunkFiles.nonEmpty)
+    chunkFiles.foreach { case (s, f, _) =>
+      assert(f.contains(s"/cbucket=$s/"), s"shard $s's task opened $f") }
+    // every shard list's candidate comes back once, exactly re-scored
+    val cands = round.merged.map(_._1)
+    assert(round.rows.map(_.row.chunkId).sorted == cands.sorted)
+    val exact = be.bm25ScoresFor(Analyzer.tokenize(q).toIndexedSeq, round.rows.map(_.row))
+    round.rows.foreach(f => assert(f.base == exact(f.row.chunkId)))
+    assert(round.merged.take(50) == Wand.topK(spark, updated, be.stats, q, 50, be.idfFor))
+    // ids the driver already holds are left out
+    val known = cands.take(10).toSet
+    val again = Wand.round(spark, updated, be.stats, q, 50, be.idfFor, fetch = Some(known))
+    assert(again.merged == round.merged)
+    assert(again.rows.map(_.row.chunkId).toSet == cands.toSet -- known)
   }
 
   test("a bounded light search runs one Spark job, its terms cached or one of them not") {
@@ -143,20 +134,18 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
       assert(be.lastPoolPath == "bounded", s"'$q' took the ${be.lastPoolPath} path")
       jobs
     }
-    try {
-      val light = queries.find { q =>
-        be.topPool(q, q, cfg.poolSize, cfg)
-        be.lastPoolPath == "bounded"
-      }.getOrElse(fail("no query takes the bounded path"))
-      assert(search(light) == 1, s"'$light' with every term cached")
-      // a rare term the backend has not looked up yet
-      import spark.implicits._
-      val rare = spark.read.parquet(paths.termStats)
-        .filter("df between 3 and 30 and term rlike '^[a-z]{5,}$'")
-        .select("term").as[String].collect().sorted
-        .find(t => !light.contains(t)).getOrElse(fail("no rare term"))
-      assert(search(s"$light $rare") == 1, s"'$light $rare' with '$rare' not cached")
-    } finally be.close()
+    val light = queries.find { q =>
+      be.topPool(q, q, cfg.poolSize, cfg)
+      be.lastPoolPath == "bounded"
+    }.getOrElse(fail("no query takes the bounded path"))
+    assert(search(light) == 1, s"'$light' with every term cached")
+    // a rare term the backend has not looked up yet
+    import spark.implicits._
+    val rare = spark.read.parquet(paths.termStats)
+      .filter("df between 3 and 30 and term rlike '^[a-z]{5,}$'")
+      .select("term").as[String].collect().sorted
+      .find(t => !light.contains(t)).getOrElse(fail("no rare term"))
+    assert(search(s"$light $rare") == 1, s"'$light $rare' with '$rare' not cached")
   }
 
   /** The most frequent indexed term: a head term (df > nDocs/2 on a Zipf
@@ -175,12 +164,12 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   test("head-term dense pass plans no join and equals the dense reference pool") {
     val q = s"$headTerm learning"
-    val (pool, plans) = ExecutedPlans(spark)(backend.topPool(q, q, 20, PipelineConfig()))
+    val ((pool, jobs), plans) = ExecutedPlans(spark)(JobCount(spark.sparkContext)(
+      backend.topPool(q, q, 20, PipelineConfig())))
     assert(backend.lastPoolPath == "dense") // head term skipped bounded path
-    val dense = densePasses(plans, paths.chunks)
-    assert(dense.nonEmpty, s"no dense pass captured:\n${plans.mkString("\n")}")
-    for (plan <- dense; join <- Seq("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin"))
-      assert(!plan.contains(join), s"dense pass plans a $join:\n$plan")
+    // one job of per-shard tasks, and no Catalyst plan (so no join)
+    assert(jobs == 1, s"the dense pool ran $jobs Spark jobs")
+    assert(plans.isEmpty, s"the dense pool planned SQL:\n${plans.mkString("\n")}")
     // reference semantics (main.py:133-174, as LocalBackend): a dense base
     // array over the corpus in its canonical order, bonuses recomputed from
     // each text, stable sort by bonused score; idf from the index
@@ -200,35 +189,33 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   }
 
   test("dense pool and RM3 feedback each run one Spark job and read no posting block") {
+    // a copy of the index without its posting blocks serves the same answers
+    val copy = IndexPaths(tempDir("graft-bounded-noblocks"))
+    FileUtils.copyDirectory(new java.io.File(paths.root), new java.io.File(copy.root))
+    FileUtils.deleteDirectory(new java.io.File(copy.blocks))
+    val noBlocks = new SparkBackend(spark, copy)
     val q = s"$headTerm learning"
     val toks = Analyzer.tokenize(q).toIndexedSeq
     val cfg = PipelineConfig(densePoolOnly = true)
-    val warmPool = backend.topPool(q, q, 20, cfg)
-    val warmFb = backend.topDocsForRm3(toks, 10)
-    for ((name, call, warm) <- Seq[(String, () => Any, Any)](
-           ("dense pool", () => backend.topPool(q, q, 20, cfg), warmPool),
-           ("RM3 feedback", () => backend.topDocsForRm3(toks, 10), warmFb))) {
-      val ((again, jobs), plans) = ExecutedPlans(spark)(JobCount(spark.sparkContext)(call()))
-      assert(again == warm, name)
-      assert(jobs == 1, s"$name ran $jobs Spark jobs")
-      val seen = plans.map(_.toString)
-      assert(seen.nonEmpty, s"$name: no plan observed")
-      // the cached chunk table's scan shows in the plan, the blocks never
-      assert(seen.forall(_.contains(paths.chunks)), s"$name:\n${seen.mkString("\n")}")
-      assert(!seen.exists(_.contains(paths.blocks)), s"$name reads blocks:\n${seen.mkString("\n")}")
-      assert(!seen.exists(_.contains("Join")), s"$name plans a join:\n${seen.mkString("\n")}")
+    for ((name, call) <- Seq[(String, SparkBackend => Any)](
+           ("dense pool", _.topPool(q, q, 20, cfg)),
+           ("RM3 feedback", _.topDocsForRm3(toks, 10)))) {
+      val expected = call(backend)
+      val (got, tasks) = JobTasks(spark.sparkContext)(call(noBlocks))
+      assert(got == expected, name)
+      assert(tasks == Seq(noBlocks.stats.nDocShards), s"$name: tasks per job $tasks")
     }
+    assert(noBlocks.lastPoolPath == "dense")
   }
 
   test("headTermWand serves a head-term query from WAND only — no dense pass, bounded deviation") {
     val q = s"$headTerm learning"
     val dense = backend.topPool(q, q, 50, PipelineConfig())
     assert(backend.lastPoolPath == "dense") // default mode: reference-exact
-    val (wand, plans) = ExecutedPlans(spark)(
+    val (wand, jobs) = JobCount(spark.sparkContext)(
       backend.topPool(q, q, 50, PipelineConfig(headTermWand = true)))
     assert(backend.lastPoolPath == "wand-headterm")
-    assert(densePasses(plans, paths.chunks).isEmpty,
-      "headTermWand mode executed the dense chunk-table pass")
+    assert(jobs == 1, s"headTermWand mode ran $jobs Spark jobs: a dense pass adds one")
     assert(wand.length == dense.length)
     // deviation bound: candidate selection ignored bonuses, so at every
     // rank the served score trails the reference-exact pool by at most the
@@ -251,17 +238,16 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   test("q_wand_headterm's corpus routes the full headTermWand pool through WAND (driver scale)") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val (p, b) = graft.spark.DocIndex.backendFor(spark, dir)
+    val (_, b) = graft.spark.DocIndex.backendFor(spark, dir)
     val q = "scan merge sort window" // SparkEntryExtra.HeadQuery
     val toks = graft.analysis.Analyzer.tokenize(q).toSeq
     assert(b.dfFor(toks).values.sum > b.stats.nDocs / 2,
       "setup: the catalog head-term query must be head on the driver corpus")
-    val (pool, plans) = ExecutedPlans(spark)(
+    val (pool, jobs) = JobCount(spark.sparkContext)(
       b.topPool(q, q, 50, PipelineConfig(headTermWand = true)))
     assert(b.lastPoolPath == "wand-headterm",
       s"expected wand-headterm routing, got ${b.lastPoolPath}")
-    assert(densePasses(plans, p.chunks).isEmpty,
-      "headTermWand mode executed the dense chunk-table pass — blocks-only plan violated")
+    assert(jobs == 1, s"headTermWand mode ran $jobs Spark jobs: a dense pass adds one")
     assert(pool.nonEmpty)
     // and the catalog entry itself (exact WAND top-20, oracle-matched in
     // both dialects) serves rows on the same index

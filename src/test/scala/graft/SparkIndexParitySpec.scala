@@ -2,7 +2,6 @@ package graft
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.{JobCount, JobTasks}
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions.{asc, desc}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -148,7 +147,7 @@ class SparkIndexParitySpec extends AnyFunSuite with SparkTestSession.TempDirs {
     val k1 = corpus.get("k1").asDouble(); val b = corpus.get("b").asDouble()
     def check(p: IndexPaths, layout: String): Unit = {
       val be = new SparkBackend(spark, p)
-      try for (q <- wandQueries) {
+      for (q <- wandQueries) {
         val toks = Analyzer.tokenize(q).toIndexedSeq
         be.idfFor(toks) // the term-stats lookup job runs outside the count
         val (wand, tasks) = JobTasks(spark.sparkContext) {
@@ -161,7 +160,7 @@ class SparkIndexParitySpec extends AnyFunSuite with SparkTestSession.TempDirs {
         wand.zip(exactTop).foreach { case ((_, gs), (_, es)) =>
           assert(math.abs(gs - es) < 1e-9, s"$layout '$q' score: $gs vs $es")
         }
-      } finally be.close()
+      }
     }
     for (n <- Seq(1, 3, 8)) {
       val p = IndexPaths(tempDir(s"graft-shards$n"))
@@ -186,47 +185,6 @@ class SparkIndexParitySpec extends AnyFunSuite with SparkTestSession.TempDirs {
     assert(TableIO.readManifest(p.manifest).exists(_.contains("incremental_shards")),
       "expected the shard-grain incremental path, not a full rebuild")
     check(p, "after an incremental update")
-  }
-
-  test("close uncaches the chunk table; a later backend serves the same top-k") {
-    val copy = new java.io.File(tempDir("graft-close"))
-    FileUtils.copyDirectory(new java.io.File(paths.root), copy)
-    val p = IndexPaths(copy.getPath)
-    // the backend reads the chunk table with its fixed schema
-    def cached: Boolean =
-      spark.read.schema(SparkBackend.ChunkSchema).parquet(p.chunks).storageLevel != StorageLevel.NONE
-    val q = "machine learning algorithms"
-    val first = new SparkBackend(spark, p)
-    val search = Pipeline.searchTopK(first, q, PipelineConfig())
-    val wand = Wand.topK(spark, p, first.stats, q, 10, first.idfFor)
-    assert(cached)
-    first.close()
-    assert(!cached, "the closed backend's chunk table is still cached")
-    first.close() // idempotent
-    assert(!cached)
-    val second = new SparkBackend(spark, p)
-    try {
-      assert(cached)
-      assert(Pipeline.searchTopK(second, q, PipelineConfig()).results == search.results)
-      assert(Wand.topK(spark, p, second.stats, q, 10, second.idfFor) == wand)
-    } finally second.close()
-    assert(!cached)
-  }
-
-  test("closing one of two backends over a table keeps it cached for the other") {
-    val copy = new java.io.File(tempDir("graft-twoopen"))
-    FileUtils.copyDirectory(new java.io.File(paths.root), copy)
-    val p = IndexPaths(copy.getPath)
-    def cached: Boolean = spark.sharedState.cacheManager.lookupCachedData(
-      spark.read.schema(SparkBackend.ChunkSchema).parquet(p.chunks)
-        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
-    val first = new SparkBackend(spark, p)
-    val second = new SparkBackend(spark, p)
-    first.close()
-    first.close() // idempotent: it does not count twice
-    assert(cached, "closing one backend uncached the table under the other")
-    second.close()
-    assert(!cached, "the last close left the table cached")
   }
 
   test("WAND skips a live term's missing bucket directory") {
