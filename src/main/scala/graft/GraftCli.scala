@@ -143,7 +143,7 @@ object GraftCli {
         val stats = ResumableBuild.run(spark, pages, paths,
           graft.config.GraftConfig.toBuildConfig(cfgTree).copy(shufflePartitions =
             BuildConfig.shufflePartitionsFor(spark.sparkContext.defaultParallelism)),
-          ChunkerConfig(), ResumableBuild.ResumeConfig())
+          graft.config.GraftConfig.toChunkerConfig(cfgTree), ResumableBuild.ResumeConfig())
         ResumableBuild.writeUrlManifest(
           WebPages.generate(spark, nPages, seed).toDF(), paths)
         val secs = (System.nanoTime() - t0) / 1e9
@@ -179,7 +179,7 @@ object GraftCli {
           changedU.union(newU).union(removedU), paths,
           graft.config.GraftConfig.toBuildConfig(cfgTree).copy(shufflePartitions =
             BuildConfig.shufflePartitionsFor(spark.sparkContext.defaultParallelism)),
-          ChunkerConfig(), ResumableBuild.ResumeConfig())
+          graft.config.GraftConfig.toChunkerConfig(cfgTree), ResumableBuild.ResumeConfig())
         ResumableBuild.writeUrlManifest(crawl.toDF(), paths)
         val secs = (System.nanoTime() - t0) / 1e9
         val m = TableIO.readManifest(paths.manifest).getOrElse(Map.empty)

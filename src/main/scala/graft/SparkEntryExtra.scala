@@ -16,7 +16,8 @@ private[graft] object SparkEntryExtra {
   private val QString = QTerms.mkString(" ")
   /** Head-term query: every term matches ~78% of the synthetic docs at all
     * scales, so sum(df) > nDocs/2 by a wide margin — the regime where the
-    * dense reference pass is O(corpus) and WAND-only serving is the plan.
+    * dense reference pass is O(corpus) and WAND top-k on base BM25 is the
+    * scale plan.
     */
   private val HeadTerms = Seq("scan", "merge", "sort", "window")
   private val HeadQuery = HeadTerms.mkString(" ")
@@ -336,13 +337,12 @@ private[graft] object SparkEntryExtra {
         .orderBy(desc("score"), asc("doc_id"))
     }),
 
-    // --- head-term WAND serving (VERDICT r4 #2): a stopword-dense query
-    //     whose posting lists cover most of the corpus, served by block-max
-    //     WAND on base BM25 only — the scale mode that never runs the
-    //     dense chunk-table pass. Exact top-k (bounds only gate pruning),
-    //     so the SQL BM25 mirror is a hash-level oracle; the routing
-    //     itself (lastPoolPath == "wand-headterm", blocks-only plan) is
-    //     asserted in SparkBoundedPoolSpec over the same backend.
+    // --- head-term WAND top-k (VERDICT r4 #2): a stopword-dense query
+    //     whose posting lists cover most of the corpus, ranked by block-max
+    //     WAND on base BM25 only. Exact top-k (bounds only gate pruning),
+    //     so the SQL BM25 mirror is a hash-level oracle. A search for the
+    //     same query takes the dense pool (SparkBoundedPoolSpec checks
+    //     both over the same backend).
     "q_wand_headterm" -> ((spark: SparkSession, dir: String) => {
       import spark.implicits._
       val (paths, backend) = DocIndex.backendFor(spark, dir)

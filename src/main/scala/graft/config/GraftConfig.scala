@@ -31,11 +31,7 @@ object GraftConfig {
     "bm25" -> Map(
       "k1" -> 1.4,
       "b" -> 0.75,
-      "pool_size" -> 200L,
-      // engine-only knob (no reference analog): serve head-term queries
-      // from WAND top-k instead of the O(corpus) dense pass — bounded rank
-      // deviation, see PipelineConfig.headTermWand
-      "head_term_wand" -> false),
+      "pool_size" -> 200L),
     "prf" -> Map(
       "enabled" -> false,
       "fb_docs" -> 6L,
@@ -67,8 +63,7 @@ object GraftConfig {
     "performance" -> Map("deterministic" -> true),
     "spark" -> Map(
       "n_term_buckets" -> 32L,
-      "n_doc_shards" -> 0L, // 0 = auto-scale with corpus size
-      "shuffle_partitions" -> 32L))
+      "n_doc_shards" -> 0L)) // 0 = auto-scale with corpus size
 
   /** Deep merge (reference merge_configs, config.py:185-195). */
   def merge(base: Tree, over: Tree): Tree =
@@ -261,14 +256,12 @@ object GraftConfig {
     "div-lambda" -> Seq("diversity", "per_doc_penalty"),
     "max-per-doc" -> Seq("diversity", "max_per_doc"),
     "semantic-topn" -> Seq("rerank", "semantic", "topn"),
-    "head-term-wand" -> Seq("bm25", "head_term_wand"),
     "doc-shards" -> Seq("spark", "n_doc_shards"))
 
   private val InvertedFlags = Set("no-prox", "no-diversity")
   // "pretty" maps to no config path; listing it here only makes the parser
   // treat it as a bare flag (it must never consume the next positional)
-  private val BooleanFlags = Set("rm3", "no-prox", "no-diversity", "pretty",
-    "head-term-wand")
+  private val BooleanFlags = Set("rm3", "no-prox", "no-diversity", "pretty")
 
   def applyCli(cfg: Tree, cli: Map[String, String]): Tree =
     CliMappings.foldLeft(cfg) { case (acc, (arg, path)) =>
@@ -360,7 +353,6 @@ object GraftConfig {
     poolSize = long(cfg, "bm25", "pool_size").toInt,
     k1 = dbl(cfg, "bm25", "k1"),
     b = dbl(cfg, "bm25", "b"),
-    headTermWand = bool(cfg, "bm25", "head_term_wand"),
     proxWindow = if (bool(cfg, "bonuses", "proximity", "enabled"))
       long(cfg, "bonuses", "proximity", "window").toInt else 0,
     proxLambda = if (bool(cfg, "bonuses", "proximity", "enabled"))
@@ -403,6 +395,5 @@ object GraftConfig {
     k1 = dbl(cfg, "bm25", "k1"),
     b = dbl(cfg, "bm25", "b"),
     nTermBuckets = long(cfg, "spark", "n_term_buckets").toInt,
-    nDocShards = long(cfg, "spark", "n_doc_shards").toInt,
-    shufflePartitions = long(cfg, "spark", "shuffle_partitions").toInt)
+    nDocShards = long(cfg, "spark", "n_doc_shards").toInt)
 }

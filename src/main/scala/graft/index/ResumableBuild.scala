@@ -201,26 +201,6 @@ object ResumableBuild {
     (newUrls, changed, removed)
   }
 
-  /** Text-hash manifest per url (reference index.py:275-325): sha256 over
-    * chunk texts concatenated in deterministic (page, chunkIdx) order.
-    */
-  def urlTextHashes(chunks: Dataset[ChunkRow]): DataFrame = {
-    import chunks.sparkSession.implicits._
-    chunks.toDF()
-      .groupBy("source")
-      .agg(sha2(concat_ws("",
-        array_sort(collect_list(struct(col("page"), col("chunkIdx"), col("text"))))
-          .getField("text")), 256).as("text_sha"))
-  }
-
-  /** Changed-url detection against a prior hash manifest. */
-  def detectChangedByHash(currentHashes: DataFrame, priorHashes: DataFrame): DataFrame = {
-    currentHashes.as("c")
-      .join(priorHashes.as("p"), col("c.source") === col("p.source"), "left")
-      .filter(col("p.text_sha").isNull || col("c.text_sha") =!= col("p.text_sha"))
-      .select(col("c.source"))
-  }
-
   /** Existence check through the Hadoop FileSystem API — java.nio answers
     * false for every hdfs:// or s3a:// path, which would silently degrade
     * the incremental path to a full rebuild on exactly the cluster
@@ -257,6 +237,7 @@ object ResumableBuild {
     *    then cheaper than the full-corpus stats scan AND a majority of the
     *    exchange).
     * An update that changes no indexed chunk leaves the index as it is.
+    * `changedUrls` has a `url` column, as `detectChanged`'s frames do.
     */
   def incrementalUpdate(spark: SparkSession, pages: Dataset[PageDoc],
                         changedUrls: DataFrame, out: IndexPaths,
@@ -271,10 +252,8 @@ object ResumableBuild {
     if (cps.nonEmpty && !cps.forall(
         _.get("n_buckets").contains(resume.nInputBuckets.toString)))
       return run(spark, pages, out, build, chunker, resume)
-    val urlCol = // hash-path frames carry `source`, ts-path frames carry `url`
-      if (changedUrls.columns.contains("url")) col("url") else col("source")
     val buckets = changedUrls
-      .select(pmod(xxhash64(urlCol), lit(resume.nInputBuckets)).cast("int").as("b"))
+      .select(pmod(xxhash64(col("url")), lit(resume.nInputBuckets)).cast("int").as("b"))
       .distinct().as[Int].collect().toSeq
     // prior state BEFORE the chunk phase touches anything it reads. A crash
     // marker means the on-disk tables may be mutually inconsistent, and the

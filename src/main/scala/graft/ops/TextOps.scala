@@ -3,9 +3,9 @@ package graft.ops
 import graft.analysis.Analyzer
 import graft.index.IndexBuilder
 
-/** Training-data text operators beyond the reference's own set (prompt
-  * requirement): simhash fingerprints, hamming near-dup, rolling-hash
-  * document fingerprints. Pure Scala cores, applied via UDF/mapPartitions.
+/** Training-data text operators beyond the reference's own set: simhash
+  * fingerprints and hamming near-dup. Pure Scala cores, applied via
+  * UDF/mapPartitions.
   */
 object TextOps {
 
@@ -34,19 +34,4 @@ object TextOps {
   def simhashOfText(text: String): Long = simhash64(Analyzer.tokenize(text))
 
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  /** Rolling (polynomial) hash fingerprint of the first n tokens — cheap
-    * order-sensitive document fingerprint.
-    */
-  def rollingFingerprint(tokens: Iterable[String], n: Int = 32): Long = {
-    var h = 1125899906842597L
-    val it = tokens.iterator.take(n)
-    while (it.hasNext) {
-      val t = it.next()
-      var i = 0
-      while (i < t.length) { h = 31 * h + t.charAt(i); i += 1 }
-      h = 131 * h + 7
-    }
-    h
-  }
 }

@@ -50,24 +50,11 @@ case class PipelineConfig(
     /** force the reference-exact dense bonus pass over every chunk instead
       * of the rank-safe bounded WAND-superset pool (SURVEY §7.4); the
       * bounded path falls back to dense automatically whenever its safety
-      * bound cannot be proven, so this is a test/debug escape hatch. Both
-      * paths score with the same kernel (Bm25Stats.scoreText).
+      * bound cannot be proven, and head-term queries (sum(df) > nDocs/2)
+      * always take it, so this is a test/debug escape hatch. Both paths
+      * score with the same kernel (Bm25Stats.scoreText).
       */
-    densePoolOnly: Boolean = false,
-    /** Serve head-term queries (sum(df) > nDocs/2 — stopword-ish, where the
-      * posting lists cover most of the corpus) straight from WAND top-k
-      * instead of the reference-exact dense bonus pass over every chunk.
-      * Off by default: the dense pass IS the reference semantics. With it
-      * on, the pool candidates come from base-BM25 WAND and are then
-      * exactly re-scored with bonuses, so only the candidate SELECTION can
-      * deviate: an excluded chunk out-ranks a pool member by at most the
-      * corpus-global additive bonus ceiling (SparkBackend.maxBonus — ≤
-      * proxλ + ngramλ + maxStaticBonus (+2.0 for fuzzy-active queries));
-      * the rank deviation is bounded by that same quantity relative to the
-      * base-score gaps. At 10^12 chunks this turns a per-query full-corpus
-      * job into a blocks-table-only read.
-      */
-    headTermWand: Boolean = false)
+    densePoolOnly: Boolean = false)
 
 /** Abstraction over where the heavy scans run. The distributed engine
   * implements this with Spark jobs (per-shard top-k pool and RM3 feedback

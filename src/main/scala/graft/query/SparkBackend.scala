@@ -20,9 +20,11 @@ import graft.spark.SessionMemo
   *     its `cbucket=shard` directories and re-scores them exactly; the
   *     driver merges the shard lists, adds the query bonuses and checks the
   *     rank-safety bound (see boundedPool);
-  *  3. the dense pool (bounded fallback, head terms) is ONE Spark job with
-  *     one task per doc shard (`topChunks`): each task streams its own
-  *     `cbucket=shard` chunk files through `BlockFiles`, scores every row's
+  *  3. the dense pool, the only other pool path (`lastPoolPath`), is ONE
+  *     Spark job with one task per doc shard (`topChunks`); it serves the
+  *     bounded pool's fallback and every head-term query (sum of df >
+  *     nDocs/2). Each task streams its own `cbucket=shard` chunk files
+  *     through `BlockFiles`, scores every row's
   *     base BM25 from its own text (`Bm25Stats.scoreText`, the same kernel
   *     as the in-task re-score and `LocalBackend`, summed in query-token
   *     order), then its bonuses (reference semantics, main.py:140-167) —
@@ -125,25 +127,7 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
     */
   override def topPool(query: String, bm25Query: String, poolSize: Int,
                        cfg: PipelineConfig): IndexedSeq[(ChunkRow, Double)] = {
-    val qTokens = Analyzer.tokenize(query).toIndexedSeq
-    val bmTokens =
-      if (bm25Query == query) qTokens else Analyzer.tokenize(bm25Query).toIndexedSeq
-    val ctx = new Scoring.QueryBonusContext(query, qTokens, cfg.proxWindow,
-      cfg.proxLambda, cfg.ngramLambda)
-    // Head-term WAND mode (opt-in): a query whose posting lists cover most
-    // of the corpus gives WAND nothing to prune AND defeats the bounded
-    // pool's safety proof, so the default serves it reference-exact (dense
-    // pass over all chunks — O(corpus) per query). With headTermWand the
-    // pool candidates come from WAND top-poolSize on base BM25, and the
-    // same job's tasks fetch and exactly re-score only those rows: the
-    // blocks scan (bucket-pruned) is the only corpus-sized read, the chunk
-    // table is touched only by each shard's id-filtered fetch. Deviation
-    // bound: see PipelineConfig.headTermWand.
-    if (cfg.headTermWand && !cfg.densePoolOnly &&
-        dfFor(bmTokens.distinct).values.sum > stats.nDocs / 2) {
-      lastPoolPath = "wand-headterm"
-      return wandOnlyPool(ctx, bm25Query, poolSize)
-    }
+    val (ctx, bmTokens) = queryContext(query, bm25Query, cfg)
     if (!cfg.densePoolOnly) {
       boundedPool(ctx, query, bm25Query, bmTokens, poolSize, cfg) match {
         case Some(pool) => lastPoolPath = "bounded"; return pool
@@ -154,19 +138,16 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
     densePool(ctx, bmTokens, poolSize)
   }
 
-  /** Head-term serving pool: WAND top-poolSize candidates by base BM25,
-    * exact re-score (in the WAND tasks) + bonuses on those rows only (never
-    * a chunk-table scan). Candidate selection ignores bonuses, so vs the
-    * dense reference pool a chunk can be displaced only when its bonus
-    * advantage exceeds its base-score deficit — bounded by
-    * maxBonus(query, cfg).
+  /** The query's bonus context and its BM25 tokens (the query's own when
+    * `bm25Query` is the query).
     */
-  private def wandOnlyPool(ctx: Scoring.QueryBonusContext, bm25Query: String,
-                           poolSize: Int): IndexedSeq[(ChunkRow, Double)] = {
-    val round = Wand.round(spark, paths, stats, bm25Query, poolSize, idfFor, Some(Set.empty))
-    val byId = round.rows.map(f => f.row.chunkId -> f).toMap
-    scoreCandidates(ctx, round.merged.take(poolSize).flatMap(c => byId.get(c._1)))
-      .sorted(SparkBackend.PoolOrder)
+  private def queryContext(query: String, bm25Query: String, cfg: PipelineConfig)
+      : (Scoring.QueryBonusContext, IndexedSeq[String]) = {
+    val qTokens = Analyzer.tokenize(query).toIndexedSeq
+    val bmTokens =
+      if (bm25Query == query) qTokens else Analyzer.tokenize(bm25Query).toIndexedSeq
+    (new Scoring.QueryBonusContext(query, qTokens, cfg.proxWindow, cfg.proxLambda,
+      cfg.ngramLambda), bmTokens)
   }
 
   /** Diagnostics: which path served the last topPool call. */
@@ -329,11 +310,7 @@ final class SparkBackend(spark: SparkSession, paths: IndexPaths) extends SearchB
     */
   override def bonusedScoresFor(query: String, bm25Query: String, ids: Seq[Long],
                                 cfg: PipelineConfig): IndexedSeq[(ChunkRow, Double)] = {
-    val qTokens = Analyzer.tokenize(query).toIndexedSeq
-    val bmTokens =
-      if (bm25Query == query) qTokens else Analyzer.tokenize(bm25Query).toIndexedSeq
-    val ctx = new Scoring.QueryBonusContext(query, qTokens, cfg.proxWindow,
-      cfg.proxLambda, cfg.ngramLambda)
+    val (ctx, bmTokens) = queryContext(query, bm25Query, cfg)
     val byId = scoreCandidates(ctx, fetchRows(ids, bmTokens))
       .map(cs => cs._1.chunkId -> cs).toMap
     ids.flatMap(byId.get).toIndexedSeq

@@ -1,18 +1,36 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.config.{GraftConfig, Subprocess}
-import graft.corpus.{ChunkMeta, ChunkRow, Confidence, ResultRow, SourceRef}
+import graft.corpus.{ChunkMeta, ChunkRow, ChunkerConfig, ChunkerJob, Confidence, PageDoc,
+  ResultRow, SourceRef, WebPages}
+import graft.index.IndexPaths
 import graft.query.{PipelineConfig, SearchOutput}
 
 /** Config precedence (defaults -> yaml -> env -> cli, reference
-  * config.py:273-289) and the JSON subprocess protocol
-  * (subprocess_interface.py:82-300): request types, validation, envelopes.
+  * config.py:273-289), the engine config adapters the CLI applies, and the
+  * JSON subprocess protocol (subprocess_interface.py:82-300): request
+  * types, validation, envelopes.
   */
 class ConfigSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   test("defaults map to the reference PipelineConfig defaults") {
     assert(GraftConfig.toPipelineConfig(GraftConfig.defaults) == PipelineConfig())
+  }
+
+  test("default indexing settings map to the default ChunkerConfig") {
+    // default-config indexes keep their chunker hash and resume checkpoints
+    assert(GraftConfig.toChunkerConfig(GraftConfig.defaults) == ChunkerConfig())
+  }
+
+  test("every CLI flag and env var sets a leaf of the default tree") {
+    for ((name, path) <- GraftConfig.CliMappings.toSeq ++ GraftConfig.EnvMappings) {
+      GraftConfig.getPath(GraftConfig.defaults, path) match {
+        case null | _: Map[_, _] => fail(s"$name sets ${path.mkString(".")}, not a default leaf")
+        case _ => ()
+      }
+    }
   }
 
   test("yaml parse: nesting, scalars, comments, quotes") {
@@ -109,6 +127,24 @@ class ConfigSpec extends AnyFunSuite with SparkTestSession.TempDirs {
       Seq("query", "/idx", "--k", "3", "--rm3", "some", "query", "--config", "/c.yaml"))
     assert(rest == Seq("query", "/idx", "some", "query"))
     assert(over("k") == "3" && over("rm3") == "" && over("config") == "/c.yaml")
+  }
+
+  test("GraftCli build chunks with the config file's indexing settings (child JVM)") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val yaml = java.nio.file.Paths.get(tempDir("graft-cfg-cli"), "config.yaml")
+    java.nio.file.Files.writeString(yaml, "indexing:\n  page_split: none\n")
+    val ix = tempDir("graft-cfg-cli-index")
+    SparkTestSession.runChild("graft.GraftCli",
+      Seq("build", ix, "40", "7", "--config", yaml.toString), Map("SPARK_GRAFT_CPUS" -> "2"))
+    val pages = WebPages.generate(spark, 40, 7).map(p => PageDoc(p.url, 1, p.text, None))
+    def rows(df: DataFrame) =
+      df.select("chunkId", "source", "page", "chunkIdx", "text").collect().toSet
+    val expected = rows(ChunkerJob.chunk(pages,
+      GraftConfig.toChunkerConfig(GraftConfig.loadFull(Some(yaml.toString)))).toDF())
+    assert(expected != rows(ChunkerJob.chunk(pages, ChunkerConfig()).toDF()),
+      "setup: page_split none must change the chunks")
+    assert(rows(spark.read.parquet(IndexPaths(ix).chunks)) == expected)
   }
 
   // ------------------------------------------------------------ subprocess

@@ -14,35 +14,6 @@ class MiscParitySpec extends AnyFunSuite {
   private val misc = Goldens.load("misc_vectors.json")
   private val eps = 1e-12
 
-  test("simple_tfidf_vectors / cosine_similarity_sparse parity") {
-    misc.get("tfidf_fallback").elements().asScala.foreach { c =>
-      val texts = c.get("texts").elements().asScala.map(_.asText()).toSeq
-      val q = c.get("query").asText()
-      val (vecs, qvec) = graft.query.TfidfFallback.vectors(texts, q)
-      val expVecs = c.get("vectors").elements().asScala.toSeq
-      assert(vecs.length == expVecs.length)
-      vecs.zip(expVecs).foreach { case (got, exp) =>
-        assert(got.size == exp.size(), s"vector support for '$q'")
-        exp.fields().asScala.foreach { e =>
-          assert(math.abs(got(e.getKey) - e.getValue.asDouble()) < eps,
-            s"tfidf[${e.getKey}]")
-        }
-      }
-      c.get("query_vector").fields().asScala.foreach { e =>
-        assert(math.abs(qvec(e.getKey) - e.getValue.asDouble()) < eps, s"qvec ${e.getKey}")
-      }
-      val sims = vecs.map(graft.query.TfidfFallback.cosineSparse(_, qvec))
-      sims.zip(c.get("query_sims").elements().asScala.toSeq).foreach { case (g, e) =>
-        assert(math.abs(g - e.asDouble()) < eps, s"query sim for '$q'")
-      }
-      val pairSims = for (i <- vecs.indices; j <- (i + 1) until vecs.length)
-        yield graft.query.TfidfFallback.cosineSparse(vecs(i), vecs(j))
-      pairSims.zip(c.get("pair_sims").elements().asScala.toSeq).foreach { case (g, e) =>
-        assert(math.abs(g - e.asDouble()) < eps, "pair sim")
-      }
-    }
-  }
-
   test("find_doi_in_text parity") {
     misc.get("find_doi").elements().asScala.foreach { c =>
       assert(Analyzer.findDoiInText(c.get("text").asText()) == Goldens.optStr(c, "doi"),

@@ -10,7 +10,7 @@ import graft.query.SparkBackend.{PoolOrder, TopK}
 
 /** The pool order (score desc, then source, page, chunkIdx asc) is written
   * once, `SparkBackend.PoolOrder`, and the dense pool, RM3 feedback and the
-  * bounded and head-term pools sort by it. It must order rows as Catalyst's
+  * bounded pool sort by it. It must order rows as Catalyst's
   * `orderBy(desc, asc, asc, asc)` did, and per-shard top-k followed by the
   * driver merge must equal one full sort, ties included.
   */

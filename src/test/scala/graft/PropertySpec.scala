@@ -7,8 +7,8 @@ import graft.config.GraftConfig
 import graft.index.Codec
 
 /** Property-based robustness for the pure kernels: the YAML loader's
-  * never-crash contract, codec roundtrips, time conversions, minhash
-  * shape/determinism, citekey invariants, sparse-cosine bounds.
+  * never-crash contract, codec roundtrips, minhash shape/determinism,
+  * citekey invariants.
   * (Plain scalacheck generators sampled with fixed seeds — the
   * scalatestplus bridge isn't in the offline artifact cache.)
   */
@@ -72,17 +72,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("StreamOps micros roundtrips Timestamp at microsecond precision") {
-    samples(Gen.chooseNum(0L, 4102444800000000L)).foreach { u => // 1970..2100
-      val ts = {
-        val t = new java.sql.Timestamp(u / 1000L)
-        t.setNanos(((u % 1000000L) * 1000L).toInt)
-        t
-      }
-      assert(graft.streaming.StreamOps.micros(ts) == u)
-    }
-  }
-
   test("minhash: 64-perm signatures, deterministic, permutation-bounded") {
     val hs = Gen.nonEmptyListOf(Gen.chooseNum(0L, (1L << 31) - 1)).map(_.toArray)
     samples(hs).foreach { h =>
@@ -105,18 +94,6 @@ class PropertySpec extends AnyFunSuite {
     samples(sources, 150).foreach { srcs =>
       val keys = graft.corpus.Biblio.assignCitekeys(srcs).values.toSeq
       assert(keys.distinct.length == keys.length, s"collision in $keys")
-    }
-  }
-
-  test("sparse tf-idf cosine is bounded, symmetric, and 1.0 on self") {
-    val vec = Gen.mapOf(Gen.zip(Gen.identifier, Gen.chooseNum(0.0, 10.0)))
-    samples(Gen.zip(vec, vec)).foreach { case (a, b) =>
-      val c = graft.query.TfidfFallback.cosineSparse(a, b)
-      assert(c >= -1e-9 && c <= 1.0 + 1e-9) // non-negative components
-      assert(math.abs(c - graft.query.TfidfFallback.cosineSparse(b, a)) < 1e-12)
-    }
-    samples(vec).filter(_.values.exists(_ > 0)).foreach { a =>
-      assert(math.abs(graft.query.TfidfFallback.cosineSparse(a, a) - 1.0) < 1e-9)
     }
   }
 }

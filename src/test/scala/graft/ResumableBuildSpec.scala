@@ -479,21 +479,23 @@ class ResumableBuildSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   test("incremental update reprocesses only changed urls' buckets") {
     val dir = tempDir("graft-incr")
     val out = IndexPaths(dir)
-    ResumableBuild.run(spark, pagesA, out, build, chunker, resume)
-    val priorHashes = ResumableBuild.urlTextHashes(
-      spark.read.parquet(out.chunks).as[graft.corpus.ChunkRow])
+    val crawlA = WebPages.generate(spark, 150, seed = 42, partitions = 4)
+    ResumableBuild.run(spark, crawlA.map(p => PageDoc(p.url, 1, p.text, None)),
+      out, build, chunker, resume)
+    ResumableBuild.writeUrlManifest(crawlA.toDF(), out)
 
-    // corpus B: 10 pages get new content
-    val pagesB = pagesA.map { p =>
+    // crawl B: 10 pages re-crawled with a newer warc_ts and new content
+    val crawlB = crawlA.map { p =>
       if (p.url.hashCode % 15 == 0)
-        p.copy(text = p.text + " freshly recrawled marker content appears here")
+        p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 86400000L),
+          text = p.text + " freshly recrawled marker content appears here")
       else p
     }
-    val currentHashes = ResumableBuild.urlTextHashes(
-      ChunkerJob.chunk(pagesB, chunker))
-    val changed = ResumableBuild.detectChangedByHash(currentHashes, priorHashes)
+    val (_, changed, _) = ResumableBuild.detectChanged(spark, crawlB.toDF(),
+      spark.read.parquet(ResumableBuild.urlManifestPath(out)))
     val nChanged = changed.count()
     assert(nChanged > 0 && nChanged < 150, s"changed=$nChanged")
+    val pagesB = crawlB.map(p => PageDoc(p.url, 1, p.text, None))
 
     val before = TableIO.readCheckpoints(out.checkpoints).size
     ResumableBuild.incrementalUpdate(spark, pagesB, changed, out, build, chunker, resume)

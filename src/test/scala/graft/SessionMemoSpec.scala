@@ -69,38 +69,15 @@ class SessionMemoSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     }
   }
 
-  /** Runs `main` in a child JVM and returns its output once it exited 0.
-    * The child may stop its own SparkContext or exit, which the suite's
-    * shared session must not do; it gets the test classpath and the module
-    * opens, and a small heap instead of the suite's pre-touched one.
-    */
-  private def runChild(main: String): String = {
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toList
-    val addOpens = jvmArgs.filter(_.startsWith("--add-opens=")) ++
-      jvmArgs.sliding(2).collect { case List("--add-opens", v) => s"--add-opens=$v" }
-    assert(addOpens.nonEmpty, s"no --add-opens among $jvmArgs")
-    val log = Files.createTempFile("graft-sessionmemo-child", ".log").toFile
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++
-      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), main)
-    val child = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log).start()
-    val done = child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
-    if (!done) child.destroyForcibly()
-    val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
-    log.delete()
-    assert(done && child.exitValue() == 0, s"child failed:\n$out")
-    out
-  }
-
   test("a stopped session leaves the registry (child JVM)") {
-    val out = runChild("graft.SessionMemoChild")
+    val out = SparkTestSession.runChild("graft.SessionMemoChild")
     assert(out.contains("first session held: false") && out.contains("second session held: true"), out)
     assert(out.contains("first doc index dir exists: false"), out)
     assert(out.contains("second context's broadcast is fresh and readable: true"), out)
   }
 
   test("a JVM that exits without stopping its session deletes its doc index (child JVM)") {
-    val out = runChild("graft.SessionMemoExitChild")
+    val out = SparkTestSession.runChild("graft.SessionMemoExitChild")
     val root = "doc index dir: (.+)".r.findFirstMatchIn(out).map(_.group(1).trim)
       .getOrElse(fail(s"no doc index dir reported:\n$out"))
     assert(Paths.get(root).getFileName.toString.startsWith("graft-docindex"), root)

@@ -186,6 +186,20 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
         chunks(i).meta.title, cfg.proxWindow, cfg.proxLambda, cfg.ngramLambda))
     }.sortBy(-_._2).take(20)
     assert(pool.map(p => (p._1.chunkId, p._2)) == expected)
+
+    // the catalog's head-term query takes the same path on its driver
+    // corpus, while q_wand_headterm ranks it with WAND top-k
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$dir/documents.parquet").exists())
+    val (_, b) = graft.spark.DocIndex.backendFor(spark, dir)
+    val hq = "scan merge sort window" // SparkEntryExtra.HeadQuery
+    assert(b.dfFor(Analyzer.tokenize(hq).toSeq).values.sum > b.stats.nDocs / 2,
+      "setup: the catalog head-term query must be head on the driver corpus")
+    val (hpool, hjobs) = JobCount(spark.sparkContext)(b.topPool(hq, hq, 50, PipelineConfig()))
+    assert(b.lastPoolPath == "dense", s"expected the dense pool, got ${b.lastPoolPath}")
+    assert(hjobs == 1, s"the dense pool ran $hjobs Spark jobs")
+    assert(hpool.nonEmpty)
+    assert(SparkEntry.queries("q_wand_headterm")(spark, dir).collect().length == 20)
   }
 
   test("dense pool and RM3 feedback each run one Spark job and read no posting block") {
@@ -206,53 +220,6 @@ class SparkBoundedPoolSpec extends AnyFunSuite with SparkTestSession.TempDirs {
       assert(tasks == Seq(noBlocks.stats.nDocShards), s"$name: tasks per job $tasks")
     }
     assert(noBlocks.lastPoolPath == "dense")
-  }
-
-  test("headTermWand serves a head-term query from WAND only — no dense pass, bounded deviation") {
-    val q = s"$headTerm learning"
-    val dense = backend.topPool(q, q, 50, PipelineConfig())
-    assert(backend.lastPoolPath == "dense") // default mode: reference-exact
-    val (wand, jobs) = JobCount(spark.sparkContext)(
-      backend.topPool(q, q, 50, PipelineConfig(headTermWand = true)))
-    assert(backend.lastPoolPath == "wand-headterm")
-    assert(jobs == 1, s"headTermWand mode ran $jobs Spark jobs: a dense pass adds one")
-    assert(wand.length == dense.length)
-    // deviation bound: candidate selection ignored bonuses, so at every
-    // rank the served score trails the reference-exact pool by at most the
-    // additive bonus ceiling (re-scoring itself is exact)
-    val bMax = 0.2 + 0.1 + backend.stats.maxStaticBonus +
-      (if (q.length >= 20) 2.0 else 0.0)
-    wand.zip(dense).zipWithIndex.foreach { case (((_, ws), (_, ds)), i) =>
-      assert(ds - ws <= bMax + 1e-9,
-        s"rank $i: wand score $ws trails dense $ds beyond the $bMax bound")
-    }
-    // a non-head-term query is untouched by the flag (same path, same pool)
-    val normal = backend.topPool(queries.head, queries.head, 20,
-      PipelineConfig(headTermWand = true))
-    val normalDefault = backend.topPool(queries.head, queries.head, 20,
-      PipelineConfig())
-    assert(normal.map(p => (p._1.chunkId, p._2)) ==
-      normalDefault.map(p => (p._1.chunkId, p._2)))
-  }
-
-  test("q_wand_headterm's corpus routes the full headTermWand pool through WAND (driver scale)") {
-    val dir = "/root/testdata/sf0.001"
-    assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val (_, b) = graft.spark.DocIndex.backendFor(spark, dir)
-    val q = "scan merge sort window" // SparkEntryExtra.HeadQuery
-    val toks = graft.analysis.Analyzer.tokenize(q).toSeq
-    assert(b.dfFor(toks).values.sum > b.stats.nDocs / 2,
-      "setup: the catalog head-term query must be head on the driver corpus")
-    val (pool, jobs) = JobCount(spark.sparkContext)(
-      b.topPool(q, q, 50, PipelineConfig(headTermWand = true)))
-    assert(b.lastPoolPath == "wand-headterm",
-      s"expected wand-headterm routing, got ${b.lastPoolPath}")
-    assert(jobs == 1, s"headTermWand mode ran $jobs Spark jobs: a dense pass adds one")
-    assert(pool.nonEmpty)
-    // and the catalog entry itself (exact WAND top-20, oracle-matched in
-    // both dialects) serves rows on the same index
-    val rows = SparkEntry.queries("q_wand_headterm")(spark, dir).collect()
-    assert(rows.length == 20)
   }
 
   test("chunk-bucketed index (pruned candidate fetch) returns identical pools") {
